@@ -6,13 +6,13 @@ Every constant that mirrors reference behavior carries its source citation
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 # --- recognition gates -----------------------------------------------------
 # reference: services/gateway/src/platform/config/index.ts:26-27 (defaults
 # 0.7 high / 0.6 low); docker-compose.yml:160-161 keeps gateway at 0.7/0.6.
-CONFIDENCE_THRESHOLD_HIGH = 0.7
+# Only the low gate decides anything in the batch job (the cascade stops
+# at the first attempt that clears it).
 CONFIDENCE_THRESHOLD_LOW = 0.6
 
 # --- ingest validation -----------------------------------------------------
@@ -62,10 +62,7 @@ ARROW_MAX_RECORDS_PER_BATCH = 8192
 ARROW_MAX_BYTES_PER_BATCH = 32 * 1024 * 1024
 
 # --- scale knobs ------------------------------------------------------------
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# salt buckets for decode-cost balancing of media-heavy partitions
-COST_SALT_BUCKETS = 32
-# target decode bytes per task for the media stage
+# target blob bytes per task for the Arrow fallback's media repartition
 TARGET_BYTES_PER_TASK = 64 * 1024 * 1024
 
 
@@ -74,7 +71,6 @@ class ExtractConfig:
     """Runtime config for the extraction pipeline."""
 
     confidence_low: float = CONFIDENCE_THRESHOLD_LOW
-    confidence_high: float = CONFIDENCE_THRESHOLD_HIGH
     accepted_qr_formats: tuple[str, ...] | None = None  # None → accept all
     # binarization profile (AlignmentConfig.aggressive, models/config.py:11-16)
     aggressive: bool = False
@@ -87,10 +83,7 @@ class ExtractConfig:
     # per-image soft deadline (Q9): reference bounds every engine call at
     # 30 s (config/index.ts:24, asyncio.wait_for at aligner.py:173-180)
     kernel_timeout_s: float = KERNEL_TIMEOUT_S
-    salt_buckets: int = COST_SALT_BUCKETS
     run_id: str = "run-0"
-    # checkpoint table path (parquet dir locally, Iceberg table on cluster)
-    checkpoint_path: str | None = None
     # read blob bytes directly in python workers from (file, row_group)
     # splits (bytes never enter the JVM); falls back to the Arrow path
     # when the media frame is not a plain parquet scan

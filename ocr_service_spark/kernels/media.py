@@ -13,7 +13,7 @@ container. The container-boundary is explicit:
   ``ocr_service_spark.datagen`` — carry their ground-truth recognition
   payload; the ``StubRecognizer`` "infers" it after the *real* numpy
   preprocessing chain runs. This keeps the Spark-side plumbing (schemas,
-  batching, cascade masking, skew salting) real and benchmarkable.
+  batching, cascade masking, cost-balanced bins) real and benchmarkable.
 - real jpeg/png/webp bytes route through ``decode_real_image`` and the
   ``TesseractAdapter`` / ``PaddleAdapter`` / ``real_qr_decode`` adapters
   (executor-level singletons, imported lazily). When the libraries are
@@ -710,7 +710,18 @@ def extract_media_span(
 
     bgr = None  # 3-channel frame for real color sources (LAB CLAHE path)
     if blob.startswith(SIMG_MAGIC):
-        meta, img = decode_simg(blob)
+        # a blob past the magic-byte gate can still be malformed (no
+        # header newline, non-JSON header, truncated pixels): fail the
+        # span, not the task that holds it
+        try:
+            meta, img = decode_simg(blob)
+        except (ValueError, KeyError, TypeError) as exc:
+            return {
+                "status": "failed",
+                "error": f"SIMG decode failed: {exc}",
+                "kind": "media_text",
+                "text": None,
+            }
         recognizer = recognizer or StubRecognizer()
     else:
         # real jpeg/png/webp bytes: decode + real engine adapters (both

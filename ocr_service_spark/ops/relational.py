@@ -1855,9 +1855,9 @@ EXTRA_ORACLES["touch_attribution"] = _ORACLE_ATTR
 # --- shuffle-key skew diagnostic ----------------------------------------------
 # THE pre-flight check for every groupBy/join key at scale: how skewed
 # are the key groups? A max/avg ratio in the hundreds means a straggler
-# task (and the salting/AQE-skew-join treatment the extraction pipeline
-# already applies to decode costs — pipeline/salting.py); ~1 means the
-# key shuffles clean. One map-side-combined count per key column, then
+# task (and the cost-balanced binning/AQE-skew-join treatment the
+# extraction pipeline already applies to decode costs —
+# pipeline/extract.py _lpt_pack); ~1 means the key shuffles clean. One map-side-combined count per key column, then
 # statistics-sized distribution math — the report costs one scan per
 # audited table regardless of corpus size. All outputs integer-exact:
 # discrete percentiles (percentile_disc, the media_size_stats

@@ -6,11 +6,12 @@ the whole gateway→aligner→tesseract/paddle→Postgres dance becomes
     read → sort spans in-row → posexplode → (textual | media) branches
          → union → groupBy(doc_id) ordered reassembly → write
 
-with exactly two shuffles at any scale:
-  1. media blob join on media_ref — the blob side's explicit cost-sized
-     hash repartition doubles as the skew salt (see _media_branch), so
-     blob bytes cross the wire once, not twice
-  2. final reassembly groupBy(doc_id)
+Blob bytes never shuffle. A file-backed media table is read directly by
+the python workers from parquet row-range atoms, LPT-packed by estimated
+decode cost into one bin per task; any other media frame takes the Arrow
+fallback on its own scan (see _media_branch). Only the narrow extraction
+result (media_ref, kind, text) joins the spans, and the final
+groupBy(doc_id) is the one document-sized shuffle.
 
 Span order is computed *inside the document row* (sort_array + posexplode)
 — no window, no extra shuffle, and the output is independent of partition
@@ -26,12 +27,11 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..config import ExtractConfig
+from ..config import TARGET_BYTES_PER_TASK, ExtractConfig
 from ..kernels.html import strip_boilerplate
 from ..kernels.media import extract_media_span
 from ..kernels.pdf import reconstruct_reading_order
 from ..kernels.text import normalize_text
-from .salting import cost_partition_count
 
 # per-span branch-result schema (both branches union into this)
 _BRANCH_COLS = ["doc_id", "order", "kind", "text", "media_ref"]
@@ -158,7 +158,62 @@ def _append_detail(details: dict, res: dict, ms: float, attempt: int) -> None:
     details["attempt_number"].append(attempt)
 
 
-def _make_media_fn(cfg: ExtractConfig):
+def _arrow_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+    """Blob source of the Arrow fallback: rows arrive as (media_ref,
+    content) batches through the JVM."""
+    for pdf in batches:
+        yield pdf["media_ref"], pdf["content"]
+
+
+def _split_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+    """Blob source of the direct read: rows are LPT bins of parquet
+    (path, row_group, row_lo, row_hi) atoms, and the python worker reads
+    the blob bytes itself (pyarrow C++, GIL-released) so they never pass
+    through the JVM heap. With the Arrow-transfer path, 2 GiB of blobs
+    allocated through the JVM caused ~300 s of summed GC in one stage at
+    32 tasks; direct reads eliminate that entirely. At cluster scale the
+    same code reads object-store URIs (pyarrow/fsspec) — the standard
+    layout for binary-heavy inference pipelines."""
+    import pyarrow.parquet as pq
+
+    for pdf in batches:
+        work = [
+            (p, int(rg), int(lo), int(hi))
+            for paths, rgs, los, his in zip(
+                pdf["paths"], pdf["row_groups"], pdf["row_los"], pdf["row_his"]
+            )
+            for p, rg, lo, hi in zip(paths, rgs, los, his)
+        ]
+        for path, rg, row_lo, row_hi in work:
+            # stream the row group in bounded batches instead of
+            # materializing it whole: datagen writes 16-row groups,
+            # but an externally-written table with default-sized row
+            # groups would otherwise pull hundreds of MB of blobs
+            # into the python worker at once (the Arrow path is
+            # capped at 32 MiB/batch; 16 rows × the 10 MiB ingest
+            # gate bounds this path similarly). [row_lo, row_hi)
+            # selects this bin's packing atom within the group
+            # (_atomize_splits); rows outside it are skipped.
+            cursor = 0
+            for tbl in pq.ParquetFile(path).iter_batches(
+                batch_size=16, row_groups=[rg], columns=["media_ref", "content"]
+            ):
+                b_lo = max(row_lo - cursor, 0)
+                b_hi = min(row_hi - cursor, tbl.num_rows)
+                cursor += tbl.num_rows
+                if b_lo >= b_hi:
+                    if cursor >= row_hi:
+                        break
+                    continue
+                tbl = tbl.slice(b_lo, b_hi - b_lo)
+                yield tbl.column("media_ref").to_pylist(), tbl.column("content").to_pylist()
+
+
+def _make_media_fn(cfg: ExtractConfig, blob_batches):
+    """mapInPandas function: extract every blob that ``blob_batches``
+    (_arrow_blobs or _split_blobs) yields as (media_refs, blobs) from the
+    task's input batches. Emits one span row per blob per batch, then one
+    metrics sideband row for the partition."""
     conf_low = cfg.confidence_low
     accepted = cfg.accepted_qr_formats
     aggressive = cfg.aggressive
@@ -175,10 +230,10 @@ def _make_media_fn(cfg: ExtractConfig):
         n_blobs = 0
         ocr_chars = 0
         kernel_ms: list[float] = []
-        for pdf in batches:
+        for refs, blobs in blob_batches(batches):
             texts, kinds = [], []
             details = {k: [] for k in _DETAIL_KEYS}
-            for blob in pdf["content"]:
+            for blob in blobs:
                 t0 = time.perf_counter()
                 res = extract_media_span(
                     bytes(blob) if blob is not None else None,
@@ -195,10 +250,10 @@ def _make_media_fn(cfg: ExtractConfig):
                 texts.append(res.get("text"))
                 _append_detail(details, res, ms, attempt)
                 ocr_chars += len(res.get("text") or "")
-            n_blobs += len(pdf)
+            n_blobs += len(refs)
             yield pd.DataFrame(
                 {
-                    "media_ref": pdf["media_ref"],
+                    "media_ref": refs,
                     "kind": kinds,
                     "text": texts,
                     "row_type": "span",
@@ -215,120 +270,6 @@ def _make_media_fn(cfg: ExtractConfig):
         # batch analog of the reference event stream (events/map.ts:16-43);
         # kernel_ms_sum is the partition's total model/kernel wall, the
         # number the LPT cost packer balances (straggler evidence)
-        ms = sorted(kernel_ms)
-        yield pd.DataFrame(
-            {
-                "media_ref": [None],
-                "kind": [None],
-                "text": [None],
-                "row_type": ["metrics"],
-                "part_id": [part_id],
-                "n_blobs": [n_blobs],
-                "ocr_chars": [ocr_chars],
-                "kernel_ms_p50": [ms[len(ms) // 2] if ms else None],
-                "kernel_ms_max": [ms[-1] if ms else None],
-                "kernel_ms_sum": [round(sum(ms), 3) if ms else None],
-                **{k: [None] for k in _DETAIL_KEYS},
-            }
-        )
-
-    return media_fn
-
-
-def _make_direct_media_fn(cfg: ExtractConfig):
-    """Like _make_media_fn, but rows are (path, row_group) parquet splits:
-    the python worker reads blob bytes itself (pyarrow C++, GIL-released)
-    so they never pass through the JVM heap. With the Arrow-transfer path,
-    2 GiB of blobs allocated through the JVM caused ~300 s of summed GC in
-    one stage at 32 tasks; direct reads eliminate that entirely. At
-    cluster scale the same code reads object-store URIs (pyarrow/fsspec) —
-    the standard layout for binary-heavy inference pipelines."""
-    conf_low = cfg.confidence_low
-    accepted = cfg.accepted_qr_formats
-    aggressive = cfg.aggressive
-    timeout_s = cfg.kernel_timeout_s
-    warp_interp = cfg.warp_interp
-    alignment_mode = cfg.alignment_mode
-
-    def media_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx else -1
-        attempt = (ctx.attemptNumber() + 1) if ctx else 1
-        n_blobs = 0
-        ocr_chars = 0
-        kernel_ms: list[float] = []
-        for pdf in batches:
-            work = [
-                (p, int(rg), int(lo), int(hi))
-                for paths, rgs, los, his in zip(
-                    pdf["paths"], pdf["row_groups"], pdf["row_los"], pdf["row_his"]
-                )
-                for p, rg, lo, hi in zip(paths, rgs, los, his)
-            ]
-            for path, rg, row_lo, row_hi in work:
-                # stream the row group in bounded batches instead of
-                # materializing it whole: datagen writes 16-row groups,
-                # but an externally-written table with default-sized row
-                # groups would otherwise pull hundreds of MB of blobs
-                # into the python worker at once (the Arrow path is
-                # capped at 32 MiB/batch; 16 rows × the 10 MiB ingest
-                # gate bounds this path similarly). [row_lo, row_hi)
-                # selects this bin's packing atom within the group
-                # (_atomize_splits); rows outside it are skipped.
-                cursor = 0
-                for tbl in pq.ParquetFile(path).iter_batches(
-                    batch_size=16, row_groups=[rg], columns=["media_ref", "content"]
-                ):
-                    b_lo = max(row_lo - cursor, 0)
-                    b_hi = min(row_hi - cursor, tbl.num_rows)
-                    cursor += tbl.num_rows
-                    if b_lo >= b_hi:
-                        if cursor >= row_hi:
-                            break
-                        continue
-                    tbl = tbl.slice(b_lo, b_hi - b_lo)
-                    refs = tbl.column("media_ref").to_pylist()
-                    blobs = tbl.column("content").to_pylist()
-                    texts, kinds = [], []
-                    details = {k: [] for k in _DETAIL_KEYS}
-                    for blob in blobs:
-                        t0 = time.perf_counter()
-                        res = extract_media_span(
-                            bytes(blob) if blob is not None else None,
-                            conf_low,
-                            accepted,
-                            aggressive=aggressive,
-                            timeout_s=timeout_s,
-                            warp_interp=warp_interp,
-                            alignment_mode=alignment_mode,
-                        )
-                        ms = (time.perf_counter() - t0) * 1000.0
-                        kernel_ms.append(ms)
-                        kinds.append(
-                            res["kind"] if res["status"] == "completed" else "media_text"
-                        )
-                        texts.append(res.get("text"))
-                        _append_detail(details, res, ms, attempt)
-                        ocr_chars += len(res.get("text") or "")
-                    n_blobs += len(refs)
-                    yield pd.DataFrame(
-                        {
-                            "media_ref": refs,
-                            "kind": kinds,
-                            "text": texts,
-                            "row_type": "span",
-                            "part_id": part_id,
-                            "n_blobs": None,
-                            "ocr_chars": None,
-                            "kernel_ms_p50": None,
-                            "kernel_ms_max": None,
-                            "kernel_ms_sum": None,
-                            **details,
-                        }
-                    )
         ms = sorted(kernel_ms)
         yield pd.DataFrame(
             {
@@ -591,26 +532,41 @@ def release_persisted() -> None:
             pass
 
 
+def cost_partition_count(media: DataFrame) -> int:
+    """Partition count for the Arrow fallback's blob repartition: total
+    blob bytes over TARGET_BYTES_PER_TASK, floored at the cluster's
+    parallelism (at least 8) and capped at 4096. The sizing aggregate
+    scans only the int file_size column (pruned — blob bytes are never
+    read), so it is cheap at any scale."""
+    total = media.agg(F.sum("file_size").alias("b")).collect()[0]["b"] or 0
+    lo = max(8, media.sparkSession.sparkContext.defaultParallelism)
+    return int(min(4096, max(lo, total // TARGET_BYTES_PER_TASK + 1)))
+
+
 def _media_branch(
     spans: DataFrame, media: DataFrame, cfg: ExtractConfig
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (per-span branch rows, per-partition metrics).
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Returns (per-span branch rows, per-partition metrics, per-blob
+    recognition details).
 
-    Scale shape — blob bytes never cross the wire. Measured here: at 2 GiB
-    of blobs a join-then-extract plan was shuffle-IO-bound and got SLOWER
-    with more cores; at 100 TB it would shuffle the whole corpus. Instead:
+    Blob bytes never cross the wire. Extraction (decode → align → QR →
+    OCR cascade) runs in one mapInPandas function (_make_media_fn) fed by
+    whichever blob source the media frame allows:
 
-    1. extraction (decode → align → QR → OCR cascade) runs via mapInPandas
-       DIRECTLY on the media-table scan — per-task decode cost is bounded
-       by the scan split size (spark.sql.files.maxPartitionBytes), which
-       is the natural cost-balanced partitioning: splits are byte-sized,
-       so a media-heavy document's blobs spread across splits by
-       construction. Only when the source arrives in fewer splits than the
-       cluster has slots (single huge file) do we pay ONE narrow-to-wide
-       blob shuffle, sized by estimated decode cost (cost_partition_count)
-       and salted by hash(media_ref).
-    2. only the narrow extraction RESULT (media_ref, kind, text) joins the
-       span table — a text-sized shuffle, independent of blob bytes.
+    1. direct read — a bare parquet scan with cfg.direct_blob_read: the
+       (file, row_group) splits are cut into row-range atoms, LPT-packed
+       by estimated decode cost into bins (one bin per task), and the
+       python workers read the blob bytes themselves (_split_blobs);
+    2. Arrow fallback — in-memory, filtered or non-parquet media, or
+       direct_blob_read=False: the frame's own scan (_arrow_blobs), which
+       honors the caller's full logical plan. Only when it arrives in
+       fewer splits than the cluster has slots are the blobs
+       repartitioned by media_ref (cost_partition_count).
+
+    Only the narrow extraction RESULT (media_ref, kind, text) joins the
+    span table — a text-sized shuffle, independent of blob bytes.
+    Measured here: at 2 GiB of blobs a join-then-extract plan was
+    shuffle-IO-bound and got SLOWER with more cores.
 
     Each blob is decoded once even if referenced by many spans (the old
     join-first plan decoded per reference). Unreferenced media rows do get
@@ -663,7 +619,7 @@ def _media_branch(
             "row_los array<int>, row_his array<int>",
         )
         results = pairs.mapInPandas(
-            _make_direct_media_fn(cfg), schema=_MEDIA_RESULT_SCHEMA
+            _make_media_fn(cfg, _split_blobs), schema=_MEDIA_RESULT_SCHEMA
         )
     else:
         # generic fallback (in-memory, filtered, or non-parquet media):
@@ -676,7 +632,9 @@ def _media_branch(
             est = blobs.rdd.getNumPartitions()  # in-memory frames only
         if est < spark.sparkContext.defaultParallelism:
             blobs = blobs.repartition(cost_partition_count(media), F.col("media_ref"))
-        results = blobs.mapInPandas(_make_media_fn(cfg), schema=_MEDIA_RESULT_SCHEMA)
+        results = blobs.mapInPandas(
+            _make_media_fn(cfg, _arrow_blobs), schema=_MEDIA_RESULT_SCHEMA
+        )
     # persist the NARROW results so the metrics action does not re-run OCR
     # (text-sized cache; blob bytes are not retained). Registered so
     # long-lived sessions (bench.py runs many queries) can release the

@@ -18,8 +18,24 @@ from .config import ARROW_MAX_BYTES_PER_BATCH, ARROW_MAX_RECORDS_PER_BATCH
 # spark-submit command line (tools/bench_scaling.py, tools/submit_job.py
 # docs — REQUIRED there because spark-submit starts the JVM before any
 # builder runs, silently ignoring these keys set via .config()).
-DRIVER_MEMORY_DEFAULT = "32g"
 JAVA_OPTS_DEFAULT = "-XX:+UseParallelGC -XX:ParallelGCThreads=8"
+
+
+def _mem_total_bytes() -> int:
+    # physical RAM: /proc/meminfo MemTotal on Linux
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def _fitted_driver_memory() -> str:
+    """40% of physical RAM in whole GiB (at least 1g, at most 32g).
+    ParallelGC grows the heap lazily toward -Xmx, so a heap sized past
+    what the machine holds gets the long-lived local-mode JVM (which
+    also hosts every executor) OOM-killed instead of collected; the rest
+    of RAM is for the python workers."""
+    return f"{min(32, max(1, int(_mem_total_bytes() * 0.4) >> 30))}g"
+
+
+DRIVER_MEMORY_DEFAULT = _fitted_driver_memory()
 
 
 def driver_memory() -> str:
@@ -63,13 +79,13 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     _tune_worker_env()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # local mode: ~cores, not the 200 default
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
-        shuffle_partitions = 32 if n == "*" else int(n)
+        shuffle_partitions = os.cpu_count() if n == "*" else int(n)
 
     builder = (
         SparkSession.builder.master(master)

@@ -159,6 +159,35 @@ def test_extract_media_invalid_blob_failed_status():
     assert res["status"] == "failed" and res["text"] is None
 
 
+def _truncated_pixels():
+    return _blob()[:-10]
+
+
+def _non_json_header():
+    return b"SIMG1\n{not json\n" + bytes(64 * 48)
+
+
+def _header_without_newline():
+    return b"SIMG1\n" + b"x" * 64
+
+
+@pytest.mark.parametrize(
+    "make", [_truncated_pixels, _non_json_header, _header_without_newline]
+)
+def test_malformed_simg_yields_failed_span_not_crash(make):
+    """SIMG blobs that pass the magic-byte gate but do not decode fail
+    their span (the batch analog of markAsFailed) instead of raising
+    out of the kernel and killing the task that holds them."""
+    blob = make()
+    assert validate_media(blob) is None  # precondition: past the gate
+    with pytest.raises(ValueError):
+        decode_simg(blob)
+    res = extract_media_span(blob, 0.6, None)
+    assert res["status"] == "failed"
+    assert res["kind"] == "media_text" and res["text"] is None
+    assert res["error"].startswith("SIMG decode failed")
+
+
 def test_extract_media_classic_chain_completes():
     # neural declines or fails → classic P3-P8 chain; annotated quad
     # metadata is ignored (the chain derives geometry from pixels)

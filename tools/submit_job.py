@@ -4,8 +4,8 @@ spark-submit takes a script path (not -m), so this thin driver is the
 submitted file; the package itself ships via --py-files:
 
     python tools/make_pyfiles.py dist/ocr_service_spark.zip
-    spark-submit --master local[32] \
-        --driver-memory 32g \
+    spark-submit --master "local[$(nproc)]" \
+        --driver-memory "$(python -c 'from ocr_service_spark.session import driver_memory; print(driver_memory())')" \
         --conf 'spark.driver.extraJavaOptions=-XX:+UseParallelGC -XX:ParallelGCThreads=8' \
         --py-files dist/ocr_service_spark.zip \
         tools/submit_job.py --data-dir DIR --out-dir DIR [job args...]
