@@ -20,6 +20,8 @@ count (SURVEY.md §7 hard part (b)).
 
 from __future__ import annotations
 
+import functools
+import math
 import os
 import time
 from typing import Iterator
@@ -165,25 +167,20 @@ def _arrow_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
         yield pdf["media_ref"], pdf["content"]
 
 
-def _split_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
-    """Blob source of the direct read: rows are LPT bins of parquet
-    (path, row_group, row_lo, row_hi) atoms, and the python worker reads
-    the blob bytes itself (pyarrow C++, GIL-released) so they never pass
-    through the JVM heap. With the Arrow-transfer path, 2 GiB of blobs
-    allocated through the JVM caused ~300 s of summed GC in one stage at
-    32 tasks; direct reads eliminate that entirely. At cluster scale the
-    same code reads object-store URIs (pyarrow/fsspec) — the standard
-    layout for binary-heavy inference pipelines."""
+def _split_blobs(bins: list, batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+    """Blob source of the direct read: rows are bin ids (spark.range) into
+    ``bins``, the LPT bins of parquet (path, row_group, row_lo, row_hi)
+    atoms (_lpt_pack), and the python worker reads the blob bytes itself
+    (pyarrow C++, GIL-released) so they never pass through the JVM heap.
+    With the Arrow-transfer path, 2 GiB of blobs allocated through the JVM
+    caused ~300 s of summed GC in one stage at 32 tasks; direct reads
+    eliminate that entirely. At cluster scale the same code reads
+    object-store URIs (pyarrow/fsspec) — the standard layout for
+    binary-heavy inference pipelines."""
     import pyarrow.parquet as pq
 
     for pdf in batches:
-        work = [
-            (p, int(rg), int(lo), int(hi))
-            for paths, rgs, los, his in zip(
-                pdf["paths"], pdf["row_groups"], pdf["row_los"], pdf["row_his"]
-            )
-            for p, rg, lo, hi in zip(paths, rgs, los, his)
-        ]
+        work = [atom for i in pdf["id"] for atom in zip(*bins[i])]
         for path, rg, row_lo, row_hi in work:
             # stream the row group in bounded batches instead of
             # materializing it whole: datagen writes 16-row groups,
@@ -297,15 +294,11 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches):
 # only their RATIO matters for balancing.
 COST_MS_PER_ROW = 90.0
 COST_MS_PER_MB = 15.0
-# target estimated cost per bin: small enough that the final wave's
-# quantization error is a few percent of stage wall, large enough that
-# per-task overhead (~10 ms) stays negligible. Env-overridable so the
-# wave geometry can be tuned per deployment (more, smaller bins =
-# better LPT smoothing at high parallelism; fewer = less per-atom page
-# re-decode) without a code change.
-TARGET_COST_MS_PER_BIN = float(
-    os.environ.get("SPARK_GRAFT_BIN_TARGET_MS", "5000")
-)
+# target estimated cost per bin: bins must hold seconds of work, because
+# every Python task pays a fixed start-up cost (measured 70-95 ms on a
+# 4-core host, against ~0 for a JVM-only task); at cluster scale the
+# final wave's quantization error stays a few percent of stage wall.
+TARGET_COST_MS_PER_BIN = 5000.0
 
 
 def _split_cost_ms(rows: int, nbytes: int) -> float:
@@ -516,6 +509,17 @@ def _lpt_pack(
     return [bins[i] for i in order]
 
 
+def _bin_count(total_cost_ms: float, slots: int) -> int:
+    """Bin count for the direct read: ⌈total cost / TARGET_COST_MS_PER_BIN⌉
+    rounded UP to a slot multiple, capped at 4096. LPT makes bins
+    near-equal, so a remainder wave would idle (slots - remainder) cores
+    for a full bin length (measured at 32 slots / 8000 docs: 136 bins =
+    4.25 waves cost ~4.5 s of a 25 s ideal stage wall). A small job gets
+    one wave of ``slots`` bins, not several waves of tiny ones."""
+    raw = max(1, math.ceil(total_cost_ms / TARGET_COST_MS_PER_BIN))
+    return min(4096, -(-raw // slots) * slots)
+
+
 # frames persisted by runs in this session, released via release_persisted()
 _PERSISTED: list[DataFrame] = []
 
@@ -554,9 +558,11 @@ def _media_branch(
     whichever blob source the media frame allows:
 
     1. direct read — a bare parquet scan with cfg.direct_blob_read: the
-       (file, row_group) splits are cut into row-range atoms, LPT-packed
-       by estimated decode cost into bins (one bin per task), and the
-       python workers read the blob bytes themselves (_split_blobs);
+       (file, row_group) splits are cut into row-range atoms and
+       LPT-packed by estimated decode cost into _bin_count bins on the
+       driver; a spark.range with one id per partition runs one bin per
+       task, and the python workers read the blob bytes themselves
+       (_split_blobs);
     2. Arrow fallback — in-memory, filtered or non-parquet media, or
        direct_blob_read=False: the frame's own scan (_arrow_blobs), which
        honors the caller's full logical plan. Only when it arrives in
@@ -587,39 +593,21 @@ def _media_branch(
         # ESTIMATED COST (fixed inference cost per row + streaming cost
         # per byte — packing by bytes alone left equal-byte bins with 4×
         # different blob counts and a 4× straggler tail); blob bytes never
-        # enter the JVM. Splits are LPT-bin-packed into n bins (one row
-        # per bin, round-robin → one bin per task). n is over-provisioned
-        # 4× vs task slots so wave quantization stays ≤ ~1/4 wave.
+        # enter the JVM. Splits are LPT-bin-packed into _bin_count bins.
         total_cost = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits)
-        par = spark.sparkContext.defaultParallelism
-        raw = max(4 * par, int(total_cost // TARGET_COST_MS_PER_BIN) + 1)
-        # round the bin count UP to a slot multiple: LPT makes bins
-        # near-equal, so any remainder wave idles (slots - remainder)
-        # cores for a full bin length. Measured at 32 slots / 8000 docs:
-        # 136 bins = 4.25 waves cost ~4.5 s of a 25 s ideal stage wall
-        # (136 happens to be a multiple of 8 — the 8-core level never
-        # paid this, which masqueraded as poor 8->32 scaling)
-        n = min(4096, -(-raw // par) * par)
-        bins = _lpt_pack(splits, n)
-        # EXACTLY one bin per task: round-robin repartition(n) does NOT
-        # guarantee this (each input slice starts at a random offset, so
-        # bins collide and half the tasks come up empty — measured p50
-        # task time of 0.17 s next to a 50 s straggler). A keyed RDD with
-        # an identity partitioner is deterministic.
-        rdd = (
-            spark.sparkContext.parallelize(
-                list(enumerate(bins)), numSlices=max(1, len(bins))
-            )
-            .partitionBy(len(bins), lambda k: k)
-            .values()
+        bins = _lpt_pack(
+            splits, _bin_count(total_cost, spark.sparkContext.defaultParallelism)
         )
-        pairs = spark.createDataFrame(
-            rdd,
-            "paths array<string>, row_groups array<int>, "
-            "row_los array<int>, row_his array<int>",
-        )
-        results = pairs.mapInPandas(
-            _make_media_fn(cfg, _split_blobs), schema=_MEDIA_RESULT_SCHEMA
+        # EXACTLY one bin per task: Range puts one id per partition when
+        # numPartitions equals its length, and each task looks its bin up
+        # by id (_split_blobs). No shuffle, and no Python runs outside the
+        # kernel task. Round-robin repartition(n) does NOT guarantee this
+        # (each input slice starts at a random offset, so bins collide and
+        # half the tasks come up empty — measured p50 task time of 0.17 s
+        # next to a 50 s straggler).
+        results = spark.range(len(bins), numPartitions=len(bins)).mapInPandas(
+            _make_media_fn(cfg, functools.partial(_split_blobs, bins)),
+            schema=_MEDIA_RESULT_SCHEMA,
         )
     else:
         # generic fallback (in-memory, filtered, or non-parquet media):

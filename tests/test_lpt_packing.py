@@ -6,8 +6,12 @@ count matches the bin count retains packing freedom."""
 
 from __future__ import annotations
 
+import math
+
 from ocr_service_spark.pipeline.extract import (
+    TARGET_COST_MS_PER_BIN,
     _atomize_splits,
+    _bin_count,
     _lpt_pack,
     _split_cost_ms,
 )
@@ -88,3 +92,31 @@ def test_parse_size_bytes_and_scan_estimate():
     assert parse_size_bytes("1g") == 1 << 30
     assert parse_size_bytes("134217728") == 128 << 20
     assert parse_size_bytes("16MB") == 16 << 20  # case/suffix-insensitive
+
+
+def test_bin_count_is_one_wave_up_to_slots_times_target():
+    # a small job gets exactly one wave of `slots` bins, never several
+    # waves of tiny ones
+    for slots in (1, 4, 8, 32):
+        for cost in (0.0, 1.0, TARGET_COST_MS_PER_BIN, slots * TARGET_COST_MS_PER_BIN):
+            assert _bin_count(cost, slots) == slots
+
+
+def test_bin_count_grows_as_ceil_cost_over_target_in_slot_multiples():
+    target = TARGET_COST_MS_PER_BIN
+    assert _bin_count(4 * target + 1, 4) == 8
+    assert _bin_count(9 * target, 4) == 12
+    # the 32-slot history scale: ~108 raw bins round up to 128
+    assert _bin_count(107.5 * target, 32) == 128
+    for slots in (3, 4, 8, 32):
+        for k in range(1, 200, 7):
+            raw = math.ceil(k * 1.37)
+            n = _bin_count(k * 1.37 * target, slots)
+            # the smallest slot multiple that holds ⌈cost/target⌉ bins
+            assert n % slots == 0 and raw <= n < raw + slots
+
+
+def test_bin_count_capped_at_4096():
+    assert _bin_count(10**6 * TARGET_COST_MS_PER_BIN, 32) == 4096
+    assert _bin_count(4096 * TARGET_COST_MS_PER_BIN, 4) == 4096
+    assert _bin_count(4097 * TARGET_COST_MS_PER_BIN, 4) == 4096

@@ -1,0 +1,62 @@
+"""The direct-read media stage runs exactly one non-empty task per LPT
+bin: the bins are placed by a ``spark.range`` with one id per partition
+(no Python partitioner shuffle, no RDD scan), and the bin count is a
+slot multiple unless the table has fewer packing atoms than that."""
+
+from __future__ import annotations
+
+import os
+
+from pyspark.sql import functions as F
+
+from ocr_service_spark.config import ExtractConfig
+from ocr_service_spark.pipeline.checkpoint import run_resumable
+from ocr_service_spark.pipeline.extract import (
+    ATOMS_PER_BIN,
+    _atomize_splits,
+    _bin_count,
+    _direct_read_splits,
+    _media_branch,
+    _split_cost_ms,
+    load_inputs,
+    prepare_spans,
+    release_persisted,
+)
+
+
+def test_one_nonempty_task_per_bin(spark, dataset, tmp_path):
+    docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
+    splits = _direct_read_splits(media)
+    assert splits is not None  # precondition: the direct-read path runs
+    par = spark.sparkContext.defaultParallelism
+    total = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits)
+    n_bins = _bin_count(total, par)
+    n_atoms = len(_atomize_splits(splits, total / n_bins / ATOMS_PER_BIN))
+    expected = min(n_bins, n_atoms)
+    assert expected % par == 0 or expected == n_atoms
+
+    out_dir = str(tmp_path / "layout")
+    run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id="lay"), n_buckets=4)
+    rows = (
+        spark.read.parquet(f"{out_dir}/_metrics")
+        .filter(F.col("run_id") == "lay")
+        .select("part_id", "n_blobs")
+        .collect()
+    )
+    assert len(rows) == expected
+    assert sorted(r["part_id"] for r in rows) == list(range(expected))
+    assert all(r["n_blobs"] >= 1 for r in rows)  # no task came up empty
+    assert sum(r["n_blobs"] for r in rows) == media.count()
+
+
+def test_direct_read_plan_is_range_into_map_in_pandas(spark, dataset):
+    docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
+    _, metrics, _ = _media_branch(prepare_spans(docs), media, ExtractConfig())
+    try:
+        # the persisted results' plan is printed under InMemoryRelation
+        plan = metrics._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    finally:
+        release_persisted()
+    assert "Range (" in plan
+    assert "MapInPandas" in plan
+    assert "ExistingRDD" not in plan
