@@ -6,7 +6,7 @@ Every constant that mirrors reference behavior carries its source citation
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # --- recognition gates -----------------------------------------------------
 # reference: services/gateway/src/platform/config/index.ts:26-27 (defaults
@@ -61,10 +61,6 @@ CASCADE_ATTEMPTS = (
 ARROW_MAX_RECORDS_PER_BATCH = 8192
 ARROW_MAX_BYTES_PER_BATCH = 32 * 1024 * 1024
 
-# --- scale knobs ------------------------------------------------------------
-# target blob bytes per task for the Arrow fallback's media repartition
-TARGET_BYTES_PER_TASK = 64 * 1024 * 1024
-
 
 @dataclass(frozen=True)
 class ExtractConfig:
@@ -84,11 +80,6 @@ class ExtractConfig:
     # 30 s (config/index.ts:24, asyncio.wait_for at aligner.py:173-180)
     kernel_timeout_s: float = KERNEL_TIMEOUT_S
     run_id: str = "run-0"
-    # read blob bytes directly in python workers from (file, row_group)
-    # splits (bytes never enter the JVM); falls back to the Arrow path
-    # when the media frame is not a plain parquet scan
-    direct_blob_read: bool = True
-    attempts: tuple[tuple[str, str], ...] = field(default=CASCADE_ATTEMPTS)
 
     def __post_init__(self) -> None:
         # fail fast: a typo'd enum would otherwise silently change the

@@ -675,6 +675,12 @@ def run_cascade(
 CLASSIC_MAX_SIDE = 480  # processing-resolution cap for the P3-P8 chain
 
 
+def _failed(error: str) -> dict:
+    """The failed-span record: the span keeps its media_text kind with no
+    text, and ``error`` says why (the reference's markAsFailed)."""
+    return {"status": "failed", "error": error, "kind": "media_text", "text": None}
+
+
 def extract_media_span(
     blob: bytes | None,
     confidence_low: float,
@@ -706,7 +712,7 @@ def extract_media_span(
 
     err = validate_media(blob)
     if err is not None:
-        return {"status": "failed", "error": err, "kind": "media_text", "text": None}
+        return _failed(err)
 
     bgr = None  # 3-channel frame for real color sources (LAB CLAHE path)
     if blob.startswith(SIMG_MAGIC):
@@ -716,12 +722,7 @@ def extract_media_span(
         try:
             meta, img = decode_simg(blob)
         except (ValueError, KeyError, TypeError) as exc:
-            return {
-                "status": "failed",
-                "error": f"SIMG decode failed: {exc}",
-                "kind": "media_text",
-                "text": None,
-            }
+            return _failed(f"SIMG decode failed: {exc}")
         recognizer = recognizer or StubRecognizer()
     else:
         # real jpeg/png/webp bytes: decode + real engine adapters (both
@@ -731,12 +732,7 @@ def extract_media_span(
         try:
             decoded = decode_real_image_any(blob)
         except (ImportError, ValueError) as exc:
-            return {
-                "status": "failed",
-                "error": f"real-image decode unavailable: {exc}",
-                "kind": "media_text",
-                "text": None,
-            }
+            return _failed(f"real-image decode unavailable: {exc}")
         if decoded.ndim == 3:
             bgr = decoded
             img = colorspace.bgr_to_gray(bgr)
@@ -816,12 +812,7 @@ def extract_media_span(
             corners = imageops.mask_bbox_corners(img)
             warped = imageops.warp_perspective(img, corners, warp_interp)
     if _timed_out():
-        return {
-            "status": "failed",
-            "error": f"kernel timeout after {timeout_s:.0f}s (alignment)",
-            "kind": "media_text",
-            "text": None,
-        }
+        return _failed(f"kernel timeout after {timeout_s:.0f}s (alignment)")
     preprocessed = imageops.preprocess_for_ocr(warped, aggressive)  # P13
 
     # --- QR short-circuit (R7) ---
@@ -843,24 +834,14 @@ def extract_media_span(
 
     # --- OCR cascade (R6) ---
     if _timed_out():
-        return {
-            "status": "failed",
-            "error": f"kernel timeout after {timeout_s:.0f}s (pre-cascade)",
-            "kind": "media_text",
-            "text": None,
-        }
+        return _failed(f"kernel timeout after {timeout_s:.0f}s (pre-cascade)")
     try:
         res = run_cascade(
             meta, warped, preprocessed, confidence_low, recognizer,
             deadline=deadline,
         )
     except Exception as exc:  # all attempts raised → markAsFailed analog
-        return {
-            "status": "failed",
-            "error": str(exc),
-            "kind": "media_text",
-            "text": None,
-        }
+        return _failed(str(exc))
     return {
         "status": "completed",
         "kind": "media_text",

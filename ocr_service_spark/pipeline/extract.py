@@ -29,11 +29,12 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..config import TARGET_BYTES_PER_TASK, ExtractConfig
+from ..config import ExtractConfig
 from ..kernels.html import strip_boilerplate
 from ..kernels.media import extract_media_span
 from ..kernels.pdf import reconstruct_reading_order
 from ..kernels.text import normalize_text
+from ..ops import widen
 
 # per-span branch-result schema (both branches union into this)
 _BRANCH_COLS = ["doc_id", "order", "kind", "text", "media_ref"]
@@ -180,7 +181,7 @@ def _split_blobs(bins: list, batches: Iterator[pd.DataFrame]) -> Iterator[tuple]
     import pyarrow.parquet as pq
 
     for pdf in batches:
-        work = [atom for i in pdf["id"] for atom in zip(*bins[i])]
+        work = [atom for i in pdf["id"] for atom in bins[i]]
         for path, rg, row_lo, row_hi in work:
             # stream the row group in bounded batches instead of
             # materializing it whole: datagen writes 16-row groups,
@@ -477,11 +478,11 @@ def _atomize_splits(
 
 def _lpt_pack(
     splits: list[tuple[str, int, int, int]], n: int
-) -> list[tuple[list[str], list[int], list[int], list[int]]]:
+) -> list[list[tuple[str, int, int, int]]]:
     """Longest-processing-time-first bin packing into n bins by estimated
     cost (_split_cost_ms), over sub-row-group atoms (_atomize_splits)
     sized at ~1/ATOMS_PER_BIN of the ACTUAL expected bin cost (total/n);
-    returns per-bin (paths, row_groups, row_los, row_his)."""
+    returns each bin as a list of (path, row_group, row_lo, row_hi)."""
     import heapq
 
     total_cost = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits)
@@ -489,16 +490,11 @@ def _lpt_pack(
     atoms = _atomize_splits(splits, atom_ms)
     n = max(1, min(n, len(atoms)))
     heap = [(0.0, i) for i in range(n)]  # (bin_cost, bin_idx)
-    bins: list[tuple[list[str], list[int], list[int], list[int]]] = [
-        ([], [], [], []) for _ in range(n)
-    ]
+    bins: list[list[tuple[str, int, int, int]]] = [[] for _ in range(n)]
     packed = [0.0] * n
-    for cost, path, rg, lo, hi in sorted(atoms, key=lambda s: -s[0]):
+    for cost, *atom in sorted(atoms, key=lambda s: -s[0]):
         size, idx = heapq.heappop(heap)
-        bins[idx][0].append(path)
-        bins[idx][1].append(rg)
-        bins[idx][2].append(lo)
-        bins[idx][3].append(hi)
+        bins[idx].append(tuple(atom))
         packed[idx] = size + cost
         heapq.heappush(heap, (size + cost, idx))
     # heaviest bins first: partition index is (approximately) launch
@@ -536,17 +532,6 @@ def release_persisted() -> None:
             pass
 
 
-def cost_partition_count(media: DataFrame) -> int:
-    """Partition count for the Arrow fallback's blob repartition: total
-    blob bytes over TARGET_BYTES_PER_TASK, floored at the cluster's
-    parallelism (at least 8) and capped at 4096. The sizing aggregate
-    scans only the int file_size column (pruned — blob bytes are never
-    read), so it is cheap at any scale."""
-    total = media.agg(F.sum("file_size").alias("b")).collect()[0]["b"] or 0
-    lo = max(8, media.sparkSession.sparkContext.defaultParallelism)
-    return int(min(4096, max(lo, total // TARGET_BYTES_PER_TASK + 1)))
-
-
 def _media_branch(
     spans: DataFrame, media: DataFrame, cfg: ExtractConfig
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -557,17 +542,16 @@ def _media_branch(
     OCR cascade) runs in one mapInPandas function (_make_media_fn) fed by
     whichever blob source the media frame allows:
 
-    1. direct read — a bare parquet scan with cfg.direct_blob_read: the
+    1. direct read — a bare parquet scan (_direct_read_splits): the
        (file, row_group) splits are cut into row-range atoms and
        LPT-packed by estimated decode cost into _bin_count bins on the
        driver; a spark.range with one id per partition runs one bin per
        task, and the python workers read the blob bytes themselves
        (_split_blobs);
-    2. Arrow fallback — in-memory, filtered or non-parquet media, or
-       direct_blob_read=False: the frame's own scan (_arrow_blobs), which
-       honors the caller's full logical plan. Only when it arrives in
-       fewer splits than the cluster has slots are the blobs
-       repartitioned by media_ref (cost_partition_count).
+    2. Arrow fallback — any other frame (in-memory, filtered, joined or
+       non-parquet media): the frame's own scan (_arrow_blobs), which
+       honors the caller's full logical plan, spread over every slot by
+       ops.widen when it arrives in fewer splits than that.
 
     Only the narrow extraction RESULT (media_ref, kind, text) joins the
     span table — a text-sized shuffle, independent of blob bytes.
@@ -587,7 +571,7 @@ def _media_branch(
         "doc_id", "order", "media_ref"
     )
     spark = media.sparkSession
-    splits = _direct_read_splits(media) if cfg.direct_blob_read else None
+    splits = _direct_read_splits(media)
     if splits is not None:
         # python-direct read: distribute (file, row_group) splits by
         # ESTIMATED COST (fixed inference cost per row + streaming cost
@@ -610,17 +594,8 @@ def _media_branch(
             schema=_MEDIA_RESULT_SCHEMA,
         )
     else:
-        # generic fallback (in-memory, filtered, or non-parquet media):
-        # Arrow path, which honors the caller's full logical plan
-        from ..ops import estimated_scan_partitions
-
-        blobs = media.select("media_ref", "content")
-        est = estimated_scan_partitions(blobs)
-        if est is None:
-            est = blobs.rdd.getNumPartitions()  # in-memory frames only
-        if est < spark.sparkContext.defaultParallelism:
-            blobs = blobs.repartition(cost_partition_count(media), F.col("media_ref"))
-        results = blobs.mapInPandas(
+        # Arrow fallback: the caller's own plan, spread over every slot
+        results = widen(media.select("media_ref", "content")).mapInPandas(
             _make_media_fn(cfg, _arrow_blobs), schema=_MEDIA_RESULT_SCHEMA
         )
     # persist the NARROW results so the metrics action does not re-run OCR

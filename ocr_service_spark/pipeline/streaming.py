@@ -1,49 +1,27 @@
 """Structured Streaming execution of the extraction pipeline.
 
-The same declarative plan as batch `run_extract` — prepare_spans →
-kind-routed kernels → ordered reassembly — driven by `readStream` over
-the documents table, with the media blob table as the STATIC side of a
-stream-static join. This is the live-ingest shape of the engine: new
-interleaved documents appear as files (or Iceberg snapshots / Kafka
-batches) and extracted span rows stream out continuously.
+`extract_stream_to_files` drives the batch plan of `run_extract` —
+prepare_spans → kind-routed kernels → ordered reassembly — once per
+micro-batch of a ``readStream`` over the documents table: one pipeline
+for bounded and unbounded input. This is the live-ingest shape of the
+engine: new interleaved documents appear as files (or Iceberg snapshots /
+Kafka batches) and extracted span rows stream out continuously.
 
-Differences from batch, all forced by streaming semantics:
-- the media branch uses the Arrow join path (``direct_blob_read=False``):
-  the python-direct row-group reader plans against a fixed file listing,
-  which is the batch contract — the stream side must stay declarative;
-- reassembly (groupBy doc_id + collect_list) is a streaming aggregation;
-  documents are assumed complete within one micro-batch (the input is an
-  append-only table of finished documents, matching the reference's
-  one-job-per-complete-upload semantics — reference
-  services/gateway/src/worker/processor.ts:8-115), so the query runs in
-  ``update``/``complete`` mode without watermark loss.
+Documents are assumed complete within one micro-batch (the input is an
+append-only table of finished documents, matching the reference's
+one-job-per-complete-upload semantics — reference
+services/gateway/src/worker/processor.ts:8-115), so ordered reassembly
+needs no cross-batch state. Each micro-batch extracts only the blobs it
+references: that media frame is a semi-join, not a bare file scan, so
+the media branch takes its Arrow source.
 """
 
 from __future__ import annotations
-
-from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import ExtractConfig
 from .extract import run_extract
-
-
-def run_extract_streaming(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    media: DataFrame,
-    cfg: ExtractConfig | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Build the streaming extraction plan.
-
-    docs_stream — a streaming DataFrame with the documents schema
-    (``spark.readStream.schema(s).parquet(dir)`` or any other source);
-    media — a static blob table. Returns (output, metrics) streaming/
-    static DataFrames; callers attach a sink via ``output.writeStream``.
-    """
-    cfg = replace(cfg or ExtractConfig(), direct_blob_read=False)
-    return run_extract(spark, docs_stream, media, cfg)
 
 
 def _staged_docs_stream(
@@ -98,7 +76,7 @@ def extract_stream_to_files(
     n_buckets: int = 64,
     n_batches: int = 1,
 ) -> None:
-    """PRODUCTION streaming sink: readStream over the documents table →
+    """Streaming sink: readStream over the documents table →
     ``foreachBatch`` running the full BATCH extraction plan per
     micro-batch → bucketed parquet, idempotently.
 
@@ -106,10 +84,8 @@ def extract_stream_to_files(
     input is an append-only table of COMPLETE documents (the reference's
     one-job-per-finished-upload semantics, worker/processor.ts:8-115),
     so each micro-batch is a self-contained batch job — ordered span
-    reassembly needs no cross-batch state, the python-direct blob path
-    stays available, and nothing is ever collected to the driver (the
-    memory-sink drain in extract_stream_to_memory / ops.streaming is a
-    test-and-oracle harness only).
+    reassembly needs no cross-batch state, and nothing is ever collected
+    to the driver.
 
     Exactly-once: output partitions by (batch_id, bucket) with dynamic
     partition overwrite — a replayed micro-batch (after a crash, from
@@ -170,32 +146,3 @@ def extract_stream_to_files(
 def read_stream_output(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read the file-sink output back in the batch output shape."""
     return spark.read.parquet(f"{out_dir}/extracted").drop("batch_id", "bucket")
-
-
-def extract_stream_to_memory(
-    spark: SparkSession,
-    data_dir: str,
-    query_name: str = "extract_stream_sink",
-    cfg: ExtractConfig | None = None,
-) -> DataFrame:
-    """TEST/demo runner (memory sink is driver-resident — production
-    runs go through ``extract_stream_to_files``): stream the documents
-    table through the pipeline into a memory sink, drain synchronously,
-    and return the materialized result (one row per document, same shape
-    as batch)."""
-    docs_stream = _staged_docs_stream(spark, data_dir)
-    media = spark.read.parquet(f"{data_dir}/media.parquet")
-    output, _metrics = run_extract_streaming(spark, docs_stream, media, cfg)
-    q = (
-        output.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    result = spark.sql(f"SELECT * FROM {query_name}")
-    # materialize before the sink's table goes away
-    return spark.createDataFrame(result.collect(), result.schema)

@@ -24,7 +24,7 @@ def _bin_costs(bins, splits):
         (p, rg): _split_cost_ms(rows, b) / rows for p, rg, b, rows in splits
     }
     return [
-        sum(per_row[(p, rg)] * (hi - lo) for p, rg, lo, hi in zip(*b))
+        sum(per_row[(p, rg)] * (hi - lo) for p, rg, lo, hi in b)
         for b in bins
     ]
 
@@ -52,7 +52,7 @@ def test_lpt_balances_skewed_splits():
     costs = _bin_costs(bins, splits)
     assert len(bins) == 16
     # every row assigned exactly once
-    assert sum(hi - lo for b in bins for lo, hi in zip(b[2], b[3])) == 100 + 63 * 5
+    assert sum(hi - lo for b in bins for _, _, lo, hi in b) == 100 + 63 * 5
     # with sub-group atoms the giant split spreads: max bin within ~25%
     # of the mean (vs 4/3-OPT around one indivisible 10.5 s split before)
     assert max(costs) <= (sum(costs) / 16) * 1.25 + ATOM_COST_MS
@@ -76,7 +76,7 @@ def test_lpt_more_bins_than_atoms_collapses():
     splits = [(f"s{i}.parquet", 0, 10**6, 5) for i in range(4)]
     bins = _lpt_pack(splits, 32)
     assert len(bins) == 20
-    assert all(sum(hi - lo for lo, hi in zip(b[2], b[3])) == 1 for b in bins)
+    assert all(sum(hi - lo for _, _, lo, hi in b) == 1 for b in bins)
 
 
 def test_lpt_deterministic():

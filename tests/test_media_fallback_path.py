@@ -114,14 +114,15 @@ def test_filtered_media_frame_honors_plan(spark, dataset):
 
 
 def test_direct_and_fallback_paths_agree(spark, dataset):
-    """Same dataset through both physical paths → identical span output."""
-    import os
+    """Same dataset through both physical paths → identical span output.
+    A filter that keeps every row still makes the frame a non-bare scan,
+    so it takes the Arrow fallback."""
+    from pyspark.sql import functions as F
 
-    data_dir = os.path.dirname(dataset["documents"])
     docs = spark.read.parquet(dataset["documents"])
     media = spark.read.parquet(dataset["media"])
     direct, _ = run_extract(spark, docs, media, ExtractConfig())
     fallback, _ = run_extract(
-        spark, docs, media, ExtractConfig(direct_blob_read=False)
+        spark, docs, media.filter(F.col("media_ref").isNotNull()), ExtractConfig()
     )
     assert _collect_spans(direct) == _collect_spans(fallback)

@@ -1,7 +1,8 @@
 """The direct-read media stage runs exactly one non-empty task per LPT
 bin: the bins are placed by a ``spark.range`` with one id per partition
 (no Python partitioner shuffle, no RDD scan), and the bin count is a
-slot multiple unless the table has fewer packing atoms than that."""
+slot multiple unless the table has fewer packing atoms than that. The
+Arrow fallback spreads a one-split frame over every slot (ops.widen)."""
 
 from __future__ import annotations
 
@@ -60,3 +61,19 @@ def test_direct_read_plan_is_range_into_map_in_pandas(spark, dataset):
     assert "Range (" in plan
     assert "MapInPandas" in plan
     assert "ExistingRDD" not in plan
+
+
+def test_fallback_spreads_one_file_over_every_slot(spark, dataset):
+    docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
+    # a filter makes the frame non-bare: the Arrow fallback over one file
+    filtered = media.filter(F.col("media_ref").isNotNull())
+    assert _direct_read_splits(filtered) is None
+    _, metrics, _ = _media_branch(prepare_spans(docs), filtered, ExtractConfig())
+    try:
+        rows = metrics.collect()
+    finally:
+        release_persisted()
+    par = spark.sparkContext.defaultParallelism
+    assert len(rows) == par
+    assert sorted(r["part_id"] for r in rows) == list(range(par))
+    assert sum(r["n_blobs"] for r in rows) == media.count()
