@@ -701,7 +701,8 @@ def extract_media_span(
     analog of asyncio.wait_for + BullMQ job failure). The
     spark.task.reaper conf in session.py is the hard backstop.
 
-    Returns a dict matching SPAN_DETAIL_SCHEMA's media fields.
+    Returns a dict of the per-blob fields of extract.py's
+    _MEDIA_RESULT_SCHEMA.
     """
     import time as _time
 

@@ -211,67 +211,47 @@ def _ivf_cells_declarative(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "v", "cid")
 
 
-# per-(session, sf_dir) caches: the coarse-quantizer "model" (the K
-# centroid vectors, driver-side numpy) and the persisted cell-assignment
-# DataFrame — cells histogram + probe share one assignment scan, and
-# repeated probes pay zero extra jobs for model building.
-# Keys carry the dataset fingerprint; _cache_put evicts (and unpersists)
-# any prior entry for the same (appId, sf_dir) so a regenerated table or
-# a dataset-sweep driver (bench_scaling, shuffle_audit) can never pin an
-# unbounded chain of stale O(NQ·n) persisted frames in executor storage.
-_IVF_MODEL_CACHE: dict[tuple, tuple] = {}
-_CELLS_CACHE: dict[tuple, DataFrame] = {}
-_PQ_MODEL_CACHE: dict[tuple, tuple] = {}
-_PQ_RECALL_CACHE: dict[tuple, DataFrame] = {}
-_RECALL_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-_ALL_CACHES = (
-    _IVF_MODEL_CACHE,
-    _CELLS_CACHE,
-    _PQ_MODEL_CACHE,
-    _PQ_RECALL_CACHE,
-    _RECALL_PAIRS_CACHE,
-)
+# Catalog state shared across queries of one session: the IVF and PQ
+# models (driver-side numpy), the IVF cell assignment, and the persisted
+# recall/PQ panel frames. One entry per (appId, sf_dir, name), stamped
+# with the embeddings file's fingerprint: a regenerated table rebuilds the
+# entry and unpersists the stale frame, so a dataset-sweep driver
+# (shuffle_audit) never pins a chain of dead persisted frames.
+_SHARED: dict[tuple, tuple] = {}
 
 
-def _cache_put(cache: dict, key: tuple, value) -> None:
-    """Insert under `key`, evicting every entry with the same
-    (appId, sf_dir) prefix but a different fingerprint; evicted
-    DataFrames are unpersisted (blocking=False)."""
-    for old in [k for k in cache if k[:2] == key[:2] and k != key]:
-        stale = cache.pop(old)
-        if isinstance(stale, DataFrame):
-            try:
-                stale.unpersist()
-            except Exception:  # session already stopped — nothing pinned
-                pass
-    cache[key] = value
+def _release(obj) -> None:
+    if isinstance(obj, DataFrame):
+        try:
+            obj.unpersist()
+        except Exception:  # session already stopped — nothing pinned
+            pass
 
 
-def clear_similarity_caches() -> None:
-    """Explicit hook for dataset-sweep drivers: unpersist and drop every
-    cached model/frame across all (appId, sf_dir) keys."""
-    for cache in _ALL_CACHES:
-        for key in list(cache):
-            stale = cache.pop(key)
-            if isinstance(stale, DataFrame):
-                try:
-                    stale.unpersist()
-                except Exception:
-                    pass
-
-
-def _ivf_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
-    """Cache key carrying the embeddings file's content fingerprint
-    (size+mtime, same rule as streaming's stage_fingerprint), so a
-    regenerated table at the same path never serves stale centroids."""
+def _shared(spark: SparkSession, sf_dir: str, name: str, build):
+    """``build()``'s result, built once per (session, sf_dir, name) and
+    rebuilt when the embeddings file's size or mtime changes
+    (stage_fingerprint)."""
     from . import table_path
     from .streaming import stage_fingerprint
 
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        stage_fingerprint(table_path(sf_dir, "embeddings")),
-    )
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    fp = stage_fingerprint(table_path(sf_dir, "embeddings"))
+    hit = _SHARED.get(key)
+    if hit is not None:
+        if hit[0] == fp:
+            return hit[1]
+        _release(hit[1])
+    obj = build()
+    _SHARED[key] = (fp, obj)
+    return obj
+
+
+def clear_similarity_caches() -> None:
+    """Explicit hook for dataset-sweep drivers: drop every shared entry
+    and unpersist its frame."""
+    while _SHARED:
+        _release(_SHARED.popitem()[1][1])
 
 
 def _ivf_model(spark: SparkSession, sf_dir: str):
@@ -285,9 +265,7 @@ def _ivf_model(spark: SparkSession, sf_dir: str):
 
     from . import table_path
 
-    key = _ivf_cache_key(spark, sf_dir)
-    m = _IVF_MODEL_CACHE.get(key)
-    if m is None:
+    def build():
         path = table_path(sf_dir, "embeddings")
         k = _ivf_k(pq.ParquetFile(path).metadata.num_rows)
         tbl = pq.read_table(
@@ -298,9 +276,9 @@ def _ivf_model(spark: SparkSession, sf_dir: str):
             [np.asarray(v, dtype=np.float64) for v in tbl["embedding"].to_pylist()]
         )
         cent_norm = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-        m = (k, cent_mat, cent_ids, cent_norm)
-        _cache_put(_IVF_MODEL_CACHE, key, m)
-    return m
+        return k, cent_mat, cent_ids, cent_norm
+
+    return _shared(spark, sf_dir, "ivf_model", build)
 
 
 def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,12 +324,7 @@ def _ivf_cells_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy-plan cache: repeated calls reuse one resolved DataFrame
     (plan resolution + UDF registration cost ~0.5 s per rebuild). The
     cells query additionally persists it (build-once / probe-many)."""
-    key = _ivf_cache_key(spark, sf_dir)
-    df = _CELLS_CACHE.get(key)
-    if df is None:
-        df = _ivf_cells(spark, sf_dir)
-        _cache_put(_CELLS_CACHE, key, df)
-    return df
+    return _shared(spark, sf_dir, "ivf_cells", lambda: _ivf_cells(spark, sf_dir))
 
 
 def q_ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -626,8 +599,7 @@ GROUP BY a2.cid
 
 
 # --- ANN recall measurement ------------------------------------------------
-ANN_RECALL_NQ = 16  # sampled query panel size (_RECALL_PAIRS_CACHE is
-                    # declared with the other caches above)
+ANN_RECALL_NQ = 16  # sampled query panel size
 
 
 def _two_level_topk(
@@ -728,15 +700,10 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # four arms rank this frame; without the persist each arm re-scans,
     # re-crossjoins, and re-scores (the arm filters sit below the window
-    # exchanges, so Spark cannot reuse them). Cached per (session,
+    # exchanges, so Spark cannot reuse them). Shared per (session,
     # dataset) like the IVF cell assignment so repeat panel runs reuse
-    # ONE persisted frame instead of leaking a new cache entry per call.
-    key = _ivf_cache_key(spark, sf_dir)
-    cached = _RECALL_PAIRS_CACHE.get(key)
-    if cached is None:
-        cached = pairs.persist()
-        _cache_put(_RECALL_PAIRS_CACHE, key, cached)
-    pairs = cached
+    # ONE persisted frame instead of persisting a new one per call.
+    pairs = _shared(spark, sf_dir, "recall_pairs", pairs.persist)
     # one shared two-level ranking definition for all arms (see
     # _two_level_topk)
     exact = _two_level_topk(pairs, F.desc("cos"))
@@ -843,35 +810,33 @@ def _pq_model(spark: SparkSession, sf_dir: str):
 
     from . import table_path
 
-    key = _ivf_cache_key(spark, sf_dir)
-    cached = _PQ_MODEL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    path = table_path(sf_dir, "embeddings")
-    n = pq.ParquetFile(path).metadata.num_rows
-    k = min(PQ_K, n)
-    tbl = pq.read_table(
-        path, columns=["vec_id", "embedding"], filters=[("vec_id", "<", k)]
-    ).sort_by("vec_id")
-    seed_ids = tbl["vec_id"].to_numpy().astype(np.int64)
-    # PQ codes are positional codebook rows AND the oracle labels them
-    # by vec_id — both readings agree only when seeds are 0..k-1
-    # (the same contiguity _ivf_query_cell enforces for the query)
-    if len(seed_ids) != k or not np.array_equal(seed_ids, np.arange(k)):
-        raise ValueError(
-            f"PQ codebook seeds must be contiguous vec_ids 0..{k - 1}; "
-            f"got {seed_ids[:8].tolist()}..."
+    def build():
+        path = table_path(sf_dir, "embeddings")
+        n = pq.ParquetFile(path).metadata.num_rows
+        k = min(PQ_K, n)
+        tbl = pq.read_table(
+            path, columns=["vec_id", "embedding"], filters=[("vec_id", "<", k)]
+        ).sort_by("vec_id")
+        seed_ids = tbl["vec_id"].to_numpy().astype(np.int64)
+        # PQ codes are positional codebook rows AND the oracle labels them
+        # by vec_id — both readings agree only when seeds are 0..k-1
+        # (the same contiguity _ivf_query_cell enforces for the query)
+        if len(seed_ids) != k or not np.array_equal(seed_ids, np.arange(k)):
+            raise ValueError(
+                f"PQ codebook seeds must be contiguous vec_ids 0..{k - 1}; "
+                f"got {seed_ids[:8].tolist()}..."
+            )
+        seeds = np.array(
+            [np.asarray(v, dtype=np.float64) for v in tbl["embedding"].to_pylist()]
         )
-    seeds = np.array(
-        [np.asarray(v, dtype=np.float64) for v in tbl["embedding"].to_pylist()]
-    )
-    d = seeds.shape[1]
-    if d % PQ_M:
-        raise ValueError(f"embedding dim {d} not divisible by PQ_M={PQ_M}")
-    sub = d // PQ_M
-    books = seeds.reshape(k, PQ_M, sub).transpose(1, 0, 2)  # (M, k, sub)
-    _cache_put(_PQ_MODEL_CACHE, key, (k, books))
-    return k, books
+        d = seeds.shape[1]
+        if d % PQ_M:
+            raise ValueError(f"embedding dim {d} not divisible by PQ_M={PQ_M}")
+        sub = d // PQ_M
+        books = seeds.reshape(k, PQ_M, sub).transpose(1, 0, 2)  # (M, k, sub)
+        return k, books
+
+    return _shared(spark, sf_dir, "pq_model", build)
 
 
 def _pq_encode_udf(books: np.ndarray):
@@ -983,54 +948,52 @@ def _pq_panel_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the candidate's IVF coarse cell (for the multiprobe arms — one
     extra pandas-UDF column over the same vector batch, no extra scan).
     Persisted once per (session, dataset) — q_pq_recall and
-    q_ann_ivfpq_multiprobe share it, and repeat panel runs must not leak
-    cache entries (same eviction policy as _RECALL_PAIRS_CACHE)."""
-    key = _ivf_cache_key(spark, sf_dir)
-    cached = _PQ_RECALL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    k, books = _pq_model(spark, sf_dir)
-    nq = min(PQ_NQ, k)
-    # per-query ADC LUTs in integer micro-units (queries are the seeds;
-    # same builder as the single-query probes) — (M, nq, k)
-    luts = np.stack([_pq_query_lut(k, books, q) for q in range(nq)], axis=1)
-    codes = _pq_codes_df(spark, sf_dir).withColumn(
-        "cid", _ivf_assign_udf(spark, sf_dir)("v")
-    )
-    qs = codes.filter(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    pairs = codes.crossJoin(F.broadcast(qs)).filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    adc = None
-    for j in range(PQ_M):
-        lut_j = F.array(
-            *[F.array(*[F.lit(int(v)) for v in luts[j, q]]) for q in range(nq)]
+    q_ann_ivfpq_multiprobe share it, and repeat panel runs must not
+    persist a new frame per call (one _shared entry)."""
+
+    def build():
+        k, books = _pq_model(spark, sf_dir)
+        nq = min(PQ_NQ, k)
+        # per-query ADC LUTs in integer micro-units (queries are the seeds;
+        # same builder as the single-query probes) — (M, nq, k)
+        luts = np.stack([_pq_query_lut(k, books, q) for q in range(nq)], axis=1)
+        codes = _pq_codes_df(spark, sf_dir).withColumn(
+            "cid", _ivf_assign_udf(spark, sf_dir)("v")
         )
-        term = F.element_at(
-            F.element_at(lut_j, (F.col("qid") + 1).cast("int")),
-            (F.element_at("codes", j + 1) + 1).cast("int"),
+        qs = codes.filter(F.col("vec_id") < nq).select(
+            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
         )
-        adc = term if adc is None else adc + term
-    # exact squared-L2 in the same micro-unit discipline
-    exd = F.round(
-        F.aggregate(
-            F.zip_with("v", "qv", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        PQ_ROUND,
-    )
-    scored = pairs.select(
-        "qid",
-        "vec_id",
-        "cid",
-        adc.alias("adc"),
-        F.round(exd * 1_000_000).cast("long").alias("exact_d"),
-    ).persist()
-    _cache_put(_PQ_RECALL_CACHE, key, scored)
-    return scored
+        pairs = codes.crossJoin(F.broadcast(qs)).filter(
+            F.col("vec_id") != F.col("qid")
+        )
+        adc = None
+        for j in range(PQ_M):
+            lut_j = F.array(
+                *[F.array(*[F.lit(int(v)) for v in luts[j, q]]) for q in range(nq)]
+            )
+            term = F.element_at(
+                F.element_at(lut_j, (F.col("qid") + 1).cast("int")),
+                (F.element_at("codes", j + 1) + 1).cast("int"),
+            )
+            adc = term if adc is None else adc + term
+        # exact squared-L2 in the same micro-unit discipline
+        exd = F.round(
+            F.aggregate(
+                F.zip_with("v", "qv", lambda x, y: (x - y) * (x - y)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+            PQ_ROUND,
+        )
+        return pairs.select(
+            "qid",
+            "vec_id",
+            "cid",
+            adc.alias("adc"),
+            F.round(exd * 1_000_000).cast("long").alias("exact_d"),
+        ).persist()
+
+    return _shared(spark, sf_dir, "pq_panel", build)
 
 
 def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,9 +36,6 @@ from ..kernels.pdf import reconstruct_reading_order
 from ..kernels.text import normalize_text
 from ..ops import widen
 
-# per-span branch-result schema (both branches union into this)
-_BRANCH_COLS = ["doc_id", "order", "kind", "text", "media_ref"]
-
 # media extraction output: one row per BLOB (not per span) + a per-scan-
 # partition metrics sideband row
 # span rows double as the recognition_results-analog detail record
@@ -398,8 +395,7 @@ def _direct_read_splits(media: DataFrame) -> list[tuple[str, int, int, int]] | N
 
     1. the sibling split manifest (`write_split_manifest`) — O(1) driver
        reads, the parquet-side analog of planning from Iceberg
-       manifests; with an Iceberg catalog (iceberg.py) the same tuples
-       come from the table's own manifest files;
+       manifests;
     2. parquet footers read on a thread pool (metadata-only,
        GIL-released pyarrow C++) — bounded wall even at thousands of
        files, vs the serial loop that stalls a 10^12-doc listing.

@@ -1,5 +1,4 @@
-"""Iceberg table surface (catalog wiring, MERGE-based checkpointing,
-manifest-driven split planning).
+"""Iceberg table surface (catalog wiring, MERGE-based checkpointing).
 
 The north rule's input is "an Iceberg table of interleaved documents";
 everything in this engine speaks plain parquet paths by default because
@@ -15,12 +14,9 @@ the runtime's presence:
   Iceberg append and the S6 checkpoint as a real `MERGE INTO`
   (upsert-by-bucket), replacing the dynamic-partition-overwrite +
   append-lineage emulation in checkpoint.py.
-- `read_splits` — split planning from the table's `.files` metadata
-  table: the same (path, row_group≈0, bytes, rows) tuples
-  `_direct_read_splits` builds from parquet footers, but sourced from
-  Iceberg manifests with zero data-file I/O. (For parquet-path runs the
-  same O(1) planning comes from `write_split_manifest`'s sidecar —
-  extract.py.)
+
+An Iceberg media table is not a bare parquet scan, so extract.py's
+`_media_branch` reads its blobs through the Arrow fallback.
 
 `tests/test_iceberg_surface.py` runs the full resume flow against a
 hadoop catalog when the runtime jar is present and skips cleanly here.
@@ -132,22 +128,3 @@ def completed_buckets(
         .distinct()
     )
 
-
-def read_splits(
-    spark: SparkSession, catalog: str = CATALOG, table: str = "ocr.media"
-) -> list[tuple[str, int, int, int]]:
-    """Split planning from Iceberg manifests: the `.files` metadata
-    table carries (file_path, file_size_in_bytes, record_count) per data
-    file with no data I/O — the cluster-scale replacement for footer
-    reads. Row-group granularity inside a data file is recovered lazily
-    by the worker (the direct reader already streams per row group)."""
-    require_iceberg(spark)
-    rows = (
-        spark.table(f"{catalog}.{table}.files")
-        .select("file_path", "file_size_in_bytes", "record_count")
-        .collect()
-    )
-    return [
-        (r["file_path"], 0, int(r["file_size_in_bytes"]), int(r["record_count"]))
-        for r in rows
-    ]

@@ -245,90 +245,11 @@ FROM documents
 """
 
 
-# The driver reports exactly 50 CORRECTNESS rows (first 50 registry
-# entries, in order) out of 96 registered queries. Registration order is
-# therefore a ROTATION SCHEDULE, not taste (round-3 verdict "What's wrong
-# #2"): round 4 promotes the 36 queries that have NEVER had a driver row
-# (registered after slot 50 in rounds 2-3) into slots 3-38, right behind
-# the two flagships, plus this round's new ann_ivfpq_multiprobe and the
-# queries whose code changed this round. The 30+ veterans with two rounds
-# of green rows on record (pricing_summary, the minhash family, windowed
-# counts...) demote to the tail — they stay verified by
-# tools/check_oracle.py + tests/test_queries_oracle.py either way, and
-# ORACLE_COVERAGE.md tracks the registered-vs-reported delta per round.
-#
-# From round 5 on the schedule is SELF-MAINTAINING (_rotation_order
-# below): once a CORRECTNESS report newer than r03 lands in the repo,
-# the head is computed from the report history — never-reported/failed
-# queries first, then stalest-green — so each new report automatically
-# rotates fresh queries into the 50-slot window with no hand edit.
-_REPORT_WINDOW = 50
-_ROUND4_HEAD = (
-    # flagships: never lose these rows
-    "extract_pipeline",
-    "structured_receipts",
-    # the 36 never-reported (CORRECTNESS_r03 delta), index builds before
-    # their probes so build-once/probe-many ordering still holds
-    "stateful_session_counts",
-    # ann_lsh_buckets demoted late round 4: it holds hash-green r01+r02
-    # rows on stable code, while curation_pipeline (below) has no row in
-    # ANY report — the staleness invariant in test_registry_consistency
-    "ann_ivf_cells",
-    "pii_scrub_stats",
-    "tfidf_top_terms",
-    "repetition_filter",
-    "decontam_hits",
-    "unigram_logprob",
-    "cms_token_counts",
-    "dsir_weights",
-    "bpe_merges",
-    "pmi_cooccurrence",
-    "doc_chunks",
-    "kmeans_clusters",
-    "ann_recall",
-    "pq_codes",
-    "pq_adc_probe",
-    "pq_recall",
-    "ann_ivfpq_probe",
-    "hard_negatives",
-    "leakage_safe_split",
-    "semantic_dedup",
-    "bloom_seen_probe",
-    "duplicate_passages",
-    "sequence_packing",
-    "source_mixture_weights",
-    "streaming_dedup",
-    "stream_stream_join",
-    "quantile_sketch",
-    "zorder_locality",
-    "funnel_conversion",
-    "retention_cohorts",
-    "psi_drift",
-    "ab_test",
-    "dq_checks",
-    "volume_anomalies",
-    # new this round (no row yet anywhere)
-    "ann_ivfpq_multiprobe",
-    "source_overlap_matrix",
-    "minhash_lsh_recall",
-    # late round-4 additions (no row anywhere, and round 5 is the last
-    # chance to earn one) outrank single-green unchanged veterans
-    "quality_signal_corr",
-    "priority_sample",
-    "semantic_decontam",
-    "neardup_pagerank",
-    "timeseries_gapfill",
-    "touch_attribution",
-    "shuffle_key_skew",
-    # latest round-4 operators (no row in ANY report — the invariant
-    # pinned by test_registry_consistency gives them the last slots;
-    # media_size_stats / ann_ivf_probe, whose implementations changed
-    # this round but whose r03 rows are green, demote to the stalest-
-    # green front of the round-5 self-maintaining rotation instead)
-    "hll_distinct",
-    "frequent_ngrams",
-    "curation_pipeline",
-)  # exactly 50 slots — the driver's report window; veterans follow
+# The driver reports exactly 50 CORRECTNESS rows: the first 50 registry
+# entries, in order. Registration order is therefore a rotation schedule,
+# computed from the committed report history by _rotation_order, so each
+# new report rotates the weakest-verified queries into that window with
+# no hand edit.
 
 
 def _row_clean(row: dict) -> bool:
@@ -349,13 +270,11 @@ def _report_history() -> dict[str, int]:
     import re
 
     last_ok: dict[str, int] = {}
-    latest_round = 0
     for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
         m = re.search(r"r(\d+)", os.path.basename(path))
         if not m:
             continue
         rnd = int(m.group(1))
-        latest_round = max(latest_round, rnd)
         try:
             with open(path) as fh:
                 rows = json.load(fh)
@@ -364,7 +283,7 @@ def _report_history() -> dict[str, int]:
         for name, row in rows.items():
             if isinstance(row, dict) and _row_clean(row):
                 last_ok[name] = max(last_ok.get(name, 0), rnd)
-    return {"__latest_round__": latest_round, **last_ok}
+    return last_ok
 
 
 def _rotation_order(names: list[str]) -> list[str]:
@@ -372,13 +291,8 @@ def _rotation_order(names: list[str]) -> list[str]:
     remaining queries sorted by (latest clean driver row ascending,
     registration order) — never-reported/failed first, stalest-green
     next — so the driver's 50-row window always lands on the entries
-    with the weakest verification record. Active from the first report
-    newer than round 3; before that the hand-written round-4 schedule
-    (_ROUND4_HEAD) is authoritative so the planned round-4 rows land."""
+    with the weakest verification record."""
     history = _report_history()
-    if history.pop("__latest_round__") <= 3:
-        head = [n for n in _ROUND4_HEAD if n in names]
-        return head + [n for n in names if n not in set(head)]
     pinned = [n for n in ("extract_pipeline", "structured_receipts") if n in names]
     idx = {n: i for i, n in enumerate(names)}
     rest = sorted(

@@ -43,7 +43,7 @@ def driver_memory() -> str:
 
 
 def java_opts() -> str:
-    return os.environ.get("SPARK_GRAFT_JAVA_OPTS", JAVA_OPTS_DEFAULT)
+    return JAVA_OPTS_DEFAULT
 
 
 def _tune_worker_env() -> None:
@@ -75,17 +75,15 @@ def _tune_worker_env() -> None:
 def get_spark(
     app_name: str = "ocr_service_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     _tune_worker_env()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local mode: ~cores, not the 200 default
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
-        shuffle_partitions = os.cpu_count() if n == "*" else int(n)
+    # local mode: ~cores, not the 200 default
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
+    shuffle_partitions = os.cpu_count() if n == "*" else int(n)
 
     builder = (
         SparkSession.builder.master(master)
@@ -125,10 +123,7 @@ def get_spark(
         # blob-heavy rows: decode cost per byte is high, so scan splits
         # should be small — 16 MiB keeps the first stage wide instead of
         # serializing on a handful of big file splits
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "16m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -41,61 +41,20 @@ def test_registry_consistency():
     rows_only = set(qs) - set(oracles)
     assert rows_only == set()
     # registry order is part of the driver contract: the driver reports
-    # exactly the FIRST 50 entries, so round 4 rotates the 36 queries
-    # that never had a driver row (CORRECTNESS_r03 delta) into slots
-    # 3-38, behind the two flagships. The rotation schedule lives in
-    # queries._ROUND4_HEAD; this pins that queries() honors it and that
-    # the never-reported set is fully inside the reported window.
+    # exactly the FIRST 50 entries, so queries._rotation_order pins the
+    # two flagships and rotates the weakest-verified queries in behind them.
     import glob
     import json
-    import re
-
-    from ocr_service_spark.queries import _ROUND4_HEAD
 
     names = list(qs)
     assert names[0] == "extract_pipeline"
     assert names[1] == "structured_receipts"
-    latest_report = max(
-        (
-            int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-            for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-        ),
-        default=0,
-    )
-    if latest_report > 3:
-        never_reported_r3 = None  # self-maintaining rotation active
-    else:
-        # round 4: the hand-written schedule is authoritative
-        assert names[: len(_ROUND4_HEAD)] == list(_ROUND4_HEAD)
-        # r03-delta minus ann_lsh_buckets (demoted late round 4: it holds
-        # hash-green r01+r02 rows on stable code, curation_pipeline has
-        # no row anywhere — see queries._ROUND4_HEAD)
-        never_reported_r3 = {
-            "stateful_session_counts", "ann_ivf_cells",
-            "pii_scrub_stats", "tfidf_top_terms", "repetition_filter",
-            "decontam_hits", "unigram_logprob", "cms_token_counts",
-            "dsir_weights", "bpe_merges", "pmi_cooccurrence", "doc_chunks",
-            "kmeans_clusters", "ann_recall", "pq_codes", "pq_adc_probe",
-            "pq_recall", "ann_ivfpq_probe", "hard_negatives",
-            "leakage_safe_split", "semantic_dedup", "bloom_seen_probe",
-            "duplicate_passages", "sequence_packing", "source_mixture_weights",
-            "streaming_dedup", "stream_stream_join", "quantile_sketch",
-            "zorder_locality", "funnel_conversion", "retention_cohorts",
-            "psi_drift", "ab_test", "dq_checks", "volume_anomalies",
-        }
-        assert set(names[2:37]) == never_reported_r3
-        # new round-4 operators must also land inside the 50-row window
-        assert names.index("ann_ivfpq_multiprobe") < 50
-        assert names.index("source_overlap_matrix") < 50
-        assert names.index("minhash_lsh_recall") < 50
-        assert len(_ROUND4_HEAD) <= 50
     # the general rotation invariant, data-driven: the report window must
     # never WASTE a slot — a query with no clean row in any historical
     # driver CORRECTNESS report may sit outside the first 50 slots only
     # when the window is already saturated with never-reported queries
-    # (no previously-green veteran holds a slot while one waits). Holds
-    # for both the hand-written round-4 schedule and the self-maintaining
-    # rotation; overflow rotates in on the next report.
+    # (no previously-green veteran holds a slot while one waits);
+    # overflow rotates in on the next report.
     reported: set[str] = set()
     for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         with open(path) as fh:
@@ -109,7 +68,6 @@ def test_registry_consistency():
         from ocr_service_spark.queries import _report_history
 
         history = _report_history()
-        history.pop("__latest_round__")
         strand_min = min(history.get(n, 0) for n in stranded)
         window_max = max(history.get(n, 0) for n in names[2:50])
         assert strand_min >= window_max, (
@@ -119,31 +77,45 @@ def test_registry_consistency():
         )
 
 
-def test_similarity_cache_eviction(spark):
-    """_cache_put evicts (and unpersists) stale entries for the same
-    (appId, sf_dir) when the dataset fingerprint changes, so a sweep
-    over regenerated tables never pins a chain of dead persisted frames
-    in executor storage (round-3 advice)."""
-    from pyspark.sql import functions as F
+def test_similarity_cache_eviction(spark, tmp_path):
+    """_shared builds once per (session, sf_dir, name); a changed
+    embeddings fingerprint rebuilds the entry and unpersists the stale
+    frame, so a sweep over regenerated tables never pins a chain of dead
+    persisted frames in executor storage. Other datasets are left alone,
+    and clear_similarity_caches() releases everything."""
+    import shutil
 
-    from ocr_service_spark.ops.similarity import _cache_put
+    from ocr_service_spark.ops.similarity import _shared, clear_similarity_caches
 
-    cache = {}
-    app = spark.sparkContext.applicationId
-    df_old = spark.range(4).select(F.col("id")).persist()
-    df_old.count()
-    _cache_put(cache, (app, "/ds", "fp1"), df_old)
-    df_new = spark.range(4).select(F.col("id") * 2)
-    _cache_put(cache, (app, "/ds", "fp2"), df_new)
-    assert list(cache) == [(app, "/ds", "fp2")]
-    assert not df_old.storageLevel.useMemory  # unpersisted on eviction
-    # a different sf_dir under the same app is NOT evicted
-    other = spark.range(2)
-    _cache_put(cache, (app, "/other", "fp1"), other)
-    assert len(cache) == 2
-    # idempotent re-put under the identical key keeps the entry
-    _cache_put(cache, (app, "/ds", "fp2"), df_new)
-    assert cache[(app, "/ds", "fp2")] is df_new
+    ds, other = str(tmp_path / "ds"), str(tmp_path / "other")
+    for d in (ds, other):
+        os.makedirs(d)
+        shutil.copy(os.path.join(SF_DIR, "embeddings.parquet"), d)
+    builds = []
+
+    def build():
+        # a distinct plan per build: equal plans share one CacheManager
+        # entry, and storageLevel would then hide the unpersist
+        df = spark.range(len(builds) + 1).selectExpr("id AS shared_cache_probe")
+        builds.append(df.persist())
+        return df
+
+    first = _shared(spark, ds, "probe", build)
+    assert _shared(spark, ds, "probe", build) is first
+    assert len(builds) == 1
+    kept = _shared(spark, other, "probe", build)
+
+    emb = os.path.join(ds, "embeddings.parquet")
+    st = os.stat(emb)
+    os.utime(emb, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    second = _shared(spark, ds, "probe", build)
+    assert second is not first and len(builds) == 3
+    assert not first.storageLevel.useMemory  # unpersisted on rebuild
+    assert kept.storageLevel.useMemory  # another sf_dir is untouched
+    assert _shared(spark, other, "probe", build) is kept
+
+    clear_similarity_caches()
+    assert not any(df.storageLevel.useMemory for df in builds)
 
 
 def test_ivf_pandas_matches_declarative(spark):

@@ -40,14 +40,13 @@ def test_resume_processes_only_complement(spark, dataset, tmp_path):
 
     # sabotage: drop half the checkpoint rows (simulates dying mid-run)
     ckpt_path = f"{out_dir}/_checkpoint"
-    ckpt = spark.read.parquet(ckpt_path).collect()
+    ckpt_df = spark.read.parquet(ckpt_path)
+    ckpt, ckpt_schema = ckpt_df.collect(), ckpt_df.schema
     kept = [r for r in ckpt if int(r["partition_key"]) < N_BUCKETS // 2]
     import shutil
 
     shutil.rmtree(ckpt_path)
-    from ocr_service_spark.schemas import CHECKPOINT_SCHEMA
-
-    spark.createDataFrame(kept, CHECKPOINT_SCHEMA).write.parquet(ckpt_path)
+    spark.createDataFrame(kept, ckpt_schema).write.parquet(ckpt_path)
 
     s3 = run_resumable(spark, docs, media, out_dir, cfg, n_buckets=N_BUCKETS)
     assert 0 < s3["processed_docs"] < n_docs

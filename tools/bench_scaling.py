@@ -78,7 +78,6 @@ def worker(cores: int, data_dir: str, warmup_dir: str) -> None:
         F.count(F.col("kernel_ms_sum")).alias("nb"),
     ).collect()[0]
     ocr_chars = magg["oc"] or 0
-    t_end = t0 + wall
     n_docs = spark.read.parquet(f"{out_tmp}/extracted").count()
     shutil.rmtree(out_tmp, ignore_errors=True)
     print(
@@ -86,12 +85,6 @@ def worker(cores: int, data_dir: str, warmup_dir: str) -> None:
             {
                 "cores": cores,
                 "wall_sec": round(wall, 3),
-                # epoch bounds of the timed region: lets a concurrent
-                # orchestrator (--job-fleet) compute the exact shared
-                # window max(t_end)-min(t_start) instead of trusting
-                # per-job walls to have overlapped perfectly
-                "t_start": round(t0, 3),
-                "t_end": round(t_end, 3),
                 "n_docs": n_docs,
                 "docs_per_sec": round(n_docs / wall, 2),
                 "ocr_chars": int(ocr_chars),
@@ -212,144 +205,6 @@ def calibrate_smt(levels: list[int]) -> dict[str, float]:
         for i, lo in enumerate(levels)
         for hi in levels[i + 1 :]
     }
-
-
-def job_fleet(
-    n_docs: int,
-    seed: int = 42,
-    media_scale: int = 4,
-    n_jobs: int = 4,
-    cores_each: int = 8,
-) -> dict:
-    """N-vs-4N proxy with FULL Spark jobs as the executor unit: one cold
-    local[8] job (N = one 8-core executor) vs `n_jobs` concurrent cold
-    local[8] jobs (4N = four 8-core executors), each running the
-    complete read -> extract -> write pipeline over the same input.
-
-    This is the closest single-box analogue of adding executors: unlike
-    the kernel fleet (zero Spark) it carries every per-executor cost the
-    real cluster pays — JVM, shuffle service, Python workers, driver
-    coordination — so
-        efficiency = aggregate_docs_per_sec / (n_jobs * single_docs_per_sec)
-    isolates "does the JOB add coordination overhead at 4N?" from the
-    host's shared memory-bandwidth ceiling (which both fleets share).
-    Aggregate throughput uses the exact shared window
-    max(t_end) - min(t_start) across the concurrent timed regions, so
-    warmup stagger between jobs is charged against the fleet, not hidden.
-    """
-    from ocr_service_spark.datagen import ensure_dataset
-
-    data_dir = os.path.join(REPO, ".data", f"bench-ds-{n_docs}x{media_scale}")
-    warmup_dir = os.path.join(REPO, ".data", "bench-ds-warmup")
-    ensure_dataset(data_dir, n_docs, seed, media_scale)
-    ensure_dataset(warmup_dir, 400, seed + 1, media_scale)
-
-    import bench as _bench
-
-    def probe_factor() -> float:
-        return round(_bench._gemm_control(32) / _bench.GEMM_CONTROL_REF_S, 3)
-
-    # a 4-executor cluster gives each executor 1/4 of the box, so every
-    # job (baseline included — apples to apples) runs on a quarter heap
-    # AND a disjoint 8-core cpuset: without pinning, a lone local[8]
-    # job's JVM service threads, GC, and Python workers spill onto the
-    # 24 idle cores, inflating the baseline an executor would never see
-    env = dict(os.environ, SPARK_DRIVER_MEMORY="16g")
-    import shutil as _sh
-
-    have_taskset = _sh.which("taskset") is not None
-
-    def make_cmd(job_idx: int) -> list[str]:
-        cpus = f"{job_idx * cores_each}-{(job_idx + 1) * cores_each - 1}"
-        pin = ["taskset", "-c", cpus] if have_taskset else []
-        return pin + [
-            sys.executable, os.path.abspath(__file__),
-            "--worker", "--cores", str(cores_each),
-            "--data-dir", data_dir, "--warmup-dir", warmup_dir,
-        ]
-
-    def run_single() -> dict:
-        out = subprocess.run(
-            make_cmd(0), capture_output=True, text=True, cwd=REPO,
-            check=True, env=env,
-        )
-        line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-        return json.loads(line)
-
-    probes = [probe_factor()]
-    singles = [run_single()]
-    print(
-        f"single local[{cores_each}] (probe {probes[0]}): "
-        f"{singles[0]['docs_per_sec']} docs/s",
-        file=sys.stderr,
-    )
-    probes.append(probe_factor())
-    procs = [
-        subprocess.Popen(
-            make_cmd(j), stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-            text=True, cwd=REPO, env=env,
-        )
-        for j in range(n_jobs)
-    ]
-    fleet_runs = []
-    for p in procs:
-        out, _ = p.communicate()
-        if p.returncode:
-            raise RuntimeError(f"fleet job failed rc={p.returncode}")
-        line = [l for l in out.splitlines() if l.startswith("{")][-1]
-        fleet_runs.append(json.loads(line))
-    window = max(r["t_end"] for r in fleet_runs) - min(
-        r["t_start"] for r in fleet_runs
-    )
-    agg_docs = sum(r["n_docs"] for r in fleet_runs)
-    agg_dps = agg_docs / window
-    print(
-        f"fleet {n_jobs} x local[{cores_each}]: {agg_docs} docs / "
-        f"{window:.1f}s shared window = {agg_dps:.1f} docs/s aggregate",
-        file=sys.stderr,
-    )
-    probes.append(probe_factor())
-    singles.append(run_single())
-    print(
-        f"single local[{cores_each}] (probe {probes[-1]}): "
-        f"{singles[-1]['docs_per_sec']} docs/s",
-        file=sys.stderr,
-    )
-    probes.append(probe_factor())
-    # best single = the strongest baseline; a noisy baseline trial can
-    # only LOWER the reported efficiency, never inflate it
-    single_dps = max(s["docs_per_sec"] for s in singles)
-    eff = round(agg_dps / (n_jobs * single_dps), 3)
-    result = {
-        "protocol": (
-            f"1x local[{cores_each}] (N) vs {n_jobs} concurrent cold-JVM "
-            f"local[{cores_each}] full extract jobs (4N), same input each; "
-            "aggregate over the shared timed window"
-            + ("; each job pinned to a disjoint "
-               f"{cores_each}-core cpuset (taskset)" if have_taskset else "")
-        ),
-        "cpuset_pinned": have_taskset,
-        "n_docs": n_docs,
-        "seed": seed,
-        "media_scale": media_scale,
-        "probe_factors": probes,
-        "single_runs": singles,
-        "single_docs_per_sec": single_dps,
-        "fleet_runs": fleet_runs,
-        "fleet_window_sec": round(window, 3),
-        "fleet_docs_per_sec": round(agg_dps, 2),
-        "per_job_docs_per_sec": [r["docs_per_sec"] for r in fleet_runs],
-        "scaling_efficiency": eff,
-        "target": 0.8,
-        "passes": eff >= 0.8,
-    }
-    out_path = os.path.join(REPO, "BENCH_jobfleet.json")
-    with open(out_path, "w") as f:
-        json.dump(result, f, indent=1)
-    print(json.dumps({k: result[k] for k in (
-        "single_docs_per_sec", "fleet_docs_per_sec", "scaling_efficiency",
-        "probe_factors", "passes")}))
-    return result
 
 
 def orchestrate(
@@ -624,11 +479,6 @@ def main() -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--worker", action="store_true")
     p.add_argument("--fleet-worker", action="store_true")
-    p.add_argument(
-        "--job-fleet", action="store_true",
-        help="N-vs-4N proxy with whole Spark jobs as the executor unit: "
-        "1x local[8] vs 4 concurrent cold-JVM local[8] extract jobs",
-    )
     p.add_argument("--cores", type=int)
     p.add_argument("--data-dir")
     p.add_argument("--warmup-dir")
@@ -647,9 +497,6 @@ def main() -> int:
         return 0
     if args.worker:
         worker(args.cores, args.data_dir, args.warmup_dir)
-        return 0
-    if args.job_fleet:
-        job_fleet(args.n_docs, media_scale=args.media_scale)
         return 0
     orchestrate(
         args.n_docs,
