@@ -1,32 +1,28 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
+/root/testdata/sf0.1) on the session's default cores and prints ONE JSON
 line: {"metric": "headline_queries_total_wall", "value": total_sec,
 "unit": "sec", "queries": {name: sec, ...}, "streaming": {...},
-"sf": ..., "extract": {...}}.
+"sf": ..., "extract": {...}, "cpus": ...}.
 
-Window-robustness (round-3 verdict): this host's throughput swings
-±20% run to run (neighbors, khugepaged), and the driver's artifact is
-ONE run in whatever window it gets. Three defenses, all inside this
-script so the artifact carries its own evidence:
-  * every batch query and the extract pass run BEST-OF-2 — max
-    estimates true capability, same protocol as tools/bench_scaling.py;
-  * a GEMM control (32 single-thread matmul processes, the same
-    fleet tools/bench_scaling.py calibrates SMT with) runs next to the
-    extract pass and its wall is embedded in the result vs a recorded
-    quiet-window reference — a loaded window is self-evident from
-    host_load_factor > ~1.2 in the artifact itself;
+The artifact is one run in whatever window it gets, so it carries its
+own evidence:
+  * every batch query and the extract pass run BEST-OF-2: the faster
+    run estimates true capability on a noisy host;
+  * perfbench's GEMM host-load control (probes.gemm_control, one
+    single-thread process per core) runs next to the extract pass, and
+    its wall is embedded against probes.GEMM_REFERENCE_S: a loaded
+    window shows as host_load_factor well above 1;
   * the two drain-based streaming queries (two-microbatch staging +
-    memory-sink drain — harness work, not engine work) report in a
-    separate `streaming` section so ~9 s of harness can never inflate
-    the engine headline or its variance.
+    memory-sink drain — harness work, not engine work) report only
+    their total in a separate `streaming` section, so harness time
+    never inflates the engine headline or its variance.
 
 The extraction pipeline benches on the engine's own deterministic
 synthetic interleaved-document dataset (scaled off sf), reporting
 docs/sec and OCR chars/sec — the BASELINE.json headline metric.
-Scaling-efficiency evidence (N vs 4N cores) is produced separately by
-tools/bench_scaling.py → BENCH/BASELINE.md.
+Per-layer timings and N-vs-1-core scaling come from perfbench/run.py.
 """
 
 from __future__ import annotations
@@ -34,49 +30,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
-# best observed idle-window wall of _gemm_control(32) on this host
-# (round-4 probes ranged 3.7 quiet → 7.2 loaded; 4.4-4.7 is the common
-# mildly-shared regime). host_load_factor = wall / this reference; a
-# bench whose factor is well above ~1.2 ran in a loaded window and its
-# extract number should be read accordingly.
-GEMM_CONTROL_REF_S = 3.7
-
-
-def _gemm_control(cores: int) -> float:
-    """Wall of `cores` independent single-thread GEMM processes — a
-    perfectly-parallel fleet with no Spark in it. Any slowdown vs the
-    quiet-window reference is HOST load, not engine regression (the
-    concurrent-control protocol of tools/bench_scaling.py)."""
-    env = dict(
-        os.environ,
-        OMP_NUM_THREADS="1",
-        OPENBLAS_NUM_THREADS="1",
-        MKL_NUM_THREADS="1",
-    )
-    code = (  # ~2 s single-thread: long enough to amortize process spawn
-        "import numpy as np\n"
-        "np.seterr(all='ignore')\n"  # values blow up to inf by design
-        "a = np.random.default_rng(0).random((384, 384), dtype=np.float32)\n"
-        "for _ in range(600):\n"
-        "    a = a @ a * 1e-3 + 1.0\n"
-    )
-    t0 = time.time()
-    procs = [
-        subprocess.Popen([sys.executable, "-c", code], env=env)
-        for _ in range(cores)
-    ]
-    for p in procs:
-        p.wait()
-    return time.time() - t0
-
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
 # drain-based streaming queries: two-microbatch staging + memory-sink
 # drain dominates their wall (engine state work is milliseconds) —
@@ -185,23 +145,27 @@ _EXTRACT_DOCS = {"0.001": 200, "0.01": 600, "0.1": 2000}
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
     from ocr_service_spark import queries as registry
     from ocr_service_spark.config import ExtractConfig
     from ocr_service_spark.datagen import ensure_dataset
-    from ocr_service_spark.pipeline.extract import load_inputs, run_extract
+    from ocr_service_spark.pipeline.extract import (
+        load_inputs,
+        release_persisted,
+        run_extract,
+    )
     from ocr_service_spark.session import get_spark
+    from probes import GEMM_REFERENCE_S, gemm_control
     from pyspark.sql import functions as F
 
-    spark = get_spark(app_name="bench", master=f"local[{cpus}]")
+    spark = get_spark(app_name="bench")
+    cpus = spark.sparkContext.defaultParallelism
     spark.range(1000).count()  # JVM warmup
     # python-worker warmup: fork + pandas/pyarrow import happens once per
-    # worker per session (~3.5 s across 32 workers, measured); production
-    # runtime is steady-state, so pay it outside the timed sections —
-    # same protocol as tools/bench_scaling.py's warmup pass
-    spark.range(int(cpus) * 4).repartition(int(cpus)).mapInPandas(
+    # worker per session; production runtime is steady-state, so pay it
+    # outside the timed sections
+    spark.range(cpus * 4).repartition(cpus).mapInPandas(
         lambda it: it, "id long"
     ).count()
     # parquet datasource init (codegen + filesystem touch)
@@ -232,18 +196,13 @@ def main() -> int:
     docs = docs.persist()
     n = docs.count()  # materialize input outside the timed section
 
-    # best-of-2: this host's throughput is noisy (±20% run to run —
-    # neighbors, khugepaged); max estimates true capability, same
-    # protocol as tools/bench_scaling.py
-    from ocr_service_spark.pipeline.extract import release_persisted
-
     # GEMM control RIGHT BEFORE the timed extract trials: the embedded
     # host_load_factor makes a loaded window self-evident in the artifact
-    control_wall = _gemm_control(int(cpus))
+    control_wall = gemm_control(cpus)
 
     out_tmp = tempfile.mkdtemp(prefix="bench-extract-")
     extract_wall = None
-    for trial in range(2):
+    for trial in range(2):  # best-of-2, as for the queries
         t0 = time.time()
         output, metrics = run_extract(
             spark, docs, media, ExtractConfig(run_id=f"bench-{trial}")
@@ -265,26 +224,6 @@ def main() -> int:
     timings["extract_pipeline"] = round(extract_wall, 3)
 
     total = round(sum(timings.values()), 3)
-    # N vs 4N scaling evidence (tools/bench_scaling.py refreshes this file).
-    # Only the HEADLINE numbers are embedded in the printed line: the
-    # driver's stdout-tail capture is ~2000 chars and round 2's full
-    # embedded sweep pushed the line past it, truncating the JSON
-    # mid-string ("parsed": null). Full detail goes to BENCH_result.json.
-    scaling_full = None
-    scaling_path = os.path.join(REPO, "BENCH_scaling.json")
-    if os.path.exists(scaling_path):
-        with open(scaling_path) as fh:
-            scaling_full = json.load(fh)
-    scaling = None
-    if scaling_full:
-        scaling = {
-            "pair": scaling_full.get("headline_pair"),
-            "raw": scaling_full.get("scaling_efficiency_docs"),
-            "smt_ceiling": scaling_full.get("smt_ceiling"),
-            "normalized": scaling_full.get("scaling_efficiency_normalized"),
-            "physical_4_to_16": scaling_full.get("physical_regime_efficiency"),
-            "passes": scaling_full.get("passes"),
-        }
     result = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -303,42 +242,21 @@ def main() -> int:
             "ocr_chars": int(ocr_chars),
             "ocr_chars_per_sec": round(ocr_chars / extract_wall, 1),
             "total_extracted_chars": int(total_chars),
-            # GEMM fleet control measured just before the extract trials
+            # GEMM control measured just before the extract trials
             "control_wall_sec": round(control_wall, 2),
-            "control_ref_sec": GEMM_CONTROL_REF_S,
-            "host_load_factor": (
-                round(control_wall / GEMM_CONTROL_REF_S, 2)
-                if GEMM_CONTROL_REF_S
-                else None
-            ),
+            "control_ref_sec": GEMM_REFERENCE_S,
+            "host_load_factor": round(control_wall / GEMM_REFERENCE_S, 2),
         },
-        "cpus": int(cpus),
-        "scaling": scaling,
+        "cpus": cpus,
     }
-    # full-fidelity copy (incl. the complete scaling sweep) on disk so the
-    # compact stdout line never has to carry it
-    full = dict(result)
-    full["scaling"] = scaling_full
+    # full-precision copy on disk; the printed line stays compact
+    # (2-decimal timings, streaming total only) so the driver's
+    # stdout-tail capture never truncates it
     with open(os.path.join(REPO, "BENCH_result.json"), "w") as fh:
-        json.dump(full, fh, indent=1)
-    # compact printed line (driver stdout-tail window is ~2000 chars):
-    # 2-decimal timings, no prose; progressive trims drop per-query
-    # streaming detail before ever touching the scaling evidence
+        json.dump(result, fh, indent=1)
     result["queries"] = {k: round(v, 2) for k, v in timings.items()}
-    result["streaming"] = {
-        "queries": {k: round(v, 2) for k, v in streaming_timings.items()},
-        "total_wall": round(sum(streaming_timings.values()), 2),
-    }
-    line = json.dumps(result, separators=(",", ":"))
-    if len(line) > 1900:
-        result["streaming"] = {
-            "total_wall": round(sum(streaming_timings.values()), 2)
-        }
-        line = json.dumps(result, separators=(",", ":"))
-    if len(line) > 1900:  # belt-and-braces: never outgrow the tail window
-        result["scaling"] = None
-        line = json.dumps(result, separators=(",", ":"))
-    print(line)
+    result["streaming"] = {"total_wall": round(sum(streaming_timings.values()), 2)}
+    print(json.dumps(result, separators=(",", ":")))
     sys.stdout.flush()
     spark.stop()
     return 0

@@ -6,7 +6,7 @@ driver tools/submit_job.py is that script and this module is its body):
     spark-submit --master ... --py-files dist/ocr_service_spark.zip \
         tools/submit_job.py --data-dir DIR --out-dir DIR ...
 Locally:
-    python -m ocr_service_spark.job --data-dir DIR --out-dir DIR [--master local[32]]
+    python -m ocr_service_spark.job --data-dir DIR --out-dir DIR [--master local[4]]
 
 tests/test_spark_submit.py drives the real spark-submit binary through
 this path from a neutral cwd and golden-checks the output.
@@ -24,7 +24,7 @@ import sys
 import time
 
 from .config import ExtractConfig
-from .pipeline.checkpoint import run_resumable
+from .pipeline.checkpoint import DEFAULT_BUCKETS, run_resumable
 from .pipeline.extract import load_inputs
 from .session import get_spark
 
@@ -33,8 +33,8 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="ocr_service_spark.job")
     ap.add_argument("--data-dir", required=True)
     ap.add_argument("--out-dir", required=True)
-    ap.add_argument("--master", default=None, help="e.g. local[8]; default local[$SPARK_GRAFT_CPUS]")
-    ap.add_argument("--n-buckets", type=int, default=64)
+    ap.add_argument("--master", default=None, help="e.g. local[4]; default local[$SPARK_GRAFT_CPUS]")
+    ap.add_argument("--n-buckets", type=int, default=DEFAULT_BUCKETS)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--confidence-low", type=float, default=None)
     ap.add_argument("--accepted-qr-formats", default=None, help="CSV, e.g. fiscal,url")

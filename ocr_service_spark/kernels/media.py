@@ -701,19 +701,44 @@ def extract_media_span(
     analog of asyncio.wait_for + BullMQ job failure). The
     spark.task.reaper conf in session.py is the hard backstop.
 
+    A blob past the validate_media gate can still be malformed in ways
+    no decoder checks (0×0 or 1-pixel-high frames, a non-dict ``qr``, a
+    short QR location): any exception from the kernels fails the span
+    with the exception's class in ``error``, never the task that holds
+    it.
+
     Returns a dict of the per-blob fields of extract.py's
     _MEDIA_RESULT_SCHEMA.
     """
+    err = validate_media(blob)
+    if err is not None:
+        return _failed(err)
+    try:
+        return _extract_valid_media(
+            blob, confidence_low, accepted_qr_formats, recognizer,
+            aggressive, timeout_s, warp_interp, alignment_mode,
+        )
+    except Exception as exc:
+        return _failed(f"{type(exc).__name__}: {exc}")
+
+
+def _extract_valid_media(
+    blob: bytes,
+    confidence_low: float,
+    accepted_qr_formats: tuple[str, ...] | None,
+    recognizer: StubRecognizer | None,
+    aggressive: bool,
+    timeout_s: float | None,
+    warp_interp: str,
+    alignment_mode: str,
+) -> dict:
+    """extract_media_span's body for a blob that passed validate_media."""
     import time as _time
 
     deadline = (_time.monotonic() + timeout_s) if timeout_s else None
 
     def _timed_out() -> bool:
         return deadline is not None and _time.monotonic() > deadline
-
-    err = validate_media(blob)
-    if err is not None:
-        return _failed(err)
 
     bgr = None  # 3-channel frame for real color sources (LAB CLAHE path)
     if blob.startswith(SIMG_MAGIC):

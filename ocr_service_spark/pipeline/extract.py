@@ -455,8 +455,11 @@ def _atomize_splits(
     row_lo, row_hi) packing atoms of ~atom_cost_ms estimated cost (floor:
     one row). Rows within a group are assumed cost-uniform (the per-row
     inference cost dominates; bytes prorate). Sub-group reads re-decode
-    the group's pages once per atom — a few ms of pyarrow I/O against
-    hundreds of ms of kernel work per atom."""
+    the group's pages once per atom, and that is not cheap: on a 4-core
+    x86-64 VM, perfbench's photo corpus (two row groups of 16 and 8
+    rows, 34 MB) took 314-404 ms to read as one-row atoms against
+    27-58 ms for one read per group, while the kernels spend ~21 ms p50
+    per blob."""
     atoms: list[tuple[float, str, int, int, int]] = []
     for path, rg, nbytes, rows in splits:
         cost = _split_cost_ms(rows, nbytes)
@@ -558,10 +561,11 @@ def _media_branch(
     join-first plan decoded per reference). Unreferenced media rows do get
     decoded; the input contract (FIXTURES.md §1) references every blob.
     Corollary for checkpoint RESUME over a doc subset: the whole media
-    table is re-extracted (results for unmatched refs are discarded by the
-    join). At production scale the media table is partitioned by the same
-    bucket key as documents (Iceberg partition transform), so a resume
-    lists only the matching data files and this is moot.
+    table is re-extracted and the join discards the results for refs
+    outside the subset. Nothing here partitions the media table by the
+    documents' bucket key, so every resume pays this (perfbench's
+    resume.useful_blob_ratio: 0.71 on extract_photo, 0.50 on
+    extract_text).
     """
     media_spans = spans.filter(F.col("kind") == "media").select(
         "doc_id", "order", "media_ref"

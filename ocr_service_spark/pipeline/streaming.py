@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import ExtractConfig
+from .checkpoint import DEFAULT_BUCKETS, bucket_expr
 from .extract import run_extract
 
 
@@ -73,7 +74,7 @@ def extract_stream_to_files(
     data_dir: str,
     out_dir: str,
     cfg: ExtractConfig | None = None,
-    n_buckets: int = 64,
+    n_buckets: int = DEFAULT_BUCKETS,
     n_batches: int = 1,
 ) -> None:
     """Streaming sink: readStream over the documents table →
@@ -94,7 +95,6 @@ def extract_stream_to_files(
     ``{out_dir}/_stream_checkpoint`` tracks consumed source files."""
     from pyspark.sql import functions as F
 
-    from .checkpoint import bucket_expr
     from .extract import release_persisted
 
     cfg = cfg or ExtractConfig()

@@ -15,9 +15,9 @@ from .config import ARROW_MAX_BYTES_PER_BATCH, ARROW_MAX_RECORDS_PER_BATCH
 
 # JVM sizing shared by BOTH launch surfaces: the builder below (python
 # launcher — effective because the builder starts the JVM) and the
-# spark-submit command line (tools/bench_scaling.py, tools/submit_job.py
-# docs — REQUIRED there because spark-submit starts the JVM before any
-# builder runs, silently ignoring these keys set via .config()).
+# spark-submit command line (tools/submit_job.py docs — REQUIRED there
+# because spark-submit starts the JVM before any builder runs, silently
+# ignoring these keys set via .config()).
 JAVA_OPTS_DEFAULT = "-XX:+UseParallelGC -XX:ParallelGCThreads=8"
 
 

@@ -188,6 +188,29 @@ def test_malformed_simg_yields_failed_span_not_crash(make):
     assert res["error"].startswith("SIMG decode failed")
 
 
+@pytest.mark.parametrize(
+    "blob, exc_name",
+    [
+        (_blob(w=0, h=0, quad=False), "IndexError"),
+        (_blob(w=1, h=1, quad=False), "LinAlgError"),
+        (_blob(w=4000, h=1, quad=False), "LinAlgError"),
+        (_blob(qr="x"), "AttributeError"),
+        (_blob(qr={"data": "https://r.example/1", "location": [1, 1]}), "ValueError"),
+    ],
+    ids=["0x0", "1x1", "1x4000", "qr_not_dict", "qr_location_2"],
+)
+def test_simg_that_decodes_but_breaks_a_kernel_fails_its_span(blob, exc_name):
+    """SIMG blobs that pass the gate AND decode, then raise inside the
+    alignment or QR kernels, fail their span with the exception's class
+    in the error instead of killing the task that holds them."""
+    assert validate_media(blob) is None  # precondition: past the gate
+    decode_simg(blob)  # precondition: decodes
+    res = extract_media_span(blob, 0.6, None)
+    assert res["status"] == "failed"
+    assert res["kind"] == "media_text" and res["text"] is None
+    assert res["error"].startswith(f"{exc_name}: ")
+
+
 def test_extract_media_classic_chain_completes():
     # neural declines or fails → classic P3-P8 chain; annotated quad
     # metadata is ignored (the chain derives geometry from pixels)

@@ -4,8 +4,7 @@ both blob sources (direct parquet read and the Arrow fallback)."""
 
 from __future__ import annotations
 
-import os
-
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -13,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ocr_service_spark.config import ExtractConfig
 from ocr_service_spark.datagen import generate
+from ocr_service_spark.kernels.media import encode_simg
 from ocr_service_spark.pipeline.checkpoint import read_output, run_resumable
 from ocr_service_spark.pipeline.extract import load_inputs, write_split_manifest
 
@@ -24,16 +24,25 @@ def _seqs(rows):
     }
 
 
-@pytest.fixture(scope="module")
-def poisoned_corpus(tmp_path_factory):
-    """40-doc datagen corpus whose third blob has its pixel payload cut
-    short: it still passes the magic-byte gate but no longer decodes."""
+def _truncated(blob: bytes) -> bytes:
+    return blob[:-10]
+
+
+def _one_pixel(blob: bytes) -> bytes:
+    return encode_simg({"h": 1, "w": 1}, np.zeros((1, 1), np.uint8))
+
+
+@pytest.fixture(scope="module", params=[_truncated, _one_pixel], ids=["truncated", "one_pixel"])
+def poisoned_corpus(request, tmp_path_factory):
+    """40-doc datagen corpus with its third blob poisoned. Both poisons
+    pass the magic-byte gate: a truncated pixel payload no longer
+    decodes, and a 1x1 SIMG decodes but breaks the alignment warp."""
     data_dir = str(tmp_path_factory.mktemp("poisoned"))
     paths = generate(data_dir, 40, seed=5)
     media = pq.read_table(paths["media"])
     content = media.column("content").to_pylist()
     ref = media.column("media_ref")[2].as_py()
-    content[2] = content[2][:-10]
+    content[2] = request.param(content[2])
     media = media.set_column(
         media.schema.get_field_index("content"), "content", pa.array(content, pa.binary())
     )

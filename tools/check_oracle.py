@@ -214,7 +214,7 @@ def main() -> int:
 
     from ocr_service_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[16]")
+    spark = get_spark(app_name="oracle-check")
     failures = run_checks(spark, sf_dir, only)
     print(f"\n{len(failures)} failures: {failures}")
     spark.stop()

@@ -81,7 +81,7 @@ def main() -> int:
 
     from ocr_service_spark.session import get_spark
 
-    spark = get_spark(app_name="plan-audit", master="local[8]")
+    spark = get_spark(app_name="plan-audit")
     rows = audit(spark, sf_dir, only)
     w = max(len(r["query"]) for r in rows)
     print(f"{'query':{w}}  exch  bhj  smj  win  partial  pushed")

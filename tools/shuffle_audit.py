@@ -192,9 +192,9 @@ def measure(sf_dir: str, names=None) -> dict[str, int]:
     from ocr_service_spark.queries import queries
     from ocr_service_spark.session import get_spark
 
-    spark = get_spark(app_name=f"shuffle-audit-{os.path.basename(sf_dir)}",
-                      master="local[8]")
-    spark.range(16).repartition(8).mapInPandas(lambda it: it, "id long").count()
+    spark = get_spark(app_name=f"shuffle-audit-{os.path.basename(sf_dir)}")
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(cpus * 2).repartition(cpus).mapInPandas(lambda it: it, "id long").count()
     qs = queries()
     out: dict[str, int] = {}
     for name in names or AUDIT:
