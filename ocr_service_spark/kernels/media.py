@@ -668,7 +668,9 @@ def run_cascade(
         if conf >= confidence_low:
             return last
     if last is None:
-        raise RuntimeError(f"all OCR attempts failed: {last_err}")
+        raise RuntimeError(
+            f"all OCR attempts failed: {type(last_err).__name__}: {last_err}"
+        )
     return last
 
 
@@ -748,7 +750,7 @@ def _extract_valid_media(
         try:
             meta, img = decode_simg(blob)
         except (ValueError, KeyError, TypeError) as exc:
-            return _failed(f"SIMG decode failed: {exc}")
+            return _failed(f"SIMG decode failed: {type(exc).__name__}: {exc}")
         recognizer = recognizer or StubRecognizer()
     else:
         # real jpeg/png/webp bytes: decode + real engine adapters (both

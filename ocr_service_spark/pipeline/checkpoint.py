@@ -9,6 +9,14 @@ with dynamic partition overwrite (idempotent re-write), and only then
 appends the bucket's lineage row. A crash between the two steps just
 re-does the bucket — byte-identical, no duplicates.
 
+A bucket's output and its lineage row are one commit unit, so nothing
+is read back from the sink. The reassembly shuffle already hash-
+partitions on bucket (extract.run_extract), so the write is one file per
+bucket from every slot; the written frame is persisted, and the
+processed counts, the buckets of the recognition records and the
+lineage rows all come from that cache. The counts and the OCR-partition
+balance are observed on the writes themselves (pyspark Observation).
+
 Checkpoint row layout follows FIXTURES.md §4 (the batch analog of the
 reference event stream, events/map.ts:1-60, and its prometheus metrics,
 aligner/src/observability/metrics.py:5-33).
@@ -16,17 +24,19 @@ aligner/src/observability/metrics.py:5-33).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..config import ExtractConfig
-from .extract import release_persisted, run_extract
+from .extract import persist_for_run, release_persisted, run_extract
 
 # Size n_buckets so each bucket holds at least a few hundred documents:
-# buckets are the resume granularity AND the output partition count, so
-# oversizing trades small-file overhead for finer resume (measured here:
-# 8000 docs at 512 buckets ran ~35% slower than at 64 purely on
-# partitioned-write overhead). At 10^12 docs, thousands of buckets keep
+# buckets are the resume granularity AND the output file count (one file
+# per bucket: the reassembly hash-partitions on bucket into one partition
+# per slot, so each slot writes n_buckets / slots of them), so oversizing
+# trades small-file overhead for finer resume (measured: 8000 docs at
+# 512 buckets ran ~35% slower than at 64 purely on partitioned-write
+# overhead). At 10^12 docs, thousands of buckets keep
 # both resume granularity and file sizes sane.
 DEFAULT_BUCKETS = 64
 
@@ -65,7 +75,9 @@ def run_resumable(
     overwrite + append-lineage emulation; requires the iceberg-spark
     runtime on the classpath (job.py --catalog).
 
-    Returns {"processed_docs": n, "processed_buckets": k}.
+    Returns {"processed_docs", "processed_buckets", "ocr_partitions",
+    "ocr_partition_balance"}; a run with nothing to do returns
+    {"processed_docs": 0, "processed_buckets": 0}.
     """
     cfg = cfg or ExtractConfig()
     out_path = f"{out_dir}/extracted"
@@ -85,34 +97,79 @@ def run_resumable(
 
     details_out: list = []
     output, metrics = run_extract(spark, todo, media, cfg, details_out=details_out)
-    output_b = output.withColumn("bucket", bucket_expr(n_buckets))
-
+    # everything after the write reads this cache, not the sink; it holds
+    # only todo buckets, so it needs no anti-join against the checkpoint
+    output = persist_for_run(output)
+    written = Observation("written")
+    observed = output.observe(
+        written,
+        F.count("*").alias("docs"),
+        F.size(F.collect_set("bucket")).alias("buckets"),
+    )
     if use_iceberg:
         from . import iceberg
 
-        iceberg.write_output(output_b)
-        written = spark.table(f"{iceberg.CATALOG}.ocr.extracted")
+        iceberg.write_output(observed)
     else:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        output_b.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
-        # lineage rows AFTER the data is durably written (crash-safe ordering)
-        written = spark.read.parquet(out_path).withColumn(
-            "bucket", bucket_expr(n_buckets)
-        )
-    if done is not None:
-        written = written.join(done, "bucket", "left_anti")
+        observed.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
+
+    # per-blob recognition records (reference recognition_results,
+    # schema.ts:31-58): status, engine, confidence, QR fields, error,
+    # processing_ms. The reference UPSERTS recognition rows, so this
+    # table mirrors extracted/'s idempotent layout: each record takes
+    # the bucket of the output spans that reference its blob and writes
+    # with per-bucket dynamic overwrite — a partial resume REPLACES
+    # exactly its re-processed buckets' records, never duplicating
+    # (the whole media table is re-extracted on resume, see
+    # _media_branch docstring, but unprocessed buckets' records stand).
+    ref_buckets = (
+        output.select("bucket", F.explode("spans").alias("s"))
+        .select("bucket", F.col("s.media_ref").alias("media_ref"))
+        .filter(F.col("media_ref").isNotNull())
+        .distinct()
+    )
+    recognitions = details_out[0].join(ref_buckets, "media_ref")
+    (
+        recognitions.withColumn("run_id", F.lit(cfg.run_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(f"{out_dir}/recognitions")
+    )
+
+    # lineage rows only after the bucket's data is written (crash-safe
+    # ordering): per bucket, docs/spans/OCR chars from the cached output
+    # and the p50/max per-blob kernel wall from its recognitions, in one
+    # aggregate over both (a bucket with no media keeps NULL kernel_ms).
     ocr_chars = F.aggregate(
         F.filter("spans", lambda s: s["kind"].isin("qr", "media_text")),
         F.lit(0).cast("long"),
         lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), F.lit(0)),
     )
+    per_doc = output.select(
+        "bucket",
+        F.lit(1).alias("docs"),
+        F.size("spans").alias("spans"),
+        ocr_chars.alias("ocr_chars"),
+        F.lit(None).cast("double").alias("ms"),
+    )
+    per_blob = recognitions.select(
+        "bucket",
+        F.lit(0).alias("docs"),
+        F.lit(0).alias("spans"),
+        F.lit(0).cast("long").alias("ocr_chars"),
+        F.col("processing_ms").alias("ms"),
+    )
     lineage = (
-        written.select("bucket", F.size("spans").alias("n_spans"), ocr_chars.alias("oc"))
+        per_doc.unionByName(per_blob)
         .groupBy("bucket")
         .agg(
-            F.count("*").alias("docs"),
-            F.sum("n_spans").alias("spans"),
-            F.sum("oc").alias("ocr_chars"),
+            F.sum("docs").alias("docs"),
+            F.sum("spans").alias("spans"),
+            F.sum("ocr_chars").alias("ocr_chars"),
+            F.median("ms").alias("kernel_ms_p50"),
+            F.max("ms").alias("kernel_ms_max"),
         )
         .select(
             F.lit(cfg.run_id).alias("run_id"),
@@ -121,12 +178,14 @@ def run_resumable(
             "docs",
             "spans",
             "ocr_chars",
-            F.lit(None).cast("double").alias("kernel_ms_p50"),
-            F.lit(None).cast("double").alias("kernel_ms_max"),
+            "kernel_ms_p50",
+            "kernel_ms_max",
             F.lit(1).alias("attempt"),
             F.lit(None).cast("string").alias("error"),
             F.current_timestamp().alias("completed_at"),
         )
+        # at most n_buckets rows: one checkpoint file per run
+        .coalesce(1)
     )
     if use_iceberg:
         from . import iceberg
@@ -135,63 +194,38 @@ def run_resumable(
     else:
         lineage.write.mode("append").parquet(ckpt_path)
 
-    # per-blob recognition records (reference recognition_results,
-    # schema.ts:31-58): status, engine, confidence, QR fields, error,
-    # processing_ms. The reference UPSERTS recognition rows, so this
-    # table mirrors extracted/'s idempotent layout: records join to
-    # their owning doc's bucket (a narrow text-sized join) and write
-    # with per-bucket dynamic overwrite — a partial resume REPLACES
-    # exactly its re-processed buckets' records, never duplicating
-    # (the whole media table is re-extracted on resume, see
-    # _media_branch docstring, but unprocessed buckets' records stand).
-    if details_out:
-        ref_buckets = (
-            todo.select("bucket", F.explode("spans").alias("s"))
-            .filter(F.col("s.kind") == "media")
-            .select("bucket", F.col("s.media_ref").alias("media_ref"))
-            .distinct()
-        )
-        (
-            details_out[0]
-            .join(ref_buckets, "media_ref")
-            .withColumn("run_id", F.lit(cfg.run_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(f"{out_dir}/recognitions")
-        )
-
     # per-OCR-partition metrics sideband (north rule: "lineage + per-
     # partition metrics (docs, spans, OCR chars, model latency)"): one
     # row per LPT media partition with its blob count, OCR chars and
     # kernel wall (p50/max/sum). The sum is the quantity the LPT cost
-    # packer balances, so max/avg over partitions is the measured
-    # straggler-balance evidence for this run. Cheap: the OCR results
-    # are persisted, so this action re-reads the cache, not the blobs.
-    metrics_rows = metrics.withColumn("run_id", F.lit(cfg.run_id))
-    metrics_rows.write.mode("append").parquet(f"{out_dir}/_metrics")
-    bal = (
-        metrics_rows.filter(F.col("kernel_ms_sum").isNotNull())
-        .agg(
+    # packer balances, so max/avg over partitions, observed on this
+    # write, is the measured straggler-balance evidence for this run.
+    # Cheap: the OCR results are persisted, so the write reads the
+    # cache, not the blobs.
+    balance = Observation("balance")
+    (
+        metrics.withColumn("run_id", F.lit(cfg.run_id))
+        .observe(
+            balance,
             F.max("kernel_ms_sum").alias("mx"),
             F.avg("kernel_ms_sum").alias("avg"),
-            F.count("*").alias("n"),
+            F.count("kernel_ms_sum").alias("n"),
         )
-        .collect()[0]
+        .write.mode("append")
+        .parquet(f"{out_dir}/_metrics")
     )
+    bal = balance.get
     ocr_balance = (
         round(float(bal["mx"]) / float(bal["avg"]), 3)
         if bal["n"] and bal["avg"]
         else None
     )
 
-    stats = todo.agg(
-        F.count("*").alias("d"), F.countDistinct("bucket").alias("b")
-    ).collect()[0]
-    release_persisted()  # all actions done — drop the run's OCR-result cache
+    stats = written.get
+    release_persisted()  # all actions done — drop the run's caches
     return {
-        "processed_docs": stats["d"],
-        "processed_buckets": stats["b"],
+        "processed_docs": stats["docs"],
+        "processed_buckets": stats["buckets"],
         "ocr_partitions": bal["n"],
         # max/avg of per-partition kernel wall: 1.0 = perfectly balanced
         "ocr_partition_balance": ocr_balance,

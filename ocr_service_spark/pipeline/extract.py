@@ -4,14 +4,16 @@ Batch re-expression of the reference worker hot path (SURVEY.md §3.2):
 the whole gateway→aligner→tesseract/paddle→Postgres dance becomes
 
     read → sort spans in-row → posexplode → (textual | media) branches
-         → union → groupBy(doc_id) ordered reassembly → write
+         → union → groupBy([bucket,] doc_id) ordered reassembly → write
 
 Blob bytes never shuffle. A file-backed media table is read directly by
 the python workers from parquet row-range atoms, LPT-packed by estimated
 decode cost into one bin per task; any other media frame takes the Arrow
 fallback on its own scan (see _media_branch). Only the narrow extraction
-result (media_ref, kind, text) joins the spans, and the final
-groupBy(doc_id) is the one document-sized shuffle.
+result (media_ref, kind, text) joins the spans, and the reassembly is the
+one document-sized shuffle. When the documents carry a ``bucket`` column
+(checkpoint.run_resumable), that shuffle hash-partitions on it into one
+partition per slot, which is also the bucketed write's layout.
 
 Span order is computed *inside the document row* (sort_array + posexplode)
 — no window, no extra shuffle, and the output is independent of partition
@@ -53,8 +55,15 @@ _MEDIA_RESULT_SCHEMA = (
 )
 
 
+def _doc_keys(df: DataFrame) -> list[str]:
+    """The document key every stage carries: (bucket, doc_id) when the
+    input has a bucket column, else doc_id alone."""
+    return ["bucket", "doc_id"] if "bucket" in df.columns else ["doc_id"]
+
+
 def prepare_spans(docs: DataFrame) -> DataFrame:
-    """(doc_id, spans) → one row per span with its final output order.
+    """(doc_id, spans) → one row per span with its final output order,
+    keyed by _doc_keys(docs).
 
     Order = position of the span when the doc's spans are sorted by
     `offset` — computed row-locally: re-root the struct on offset,
@@ -77,10 +86,11 @@ def prepare_spans(docs: DataFrame) -> DataFrame:
             ),
         )
     )
+    keys = _doc_keys(docs)
     return docs.select(
-        "doc_id", F.posexplode_outer(sorted_spans).alias("order", "s")
+        *keys, F.posexplode_outer(sorted_spans).alias("order", "s")
     ).select(
-        "doc_id",
+        *keys,
         F.col("order").cast("int").alias("order"),
         F.col("s.kind").alias("kind"),
         F.col("s.text").alias("text"),
@@ -117,7 +127,7 @@ def _textual_branch(spans: DataFrame) -> DataFrame:
         (F.col("kind") != "media") | F.col("kind").isNull()
     )
     return branch.select(
-        "doc_id",
+        *_doc_keys(spans),
         "order",
         F.when(F.col("kind").isNull(), F.lit(None).cast("string"))
         .otherwise(F.lit("text"))
@@ -519,6 +529,13 @@ def _bin_count(total_cost_ms: float, slots: int) -> int:
 _PERSISTED: list[DataFrame] = []
 
 
+def persist_for_run(df: DataFrame) -> DataFrame:
+    """Persist ``df`` until the run's actions complete (release_persisted)."""
+    df = df.persist()
+    _PERSISTED.append(df)
+    return df
+
+
 def release_persisted() -> None:
     """Unpersist every frame cached by prior run_extract calls. Call
     after the run's output/metrics actions complete; a long-lived session
@@ -567,8 +584,9 @@ def _media_branch(
     resume.useful_blob_ratio: 0.71 on extract_photo, 0.50 on
     extract_text).
     """
+    keys = _doc_keys(spans)
     media_spans = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "order", "media_ref"
+        *keys, "order", "media_ref"
     )
     spark = media.sparkSession
     splits = _direct_read_splits(media)
@@ -602,8 +620,7 @@ def _media_branch(
     # (text-sized cache; blob bytes are not retained). Registered so
     # long-lived sessions (bench.py runs many queries) can release the
     # cache once the run's actions complete (release_persisted).
-    results = results.persist()
-    _PERSISTED.append(results)
+    results = persist_for_run(results)
     res_spans = results.filter(F.col("row_type") == "span").select(
         "media_ref", "kind", "text"
     )
@@ -619,7 +636,7 @@ def _media_branch(
         "found_in_preprocessed", "error", "processing_ms", "attempt_number",
     )
     branch = media_spans.join(res_spans, "media_ref", "left").select(
-        "doc_id",
+        *keys,
         "order",
         # dangling media_ref (no blob row) → same failed-span shape the
         # kernel emits for an unreadable blob
@@ -643,7 +660,8 @@ def run_extract(
 ) -> tuple[DataFrame, DataFrame]:
     """Run the full pipeline. Returns (output, metrics):
 
-    output  — (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,order>>)
+    output  — (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,order>>),
+              led by the input's ``bucket`` when ``docs`` has one
     metrics — per-OCR-partition lineage rows (part_id, n_blobs, ocr_chars,
               kernel_ms_p50, kernel_ms_max, kernel_ms_sum)
 
@@ -653,14 +671,22 @@ def run_extract(
     schema.ts:31-58); run_resumable writes it as ``recognitions/``.
     """
     cfg = cfg or ExtractConfig()
+    keys = _doc_keys(docs)
     spans = prepare_spans(docs)
     media_rows, metrics, details = _media_branch(spans, media, cfg)
     if details_out is not None:
         details_out.append(details)
     span_rows = _textual_branch(spans).unionByName(media_rows)
+    if "bucket" in keys:
+        # the reassembly shuffle is the write layout: one partition per
+        # slot, each bucket whole in one of them, so every slot writes and
+        # each bucket stays one file. An explicit count (REPARTITION_BY_NUM)
+        # is not coalesced by AQE, which folded the text-sized shuffle into
+        # one task that wrote every bucket directory in turn.
+        span_rows = span_rows.repartition(spark.sparkContext.defaultParallelism, "bucket")
 
     output = (
-        span_rows.groupBy("doc_id")
+        span_rows.groupBy(*keys)
         .agg(
             F.sort_array(
                 F.collect_list(
@@ -674,7 +700,7 @@ def run_extract(
             ).alias("ordered")
         )
         .select(
-            "doc_id",
+            *keys,
             F.transform(
                 # drop empty-doc carrier rows (null kind): the doc keeps
                 # its output row with spans = []

@@ -2,16 +2,18 @@
 bin: the bins are placed by a ``spark.range`` with one id per partition
 (no Python partitioner shuffle, no RDD scan), and the bin count is a
 slot multiple unless the table has fewer packing atoms than that. The
-Arrow fallback spreads a one-split frame over every slot (ops.widen)."""
+Arrow fallback spreads a one-split frame over every slot (ops.widen).
+The reassembly of bucketed documents shuffles once, by bucket."""
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
 from ocr_service_spark.config import ExtractConfig
-from ocr_service_spark.pipeline.checkpoint import run_resumable
+from ocr_service_spark.pipeline.checkpoint import bucket_expr, run_resumable
 from ocr_service_spark.pipeline.extract import (
     ATOMS_PER_BIN,
     _atomize_splits,
@@ -22,6 +24,7 @@ from ocr_service_spark.pipeline.extract import (
     load_inputs,
     prepare_spans,
     release_persisted,
+    run_extract,
 )
 
 
@@ -61,6 +64,21 @@ def test_direct_read_plan_is_range_into_map_in_pandas(spark, dataset):
     assert "Range (" in plan
     assert "MapInPandas" in plan
     assert "ExistingRDD" not in plan
+
+
+def test_bucketed_reassembly_has_one_exchange_repartition_by_num_on_bucket(spark, dataset):
+    docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
+    bucketed = docs.withColumn("bucket", bucket_expr(8))
+    output, _ = run_extract(spark, bucketed, media, ExtractConfig())
+    try:
+        plan = output._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    finally:
+        release_persisted()
+    # shuffle exchanges only: the media results join by broadcast
+    shuffles = [ln for ln in plan.splitlines() if re.search(r"(?<!Broadcast)Exchange ", ln)]
+    assert len(shuffles) == 1, plan
+    assert "hashpartitioning(bucket#" in shuffles[0]
+    assert "REPARTITION_BY_NUM" in shuffles[0]
 
 
 def test_fallback_spreads_one_file_over_every_slot(spark, dataset):

@@ -5,10 +5,11 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_service_spark.config import ExtractConfig
-from ocr_service_spark.pipeline.checkpoint import read_output, run_resumable
+from ocr_service_spark.pipeline.checkpoint import bucket_expr, read_output, run_resumable
 from ocr_service_spark.pipeline.extract import load_inputs
 
 N_BUCKETS = 8
@@ -170,3 +171,102 @@ def test_recognitions_no_duplicates_on_partial_resume(spark, dataset, tmp_path):
     )
     assert dups == 0
     assert rec.count() == media.count()  # every blob recorded exactly once
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, dataset, tmp_path_factory):
+    """One first full run, shared by the layout and lineage tests below."""
+    data_dir = os.path.dirname(dataset["documents"])
+    docs, media = load_inputs(spark, data_dir)
+    out_dir = str(tmp_path_factory.mktemp("full") / "run")
+    run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id="full"), n_buckets=N_BUCKETS)
+    return out_dir
+
+
+def _data_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def test_write_layout_one_file_per_bucket_from_its_hash_slot(spark, full_run):
+    """The reassembly shuffle is the write layout: each bucket is whole in
+    one of defaultParallelism hash partitions, so every extracted/ bucket
+    directory holds one file, written by the task its partition names,
+    and a run appends one _checkpoint/ file."""
+    par = spark.sparkContext.defaultParallelism
+    out = f"{full_run}/extracted"
+    dirs = sorted(d for d in os.listdir(out) if d.startswith("bucket="))
+    assert len(dirs) == N_BUCKETS
+    slot = {
+        r["b"]: r["p"]
+        for r in spark.range(N_BUCKETS)
+        .select(
+            F.col("id").cast("int").alias("b"),
+            F.pmod(F.hash(F.col("id").cast("int")), F.lit(par)).alias("p"),
+        )
+        .collect()
+    }
+    for d in dirs:
+        files = _data_files(f"{out}/{d}")
+        assert len(files) == 1, (d, files)
+        assert files[0].startswith(f"part-{slot[int(d.split('=')[1])]:05d}-"), (d, files)
+    assert len(_data_files(f"{full_run}/_checkpoint")) == 1
+
+
+def test_checkpoint_rows_match_output_aggregates(spark, full_run):
+    ckpt = {
+        int(r["partition_key"]): r for r in spark.read.parquet(f"{full_run}/_checkpoint").collect()
+    }
+    ocr_chars = F.aggregate(
+        F.filter("spans", lambda s: s["kind"].isin("qr", "media_text")),
+        F.lit(0).cast("long"),
+        lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), F.lit(0)),
+    )
+    want = (
+        read_output(spark, full_run)
+        .groupBy(bucket_expr(N_BUCKETS).alias("bucket"))
+        .agg(
+            F.count("*").alias("docs"),
+            F.sum(F.size("spans")).alias("spans"),
+            F.sum(ocr_chars).alias("ocr_chars"),
+        )
+        .collect()
+    )
+    assert sorted(ckpt) == sorted(r["bucket"] for r in want)
+    for r in want:
+        row = ckpt[r["bucket"]]
+        assert (row["docs"], row["spans"], row["ocr_chars"]) == (
+            r["docs"], r["spans"], r["ocr_chars"]
+        ), r["bucket"]
+
+
+def test_checkpoint_kernel_columns_from_recognitions(spark, full_run):
+    """_checkpoint/'s kernel_ms_p50/kernel_ms_max summarize the bucket's
+    per-blob processing_ms from recognitions/; a bucket without media
+    keeps NULL."""
+    ckpt = {
+        int(r["partition_key"]): r for r in spark.read.parquet(f"{full_run}/_checkpoint").collect()
+    }
+    rec_max = {
+        r["bucket"]: r["mx"]
+        for r in spark.read.parquet(f"{full_run}/recognitions")
+        .groupBy("bucket")
+        .agg(F.max("processing_ms").alias("mx"))
+        .collect()
+    }
+    media_buckets = {
+        r["bucket"]
+        for r in spark.read.parquet(f"{full_run}/extracted")
+        .select("bucket", F.explode("spans").alias("s"))
+        .filter(F.col("s.media_ref").isNotNull())
+        .select("bucket")
+        .distinct()
+        .collect()
+    }
+    assert media_buckets and media_buckets == set(rec_max)
+    for b, row in ckpt.items():
+        if b not in media_buckets:
+            assert row["kernel_ms_p50"] is None and row["kernel_ms_max"] is None
+            continue
+        assert row["kernel_ms_p50"] is not None and row["kernel_ms_max"] is not None
+        assert row["kernel_ms_p50"] <= row["kernel_ms_max"]
+        assert row["kernel_ms_max"] == rec_max[b]
