@@ -156,7 +156,7 @@ def main(argv: list[str] | None = None) -> int:
         "processed_buckets": stats["processed_buckets"],
         "wall_sec": round(wall, 3),
         "docs_per_sec": round(stats["processed_docs"] / wall, 2) if wall > 0 else None,
-        # measured straggler balance: max/avg of per-LPT-partition kernel
+        # measured straggler balance: max/avg of per-media-partition kernel
         # wall from the _metrics sideband (1.0 = perfect; batch mode only)
         "ocr_partitions": stats.get("ocr_partitions"),
         "ocr_partition_balance": stats.get("ocr_partition_balance"),

@@ -87,23 +87,22 @@ def widen(df):
     extra shuffle only exists where it buys a ~#cores speedup.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
+    # if the plan already contains a wide step, its partitioning comes
+    # from the caller's repartition or spark.sql.shuffle.partitions
+    # (≥ parallelism in our sessions), so widening is a no-op — and for a
+    # file-backed frame the scan estimate below would not see that step
+    # and shuffle the rows a second time
+    try:
+        plan = df._jdf.queryExecution().analyzed().toString()
+    except Exception:
+        return df
+    if any(k in plan for k in ("Aggregate", "Join", "Window", "Deduplicate", "Repartition")):
+        return df
     est = estimated_scan_partitions(df)
     if est is None:
         # Non-file frame. df.rdd.getNumPartitions() forces an RDD
         # conversion of the whole plan — fine for the local/test-sized
-        # frames that reach here, a silent cost at scale. Guard: if the
-        # plan already contains a wide step, its partitioning comes from
-        # spark.sql.shuffle.partitions (≥ parallelism in our sessions),
-        # so widening is a no-op — skip the probe entirely.
-        try:
-            plan = df._jdf.queryExecution().analyzed().toString()
-        except Exception:
-            return df
-        if any(
-            k in plan
-            for k in ("Aggregate", "Join", "Window", "Deduplicate", "Repartition")
-        ):
-            return df
+        # frames that reach here, a silent cost at scale.
         # defensive cap (round-4 review): the getNumPartitions probe is
         # job-free (partition METADATA, no execution) but df.rdd still
         # compiles the whole plan to an RDD on the driver. Allow it only

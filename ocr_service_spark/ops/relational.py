@@ -1857,7 +1857,7 @@ EXTRA_ORACLES["touch_attribution"] = _ORACLE_ATTR
 # are the key groups? A max/avg ratio in the hundreds means a straggler
 # task (and the cost-balanced binning/AQE-skew-join treatment the
 # extraction pipeline already applies to decode costs —
-# pipeline/extract.py _lpt_pack); ~1 means the key shuffles clean. One map-side-combined count per key column, then
+# pipeline/extract.py _cut_bins); ~1 means the key shuffles clean. One map-side-combined count per key column, then
 # statistics-sized distribution math — the report costs one scan per
 # audited table regardless of corpus size. All outputs integer-exact:
 # discrete percentiles (percentile_disc, the media_size_stats

@@ -196,10 +196,11 @@ def run_resumable(
 
     # per-OCR-partition metrics sideband (north rule: "lineage + per-
     # partition metrics (docs, spans, OCR chars, model latency)"): one
-    # row per LPT media partition with its blob count, OCR chars and
-    # kernel wall (p50/max/sum). The sum is the quantity the LPT cost
-    # packer balances, so max/avg over partitions, observed on this
-    # write, is the measured straggler-balance evidence for this run.
+    # row per media partition with its blob count, OCR chars, kernel
+    # wall (p50/max/sum) and blob read wall. The kernel sum is the
+    # quantity the cost cut balances, so max/avg over partitions,
+    # observed on this write, is the measured straggler-balance evidence
+    # for this run.
     # Cheap: the OCR results are persisted, so the write reads the
     # cache, not the blobs.
     balance = Observation("balance")

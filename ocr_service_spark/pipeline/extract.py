@@ -7,11 +7,11 @@ the whole gateway→aligner→tesseract/paddle→Postgres dance becomes
          → union → groupBy([bucket,] doc_id) ordered reassembly → write
 
 Blob bytes never shuffle. A file-backed media table is read directly by
-the python workers from parquet row-range atoms, LPT-packed by estimated
-decode cost into one bin per task; any other media frame takes the Arrow
-fallback on its own scan (see _media_branch). Only the narrow extraction
-result (media_ref, kind, text) joins the spans, and the reassembly is the
-one document-sized shuffle. When the documents carry a ``bucket`` column
+the python workers, its rows cut in order into contiguous bins of
+near-equal estimated decode cost, one bin per task; any other media frame
+takes the Arrow fallback on its own scan (see _media_branch). Only the
+narrow extraction result (media_ref, kind, text) joins the spans, and the
+reassembly is the one document-sized shuffle. When the documents carry a ``bucket`` column
 (checkpoint.run_resumable), that shuffle hash-partitions on it into one
 partition per slot, which is also the bucketed write's layout.
 
@@ -23,6 +23,7 @@ count (SURVEY.md §7 hard part (b)).
 from __future__ import annotations
 
 import functools
+import itertools
 import math
 import os
 import time
@@ -47,7 +48,7 @@ _MEDIA_RESULT_SCHEMA = (
     "media_ref string, kind string, text string, row_type string, "
     "part_id int, n_blobs long, ocr_chars long, "
     "kernel_ms_p50 double, kernel_ms_max double, kernel_ms_sum double, "
-    "status string, engine string, confidence double, "
+    "read_ms_sum double, status string, engine string, confidence double, "
     "used_preprocessed boolean, qr_data string, qr_format string, "
     "qr_location struct<x:int,y:int,width:int,height:int>, "
     "found_in_preprocessed boolean, error string, processing_ms double, "
@@ -177,9 +178,10 @@ def _arrow_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
 
 def _split_blobs(bins: list, batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
     """Blob source of the direct read: rows are bin ids (spark.range) into
-    ``bins``, the LPT bins of parquet (path, row_group, row_lo, row_hi)
-    atoms (_lpt_pack), and the python worker reads the blob bytes itself
-    (pyarrow C++, GIL-released) so they never pass through the JVM heap.
+    ``bins``, the contiguous (path, row_group, row_lo, row_hi) cuts of
+    _cut_bins, and the python worker reads the blob bytes itself (pyarrow
+    C++, GIL-released) so they never pass through the JVM heap. A bin
+    opens each file once and decodes each row group it touches once.
     With the Arrow-transfer path, 2 GiB of blobs allocated through the JVM
     caused ~300 s of summed GC in one stage at 32 tasks; direct reads
     eliminate that entirely. At cluster scale the same code reads
@@ -188,37 +190,39 @@ def _split_blobs(bins: list, batches: Iterator[pd.DataFrame]) -> Iterator[tuple]
     import pyarrow.parquet as pq
 
     for pdf in batches:
-        work = [atom for i in pdf["id"] for atom in bins[i]]
-        for path, rg, row_lo, row_hi in work:
-            # stream the row group in bounded batches instead of
-            # materializing it whole: datagen writes 16-row groups,
-            # but an externally-written table with default-sized row
-            # groups would otherwise pull hundreds of MB of blobs
-            # into the python worker at once (the Arrow path is
-            # capped at 32 MiB/batch; 16 rows × the 10 MiB ingest
-            # gate bounds this path similarly). [row_lo, row_hi)
-            # selects this bin's packing atom within the group
-            # (_atomize_splits); rows outside it are skipped.
-            cursor = 0
-            for tbl in pq.ParquetFile(path).iter_batches(
-                batch_size=16, row_groups=[rg], columns=["media_ref", "content"]
-            ):
-                b_lo = max(row_lo - cursor, 0)
-                b_hi = min(row_hi - cursor, tbl.num_rows)
-                cursor += tbl.num_rows
-                if b_lo >= b_hi:
-                    if cursor >= row_hi:
-                        break
-                    continue
-                tbl = tbl.slice(b_lo, b_hi - b_lo)
-                yield tbl.column("media_ref").to_pylist(), tbl.column("content").to_pylist()
+        for i in pdf["id"]:
+            for path, ranges in itertools.groupby(bins[i], key=lambda r: r[0]):
+                pf = pq.ParquetFile(path)
+                for _, rg, row_lo, row_hi in ranges:
+                    yield from _read_rows(pf, rg, row_lo, row_hi)
+
+
+def _read_rows(pf, rg: int, row_lo: int, row_hi: int) -> Iterator[tuple]:
+    """(media_refs, blobs) of rows [row_lo, row_hi) of row group ``rg``,
+    in one decode of the group that stops at row_hi. The group streams in
+    bounded batches instead of materializing whole: datagen writes 16-row
+    groups, but an externally-written table with default-sized row groups
+    would otherwise pull hundreds of MB of blobs into the python worker
+    at once (the Arrow path is capped at 32 MiB/batch; 16 rows × the
+    10 MiB ingest gate bounds this path similarly)."""
+    cursor = 0
+    for tbl in pf.iter_batches(batch_size=16, row_groups=[rg], columns=["media_ref", "content"]):
+        b_lo = max(row_lo - cursor, 0)
+        b_hi = min(row_hi - cursor, tbl.num_rows)
+        cursor += tbl.num_rows
+        if b_lo < b_hi:
+            tbl = tbl.slice(b_lo, b_hi - b_lo)
+            yield tbl.column("media_ref").to_pylist(), tbl.column("content").to_pylist()
+        if cursor >= row_hi:
+            break
 
 
 def _make_media_fn(cfg: ExtractConfig, blob_batches):
     """mapInPandas function: extract every blob that ``blob_batches``
     (_arrow_blobs or _split_blobs) yields as (media_refs, blobs) from the
     task's input batches. Emits one span row per blob per batch, then one
-    metrics sideband row for the partition."""
+    metrics sideband row for the partition: its kernel wall, and the wall
+    spent waiting on ``blob_batches`` for the blobs (read_ms_sum)."""
     conf_low = cfg.confidence_low
     accepted = cfg.accepted_qr_formats
     aggressive = cfg.aggressive
@@ -235,7 +239,15 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches):
         n_blobs = 0
         ocr_chars = 0
         kernel_ms: list[float] = []
-        for refs, blobs in blob_batches(batches):
+        read_ms = 0.0
+        blob_iter = blob_batches(batches)
+        while True:
+            t0 = time.perf_counter()
+            item = next(blob_iter, None)
+            read_ms += (time.perf_counter() - t0) * 1000.0
+            if item is None:
+                break
+            refs, blobs = item
             texts, kinds = [], []
             details = {k: [] for k in _DETAIL_KEYS}
             for blob in blobs:
@@ -268,13 +280,15 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches):
                     "kernel_ms_p50": None,
                     "kernel_ms_max": None,
                     "kernel_ms_sum": None,
+                    "read_ms_sum": None,
                     **details,
                 }
             )
         # metrics sideband row — per-partition lineage (north rule), the
         # batch analog of the reference event stream (events/map.ts:16-43);
         # kernel_ms_sum is the partition's total model/kernel wall, the
-        # number the LPT cost packer balances (straggler evidence)
+        # number the cost cut balances (straggler evidence); read_ms_sum
+        # is the rest of the task's wait on its blob source
         ms = sorted(kernel_ms)
         yield pd.DataFrame(
             {
@@ -288,6 +302,7 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches):
                 "kernel_ms_p50": [ms[len(ms) // 2] if ms else None],
                 "kernel_ms_max": [ms[-1] if ms else None],
                 "kernel_ms_sum": [round(sum(ms), 3) if ms else None],
+                "read_ms_sum": [round(read_ms, 3)],
                 **{k: [None] for k in _DETAIL_KEYS},
             }
         )
@@ -297,9 +312,9 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches):
 
 # estimated decode cost model for a media split (ms): model inference is a
 # fixed per-image cost (the CNN runs at capped resolution regardless of
-# source size); decode + streaming image ops scale with bytes. Constants
-# measured on this container (~90 ms/inference, ~15 ms/MB streaming) —
-# only their RATIO matters for balancing.
+# source size); decode + streaming image ops scale with bytes. Both
+# constants are estimates, not measurements: only their RATIO places the
+# cuts (_cut_bins), and ROADMAP item 4 fits them to recorded kernel times.
 COST_MS_PER_ROW = 90.0
 COST_MS_PER_MB = 15.0
 # target estimated cost per bin: bins must hold seconds of work, because
@@ -447,76 +462,42 @@ def _direct_read_splits(media: DataFrame) -> list[tuple[str, int, int, int]] | N
     return splits or None
 
 
-# atoms per bin: row groups are cut into row ranges fine enough that LPT
-# has ~8 atoms per bin to balance with. Without sub-row-group atoms, a
-# table whose row-group count is close to the bin count degenerates to
-# one-group-per-bin — zero packing freedom, and the per-group cost
-# variance lands directly on the stage tail (measured: 107 groups vs
-# 128 bins at local[32] → max/avg 1.77 and a 3.3-wave straggler tail);
-# with atoms sized off the TARGET constant instead of the actual bin
-# cost, 2-3 atoms/bin still left a 1.6 max/avg last-atom quantization.
-ATOMS_PER_BIN = 8.0
-
-
-def _atomize_splits(
-    splits: list[tuple[str, int, int, int]], atom_cost_ms: float
-) -> list[tuple[float, str, int, int, int]]:
-    """Cut (path, row_group, bytes, rows) splits into (cost, path, rg,
-    row_lo, row_hi) packing atoms of ~atom_cost_ms estimated cost (floor:
-    one row). Rows within a group are assumed cost-uniform (the per-row
-    inference cost dominates; bytes prorate). Sub-group reads re-decode
-    the group's pages once per atom, and that is not cheap: on a 4-core
-    x86-64 VM, perfbench's photo corpus (two row groups of 16 and 8
-    rows, 34 MB) took 314-404 ms to read as one-row atoms against
-    27-58 ms for one read per group, while the kernels spend ~21 ms p50
-    per blob."""
-    atoms: list[tuple[float, str, int, int, int]] = []
-    for path, rg, nbytes, rows in splits:
-        cost = _split_cost_ms(rows, nbytes)
-        pieces = max(1, min(rows, int(cost // max(atom_cost_ms, 1e-6)) + 1))
-        base, extra = divmod(rows, pieces)
-        lo = 0
-        for p in range(pieces):
-            cnt = base + (1 if p < extra else 0)
-            if cnt == 0:
-                continue
-            atoms.append((cost * cnt / rows if rows else 0.0, path, rg, lo, lo + cnt))
-            lo += cnt
-    return atoms
-
-
-def _lpt_pack(
+def _cut_bins(
     splits: list[tuple[str, int, int, int]], n: int
 ) -> list[list[tuple[str, int, int, int]]]:
-    """Longest-processing-time-first bin packing into n bins by estimated
-    cost (_split_cost_ms), over sub-row-group atoms (_atomize_splits)
-    sized at ~1/ATOMS_PER_BIN of the ACTUAL expected bin cost (total/n);
-    returns each bin as a list of (path, row_group, row_lo, row_hi)."""
-    import heapq
+    """Cut the rows of the (path, row_group, bytes, rows) splits, in
+    order, into min(n, total rows) contiguous runs of near-equal
+    estimated cost (_split_cost_ms, spread evenly over a group's rows).
+    Returns each bin as (path, row_group, row_lo, row_hi) ranges, at most
+    one per row group, so a task decodes each row group it touches once.
 
-    total_cost = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits)
-    atom_ms = total_cost / max(n, 1) / ATOMS_PER_BIN
-    atoms = _atomize_splits(splits, atom_ms)
-    n = max(1, min(n, len(atoms)))
-    heap = [(0.0, i) for i in range(n)]  # (bin_cost, bin_idx)
+    A row goes to the bin its starting prefix cost falls in (k·total/n
+    boundaries), so no bin exceeds total/n plus one row's cost; a row
+    never skips a bin, and the tail takes one row per bin when only as
+    many rows are left as bins, so no bin is empty."""
+    left = sum(rows for *_, rows in splits)
+    n = max(1, min(n, left))
+    total = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits if rows)
     bins: list[list[tuple[str, int, int, int]]] = [[] for _ in range(n)]
-    packed = [0.0] * n
-    for cost, *atom in sorted(atoms, key=lambda s: -s[0]):
-        size, idx = heapq.heappop(heap)
-        bins[idx].append(tuple(atom))
-        packed[idx] = size + cost
-        heapq.heappush(heap, (size + cost, idx))
-    # heaviest bins first: partition index is (approximately) launch
-    # order, so descending cost = LPT list scheduling — when the bin
-    # count is not an exact slot multiple, the spill-over wave holds the
-    # CHEAPEST bins instead of random ones, bounding the tail
-    order = sorted(range(n), key=lambda i: (-packed[i], i))
-    return [bins[i] for i in order]
+    done = 0.0  # estimated cost of the rows already placed
+    k = 0
+    for path, rg, nbytes, rows in splits:
+        row_ms = _split_cost_ms(rows, nbytes) / rows if rows else 0.0
+        for row in range(rows):
+            k = min(k + 1, n - 1, max(k, int(done * n / total), n - left))
+            ranges = bins[k]
+            if ranges and ranges[-1][:2] == (path, rg):
+                ranges[-1] = (path, rg, ranges[-1][2], row + 1)
+            else:
+                ranges.append((path, rg, row, row + 1))
+            done += row_ms
+            left -= 1
+    return bins
 
 
 def _bin_count(total_cost_ms: float, slots: int) -> int:
     """Bin count for the direct read: ⌈total cost / TARGET_COST_MS_PER_BIN⌉
-    rounded UP to a slot multiple, capped at 4096. LPT makes bins
+    rounded UP to a slot multiple, capped at 4096. _cut_bins makes bins
     near-equal, so a remainder wave would idle (slots - remainder) cores
     for a full bin length (measured at 32 slots / 8000 docs: 136 bins =
     4.25 waves cost ~4.5 s of a 25 s ideal stage wall). A small job gets
@@ -558,12 +539,12 @@ def _media_branch(
     OCR cascade) runs in one mapInPandas function (_make_media_fn) fed by
     whichever blob source the media frame allows:
 
-    1. direct read — a bare parquet scan (_direct_read_splits): the
-       (file, row_group) splits are cut into row-range atoms and
-       LPT-packed by estimated decode cost into _bin_count bins on the
-       driver; a spark.range with one id per partition runs one bin per
-       task, and the python workers read the blob bytes themselves
-       (_split_blobs);
+    1. direct read — a bare parquet scan (_direct_read_splits): the rows
+       of the (file, row_group) splits are cut in order into _bin_count
+       contiguous bins of near-equal estimated decode cost on the driver
+       (_cut_bins); a spark.range with one id per partition runs one bin
+       per task, and the python workers read the blob bytes themselves,
+       one decode per row group per bin (_split_blobs);
     2. Arrow fallback — any other frame (in-memory, filtered, joined or
        non-parquet media): the frame's own scan (_arrow_blobs), which
        honors the caller's full logical plan, spread over every slot by
@@ -595,9 +576,9 @@ def _media_branch(
         # ESTIMATED COST (fixed inference cost per row + streaming cost
         # per byte — packing by bytes alone left equal-byte bins with 4×
         # different blob counts and a 4× straggler tail); blob bytes never
-        # enter the JVM. Splits are LPT-bin-packed into _bin_count bins.
+        # enter the JVM. The rows are cut into _bin_count contiguous bins.
         total_cost = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits)
-        bins = _lpt_pack(
+        bins = _cut_bins(
             splits, _bin_count(total_cost, spark.sparkContext.defaultParallelism)
         )
         # EXACTLY one bin per task: Range puts one id per partition when
@@ -626,7 +607,7 @@ def _media_branch(
     )
     metrics = results.filter(F.col("row_type") == "metrics").select(
         "part_id", "n_blobs", "ocr_chars",
-        "kernel_ms_p50", "kernel_ms_max", "kernel_ms_sum",
+        "kernel_ms_p50", "kernel_ms_max", "kernel_ms_sum", "read_ms_sum",
     )
     # full recognition record per blob (reference recognition_results,
     # schema.ts:31-58) — written by run_resumable as recognitions/
@@ -663,7 +644,7 @@ def run_extract(
     output  — (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,order>>),
               led by the input's ``bucket`` when ``docs`` has one
     metrics — per-OCR-partition lineage rows (part_id, n_blobs, ocr_chars,
-              kernel_ms_p50, kernel_ms_max, kernel_ms_sum)
+              kernel_ms_p50, kernel_ms_max, kernel_ms_sum, read_ms_sum)
 
     Pass a list as ``details_out`` to also receive the per-blob
     recognition record frame (status/engine/confidence/QR fields/error/

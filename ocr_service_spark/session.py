@@ -81,8 +81,9 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     if master is None:
         master = f"local[{cpus}]"
-    # local mode: ~cores, not the 200 default
-    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
+    # local mode: ~cores, not the 200 default; local[N,F] gives N threads
+    # and F task attempts
+    n = master[master.find("[") + 1 : master.find("]")].split(",")[0] if "[" in master else cpus
     shuffle_partitions = os.cpu_count() if n == "*" else int(n)
 
     builder = (

@@ -1,9 +1,11 @@
-"""The direct-read media stage runs exactly one non-empty task per LPT
-bin: the bins are placed by a ``spark.range`` with one id per partition
-(no Python partitioner shuffle, no RDD scan), and the bin count is a
-slot multiple unless the table has fewer packing atoms than that. The
-Arrow fallback spreads a one-split frame over every slot (ops.widen).
-The reassembly of bucketed documents shuffles once, by bucket."""
+"""The direct-read media stage runs exactly one non-empty task per bin
+of the cost cut (_cut_bins): the bins are placed by a ``spark.range``
+with one id per partition (no Python partitioner shuffle, no RDD scan),
+and the bin count is a slot multiple unless the table has fewer rows
+than that. The Arrow fallback spreads a one-split frame over every slot
+(ops.widen), and keeps the layout of a frame the caller already
+repartitioned. The reassembly of bucketed documents shuffles once, by
+bucket."""
 
 from __future__ import annotations
 
@@ -13,10 +15,9 @@ import re
 from pyspark.sql import functions as F
 
 from ocr_service_spark.config import ExtractConfig
+from ocr_service_spark.ops import widen
 from ocr_service_spark.pipeline.checkpoint import bucket_expr, run_resumable
 from ocr_service_spark.pipeline.extract import (
-    ATOMS_PER_BIN,
-    _atomize_splits,
     _bin_count,
     _direct_read_splits,
     _media_branch,
@@ -34,10 +35,9 @@ def test_one_nonempty_task_per_bin(spark, dataset, tmp_path):
     assert splits is not None  # precondition: the direct-read path runs
     par = spark.sparkContext.defaultParallelism
     total = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits)
-    n_bins = _bin_count(total, par)
-    n_atoms = len(_atomize_splits(splits, total / n_bins / ATOMS_PER_BIN))
-    expected = min(n_bins, n_atoms)
-    assert expected % par == 0 or expected == n_atoms
+    n_rows = sum(rows for *_, rows in splits)
+    expected = min(_bin_count(total, par), n_rows)
+    assert expected % par == 0 or expected == n_rows
 
     out_dir = str(tmp_path / "layout")
     run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id="lay"), n_buckets=4)
@@ -95,3 +95,11 @@ def test_fallback_spreads_one_file_over_every_slot(spark, dataset):
     assert len(rows) == par
     assert sorted(r["part_id"] for r in rows) == list(range(par))
     assert sum(r["n_blobs"] for r in rows) == media.count()
+
+
+def test_widen_keeps_a_repartitioned_file_frame(spark, dataset):
+    _, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
+    # a one-file frame the caller spread itself is not shuffled again
+    spread = media.repartition(2)
+    assert widen(spread) is spread
+    assert widen(media) is not media

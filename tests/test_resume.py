@@ -114,7 +114,8 @@ def test_metrics_sideband_written_with_balance(spark, dataset, tmp_path):
     """run_resumable persists the per-OCR-partition metrics sideband
     (north rule: "lineage + per-partition metrics (docs, spans, OCR
     chars, model latency)") and the job summary carries the measured
-    LPT straggler balance (max/avg of per-partition kernel wall)."""
+    straggler balance of the cost cut (max/avg of per-partition kernel
+    wall)."""
     data_dir = os.path.dirname(dataset["documents"])
     docs, media = load_inputs(spark, data_dir)
     out_dir = str(tmp_path / "metrics-run")
@@ -132,6 +133,8 @@ def test_metrics_sideband_written_with_balance(spark, dataset, tmp_path):
         | (F.col("kernel_ms_max") > F.col("kernel_ms_sum"))
     )
     assert bad.count() == 0
+    # every worked partition times its blob reads apart from its kernels
+    assert worked.filter(F.col("read_ms_sum").isNull() | (F.col("read_ms_sum") < 0)).count() == 0
     # balance = max/avg of kernel_ms_sum, >= 1.0 by construction
     assert s["ocr_partition_balance"] >= 1.0
     sums = [r["kernel_ms_sum"] for r in worked.collect()]
