@@ -1,4 +1,4 @@
-"""Media span kernel: decode → align → binarize → QR attempt → OCR cascade.
+"""Media span kernel: decode → align → QR attempt → binarize → OCR cascade.
 
 This is the batch re-expression of the reference worker's hot path
 (reference: services/gateway/src/services/processor.ts:57-260; SURVEY.md
@@ -693,8 +693,8 @@ def extract_media_span(
     warp_interp: str = "nearest",
     alignment_mode: str = "neural",
 ) -> dict:
-    """Full single-image extraction: validate → decode → align → binarize →
-    QR short-circuit → OCR cascade. Pure function of the blob bytes.
+    """Full single-image extraction: validate → decode → align → QR
+    short-circuit → binarize → OCR cascade. Pure function of the blob bytes.
 
     Q9 timeout guard: a soft monotonic deadline (default 30 s, the
     reference's per-engine-call OCR_ENGINE_TIMEOUT, config/index.ts:24)
@@ -841,9 +841,10 @@ def _extract_valid_media(
             warped = imageops.warp_perspective(img, corners, warp_interp)
     if _timed_out():
         return _failed(f"kernel timeout after {timeout_s:.0f}s (alignment)")
-    preprocessed = imageops.preprocess_for_ocr(warped, aggressive)  # P13
 
     # --- QR short-circuit (R7) ---
+    # binarize (P13) only where read: the SIMG QR check reads just its meta
+    preprocessed = None if meta else imageops.preprocess_for_ocr(warped, aggressive)
     if meta:
         qr = try_qr(meta, accepted_qr_formats)
     else:
@@ -861,6 +862,8 @@ def _extract_valid_media(
         }
 
     # --- OCR cascade (R6) ---
+    if preprocessed is None:
+        preprocessed = imageops.preprocess_for_ocr(warped, aggressive)
     if _timed_out():
         return _failed(f"kernel timeout after {timeout_s:.0f}s (pre-cascade)")
     try:

@@ -95,135 +95,137 @@ def run_resumable(
     if todo.limit(1).isEmpty():
         return {"processed_docs": 0, "processed_buckets": 0}
 
-    details_out: list = []
-    output, metrics = run_extract(spark, todo, media, cfg, details_out=details_out)
-    # everything after the write reads this cache, not the sink; it holds
-    # only todo buckets, so it needs no anti-join against the checkpoint
-    output = persist_for_run(output)
-    written = Observation("written")
-    observed = output.observe(
-        written,
-        F.count("*").alias("docs"),
-        F.size(F.collect_set("bucket")).alias("buckets"),
-    )
-    if use_iceberg:
-        from . import iceberg
-
-        iceberg.write_output(observed)
-    else:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        observed.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
-
-    # per-blob recognition records (reference recognition_results,
-    # schema.ts:31-58): status, engine, confidence, QR fields, error,
-    # processing_ms. The reference UPSERTS recognition rows, so this
-    # table mirrors extracted/'s idempotent layout: each record takes
-    # the bucket of the output spans that reference its blob and writes
-    # with per-bucket dynamic overwrite — a partial resume REPLACES
-    # exactly its re-processed buckets' records, never duplicating
-    # (the whole media table is re-extracted on resume, see
-    # _media_branch docstring, but unprocessed buckets' records stand).
-    ref_buckets = (
-        output.select("bucket", F.explode("spans").alias("s"))
-        .select("bucket", F.col("s.media_ref").alias("media_ref"))
-        .filter(F.col("media_ref").isNotNull())
-        .distinct()
-    )
-    recognitions = details_out[0].join(ref_buckets, "media_ref")
-    (
-        recognitions.withColumn("run_id", F.lit(cfg.run_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(f"{out_dir}/recognitions")
-    )
-
-    # lineage rows only after the bucket's data is written (crash-safe
-    # ordering): per bucket, docs/spans/OCR chars from the cached output
-    # and the p50/max per-blob kernel wall from its recognitions, in one
-    # aggregate over both (a bucket with no media keeps NULL kernel_ms).
-    ocr_chars = F.aggregate(
-        F.filter("spans", lambda s: s["kind"].isin("qr", "media_text")),
-        F.lit(0).cast("long"),
-        lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), F.lit(0)),
-    )
-    per_doc = output.select(
-        "bucket",
-        F.lit(1).alias("docs"),
-        F.size("spans").alias("spans"),
-        ocr_chars.alias("ocr_chars"),
-        F.lit(None).cast("double").alias("ms"),
-    )
-    per_blob = recognitions.select(
-        "bucket",
-        F.lit(0).alias("docs"),
-        F.lit(0).alias("spans"),
-        F.lit(0).cast("long").alias("ocr_chars"),
-        F.col("processing_ms").alias("ms"),
-    )
-    lineage = (
-        per_doc.unionByName(per_blob)
-        .groupBy("bucket")
-        .agg(
-            F.sum("docs").alias("docs"),
-            F.sum("spans").alias("spans"),
-            F.sum("ocr_chars").alias("ocr_chars"),
-            F.median("ms").alias("kernel_ms_p50"),
-            F.max("ms").alias("kernel_ms_max"),
+    # a run that raises drops its caches too, not at the next success
+    try:
+        output, metrics, records = run_extract(spark, todo, media, cfg)
+        # everything after the write reads this cache, not the sink; it holds
+        # only todo buckets, so it needs no anti-join against the checkpoint
+        output = persist_for_run(output)
+        written = Observation("written")
+        observed = output.observe(
+            written,
+            F.count("*").alias("docs"),
+            F.size(F.collect_set("bucket")).alias("buckets"),
         )
-        .select(
-            F.lit(cfg.run_id).alias("run_id"),
-            F.col("bucket").cast("string").alias("partition_key"),
-            F.lit("completed").alias("status"),
-            "docs",
-            "spans",
-            "ocr_chars",
-            "kernel_ms_p50",
-            "kernel_ms_max",
-            F.lit(1).alias("attempt"),
-            F.lit(None).cast("string").alias("error"),
-            F.current_timestamp().alias("completed_at"),
+        if use_iceberg:
+            from . import iceberg
+
+            iceberg.write_output(observed)
+        else:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            observed.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
+
+        # per-blob recognition records (reference recognition_results,
+        # schema.ts:31-58): status, engine, confidence, QR fields, error,
+        # processing_ms. The reference UPSERTS recognition rows, so this
+        # table mirrors extracted/'s idempotent layout: each record takes
+        # the bucket of the output spans that reference its blob and writes
+        # with per-bucket dynamic overwrite — a partial resume REPLACES
+        # exactly its re-processed buckets' records, never duplicating
+        # (the whole media table is re-extracted on resume, see
+        # _media_branch docstring, but unprocessed buckets' records stand).
+        ref_buckets = (
+            output.select("bucket", F.explode("spans").alias("s"))
+            .select("bucket", F.col("s.media_ref").alias("media_ref"))
+            .filter(F.col("media_ref").isNotNull())
+            .distinct()
         )
-        # at most n_buckets rows: one checkpoint file per run
-        .coalesce(1)
-    )
-    if use_iceberg:
-        from . import iceberg
-
-        iceberg.merge_checkpoint(lineage)
-    else:
-        lineage.write.mode("append").parquet(ckpt_path)
-
-    # per-OCR-partition metrics sideband (north rule: "lineage + per-
-    # partition metrics (docs, spans, OCR chars, model latency)"): one
-    # row per media partition with its blob count, OCR chars, kernel
-    # wall (p50/max/sum) and blob read wall. The kernel sum is the
-    # quantity the cost cut balances, so max/avg over partitions,
-    # observed on this write, is the measured straggler-balance evidence
-    # for this run.
-    # Cheap: the OCR results are persisted, so the write reads the
-    # cache, not the blobs.
-    balance = Observation("balance")
-    (
-        metrics.withColumn("run_id", F.lit(cfg.run_id))
-        .observe(
-            balance,
-            F.max("kernel_ms_sum").alias("mx"),
-            F.avg("kernel_ms_sum").alias("avg"),
-            F.count("kernel_ms_sum").alias("n"),
+        recognitions = records.join(ref_buckets, "media_ref")
+        (
+            recognitions.withColumn("run_id", F.lit(cfg.run_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(f"{out_dir}/recognitions")
         )
-        .write.mode("append")
-        .parquet(f"{out_dir}/_metrics")
-    )
-    bal = balance.get
-    ocr_balance = (
-        round(float(bal["mx"]) / float(bal["avg"]), 3)
-        if bal["n"] and bal["avg"]
-        else None
-    )
 
-    stats = written.get
-    release_persisted()  # all actions done — drop the run's caches
+        # lineage rows only after the bucket's data is written (crash-safe
+        # ordering): per bucket, docs/spans/OCR chars from the cached output
+        # and the p50/max per-blob kernel wall from its recognitions, in one
+        # aggregate over both (a bucket with no media keeps NULL kernel_ms).
+        ocr_chars = F.aggregate(
+            F.filter("spans", lambda s: s["kind"].isin("qr", "media_text")),
+            F.lit(0).cast("long"),
+            lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), F.lit(0)),
+        )
+        per_doc = output.select(
+            "bucket",
+            F.lit(1).alias("docs"),
+            F.size("spans").alias("spans"),
+            ocr_chars.alias("ocr_chars"),
+            F.lit(None).cast("double").alias("ms"),
+        )
+        per_blob = recognitions.select(
+            "bucket",
+            F.lit(0).alias("docs"),
+            F.lit(0).alias("spans"),
+            F.lit(0).cast("long").alias("ocr_chars"),
+            F.col("processing_ms").alias("ms"),
+        )
+        lineage = (
+            per_doc.unionByName(per_blob)
+            .groupBy("bucket")
+            .agg(
+                F.sum("docs").alias("docs"),
+                F.sum("spans").alias("spans"),
+                F.sum("ocr_chars").alias("ocr_chars"),
+                F.median("ms").alias("kernel_ms_p50"),
+                F.max("ms").alias("kernel_ms_max"),
+            )
+            .select(
+                F.lit(cfg.run_id).alias("run_id"),
+                F.col("bucket").cast("string").alias("partition_key"),
+                F.lit("completed").alias("status"),
+                "docs",
+                "spans",
+                "ocr_chars",
+                "kernel_ms_p50",
+                "kernel_ms_max",
+                F.lit(1).alias("attempt"),
+                F.lit(None).cast("string").alias("error"),
+                F.current_timestamp().alias("completed_at"),
+            )
+            # at most n_buckets rows: one checkpoint file per run
+            .coalesce(1)
+        )
+        if use_iceberg:
+            from . import iceberg
+
+            iceberg.merge_checkpoint(lineage)
+        else:
+            lineage.write.mode("append").parquet(ckpt_path)
+
+        # per-OCR-partition metrics sideband (north rule: "lineage + per-
+        # partition metrics (docs, spans, OCR chars, model latency)"): one
+        # row per media partition with its blob count, OCR chars, kernel
+        # wall (p50/max/sum) and blob read wall. The kernel sum is the
+        # quantity the cost cut balances, so max/avg over partitions,
+        # observed on this write, is the measured straggler-balance evidence
+        # for this run.
+        # Cheap: the OCR results are persisted, so the write reads the
+        # cache, not the blobs.
+        balance = Observation("balance")
+        (
+            metrics.withColumn("run_id", F.lit(cfg.run_id))
+            .observe(
+                balance,
+                F.max("kernel_ms_sum").alias("mx"),
+                F.avg("kernel_ms_sum").alias("avg"),
+                F.count("kernel_ms_sum").alias("n"),
+            )
+            .write.mode("append")
+            .parquet(f"{out_dir}/_metrics")
+        )
+        bal = balance.get
+        ocr_balance = (
+            round(float(bal["mx"]) / float(bal["avg"]), 3)
+            if bal["n"] and bal["avg"]
+            else None
+        )
+
+        stats = written.get
+    finally:
+        release_persisted()
     return {
         "processed_docs": stats["docs"],
         "processed_buckets": stats["buckets"],

@@ -26,6 +26,7 @@ import functools
 import itertools
 import math
 import os
+import statistics
 import time
 from typing import Iterator
 
@@ -40,19 +41,24 @@ from ..kernels.text import normalize_text
 from ..ops import widen
 
 # media extraction output: one row per BLOB (not per span) + a per-scan-
-# partition metrics sideband row
-# span rows double as the recognition_results-analog detail record
-# (reference schema.ts:31-58: status, engine, confidence,
-# used_preprocessed, qr fields, error, processing_time)
+# partition metrics sideband row. A span row is the blob's recognition
+# record (reference recognition_results, schema.ts:31-58: status, engine,
+# confidence, used_preprocessed, qr fields, error, processing_time), led
+# by the fields recognitions/ writes; the metrics row fills _METRIC_COLUMNS
 _MEDIA_RESULT_SCHEMA = (
-    "media_ref string, kind string, text string, row_type string, "
-    "part_id int, n_blobs long, ocr_chars long, "
-    "kernel_ms_p50 double, kernel_ms_max double, kernel_ms_sum double, "
-    "read_ms_sum double, status string, engine string, confidence double, "
-    "used_preprocessed boolean, qr_data string, qr_format string, "
+    "media_ref string, status string, kind string, text string, "
+    "engine string, confidence double, used_preprocessed boolean, "
+    "qr_data string, qr_format string, "
     "qr_location struct<x:int,y:int,width:int,height:int>, "
     "found_in_preprocessed boolean, error string, processing_ms double, "
-    "attempt_number int"
+    "attempt_number int, row_type string, part_id int, n_blobs long, "
+    "ocr_chars long, kernel_ms_p50 double, kernel_ms_max double, "
+    "kernel_ms_sum double, read_ms_sum double"
+)
+_MEDIA_RESULT_COLUMNS = [f.split(" ")[0] for f in _MEDIA_RESULT_SCHEMA.split(", ")]
+_METRIC_COLUMNS = (
+    "part_id", "n_blobs", "ocr_chars",
+    "kernel_ms_p50", "kernel_ms_max", "kernel_ms_sum", "read_ms_sum",
 )
 
 
@@ -142,33 +148,6 @@ def _textual_branch(spans: DataFrame) -> DataFrame:
 # media branch — scan-side extraction: blob bytes NEVER shuffle
 # --------------------------------------------------------------------------
 
-# per-blob recognition detail columns (recognition_results analog)
-_DETAIL_KEYS = (
-    "status", "engine", "confidence", "used_preprocessed", "qr_data",
-    "qr_format", "qr_location", "found_in_preprocessed", "error",
-    "processing_ms", "attempt_number",
-)
-
-
-def _append_detail(details: dict, res: dict, ms: float, attempt: int) -> None:
-    details["status"].append(res.get("status"))
-    details["engine"].append(res.get("engine"))
-    c = res.get("confidence")
-    details["confidence"].append(float(c) if c is not None else None)
-    details["used_preprocessed"].append(res.get("used_preprocessed"))
-    details["qr_data"].append(res.get("qr_data"))
-    details["qr_format"].append(res.get("qr_format"))
-    # the typed {x,y,width,height} struct the reference persists as
-    # jsonb (schema.ts:48) — dict → Arrow struct in the batch transfer
-    details["qr_location"].append(res.get("qr_location"))
-    details["found_in_preprocessed"].append(res.get("found_in_preprocessed"))
-    details["error"].append(res.get("error"))
-    details["processing_ms"].append(round(ms, 3))
-    # task attempt (1-based): spark.task.maxFailures is the BullMQ-retry
-    # analog, and the attempt lands in the record like schema.ts:53
-    details["attempt_number"].append(attempt)
-
-
 def _arrow_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
     """Blob source of the Arrow fallback: rows arrive as (media_ref,
     content) batches through the JVM."""
@@ -217,26 +196,27 @@ def _read_rows(pf, rg: int, row_lo: int, row_hi: int) -> Iterator[tuple]:
             break
 
 
+def _media_frame(rows: list[dict]) -> pd.DataFrame:
+    """One _MEDIA_RESULT_SCHEMA frame: each field filled from the row
+    dicts by name, null where a row does not set it."""
+    return pd.DataFrame({c: [r.get(c) for r in rows] for c in _MEDIA_RESULT_COLUMNS})
+
+
 def _make_media_fn(cfg: ExtractConfig, blob_batches):
     """mapInPandas function: extract every blob that ``blob_batches``
     (_arrow_blobs or _split_blobs) yields as (media_refs, blobs) from the
     task's input batches. Emits one span row per blob per batch, then one
     metrics sideband row for the partition: its kernel wall, and the wall
     spent waiting on ``blob_batches`` for the blobs (read_ms_sum)."""
-    conf_low = cfg.confidence_low
-    accepted = cfg.accepted_qr_formats
-    aggressive = cfg.aggressive
-    timeout_s = cfg.kernel_timeout_s
-    warp_interp = cfg.warp_interp
-    alignment_mode = cfg.alignment_mode
 
     def media_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx else -1
+        # task attempt (1-based): spark.task.maxFailures is the BullMQ-retry
+        # analog, and the attempt lands in the record like schema.ts:53
         attempt = (ctx.attemptNumber() + 1) if ctx else 1
-        n_blobs = 0
         ocr_chars = 0
         kernel_ms: list[float] = []
         read_ms = 0.0
@@ -247,64 +227,51 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches):
             read_ms += (time.perf_counter() - t0) * 1000.0
             if item is None:
                 break
-            refs, blobs = item
-            texts, kinds = [], []
-            details = {k: [] for k in _DETAIL_KEYS}
-            for blob in blobs:
+            rows = []
+            for ref, blob in zip(*item):
                 t0 = time.perf_counter()
                 res = extract_media_span(
                     bytes(blob) if blob is not None else None,
-                    conf_low,
-                    accepted,
-                    aggressive=aggressive,
-                    timeout_s=timeout_s,
-                    warp_interp=warp_interp,
-                    alignment_mode=alignment_mode,
+                    cfg.confidence_low,
+                    cfg.accepted_qr_formats,
+                    aggressive=cfg.aggressive,
+                    timeout_s=cfg.kernel_timeout_s,
+                    warp_interp=cfg.warp_interp,
+                    alignment_mode=cfg.alignment_mode,
                 )
                 ms = (time.perf_counter() - t0) * 1000.0
                 kernel_ms.append(ms)
-                kinds.append(res["kind"] if res["status"] == "completed" else "media_text")
-                texts.append(res.get("text"))
-                _append_detail(details, res, ms, attempt)
                 ocr_chars += len(res.get("text") or "")
-            n_blobs += len(refs)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "kind": kinds,
-                    "text": texts,
-                    "row_type": "span",
-                    "part_id": part_id,
-                    "n_blobs": None,
-                    "ocr_chars": None,
-                    "kernel_ms_p50": None,
-                    "kernel_ms_max": None,
-                    "kernel_ms_sum": None,
-                    "read_ms_sum": None,
-                    **details,
-                }
-            )
+                rows.append(
+                    {
+                        **res,
+                        "media_ref": ref,
+                        "row_type": "span",
+                        "part_id": part_id,
+                        "processing_ms": round(ms, 3),
+                        "attempt_number": attempt,
+                    }
+                )
+            yield _media_frame(rows)
         # metrics sideband row — per-partition lineage (north rule), the
         # batch analog of the reference event stream (events/map.ts:16-43);
         # kernel_ms_sum is the partition's total model/kernel wall, the
         # number the cost cut balances (straggler evidence); read_ms_sum
         # is the rest of the task's wait on its blob source
-        ms = sorted(kernel_ms)
-        yield pd.DataFrame(
-            {
-                "media_ref": [None],
-                "kind": [None],
-                "text": [None],
-                "row_type": ["metrics"],
-                "part_id": [part_id],
-                "n_blobs": [n_blobs],
-                "ocr_chars": [ocr_chars],
-                "kernel_ms_p50": [ms[len(ms) // 2] if ms else None],
-                "kernel_ms_max": [ms[-1] if ms else None],
-                "kernel_ms_sum": [round(sum(ms), 3) if ms else None],
-                "read_ms_sum": [round(read_ms, 3)],
-                **{k: [None] for k in _DETAIL_KEYS},
-            }
+        yield _media_frame(
+            [
+                {
+                    "row_type": "metrics",
+                    "part_id": part_id,
+                    "n_blobs": len(kernel_ms),
+                    "ocr_chars": ocr_chars,
+                    # interpolated, as _checkpoint/'s F.median
+                    "kernel_ms_p50": statistics.median(kernel_ms) if kernel_ms else None,
+                    "kernel_ms_max": max(kernel_ms, default=None),
+                    "kernel_ms_sum": round(sum(kernel_ms), 3) if kernel_ms else None,
+                    "read_ms_sum": round(read_ms, 3),
+                }
+            ]
         )
 
     return media_fn
@@ -533,7 +500,7 @@ def _media_branch(
     spans: DataFrame, media: DataFrame, cfg: ExtractConfig
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Returns (per-span branch rows, per-partition metrics, per-blob
-    recognition details).
+    recognition records: the span rows without row_type and _METRIC_COLUMNS).
 
     Blob bytes never cross the wire. Extraction (decode → align → QR →
     OCR cascade) runs in one mapInPandas function (_make_media_fn) fed by
@@ -602,20 +569,9 @@ def _media_branch(
     # long-lived sessions (bench.py runs many queries) can release the
     # cache once the run's actions complete (release_persisted).
     results = persist_for_run(results)
-    res_spans = results.filter(F.col("row_type") == "span").select(
-        "media_ref", "kind", "text"
-    )
-    metrics = results.filter(F.col("row_type") == "metrics").select(
-        "part_id", "n_blobs", "ocr_chars",
-        "kernel_ms_p50", "kernel_ms_max", "kernel_ms_sum", "read_ms_sum",
-    )
-    # full recognition record per blob (reference recognition_results,
-    # schema.ts:31-58) — written by run_resumable as recognitions/
-    details = results.filter(F.col("row_type") == "span").select(
-        "media_ref", "status", "kind", "text", "engine", "confidence",
-        "used_preprocessed", "qr_data", "qr_format", "qr_location",
-        "found_in_preprocessed", "error", "processing_ms", "attempt_number",
-    )
+    metrics = results.filter(F.col("row_type") == "metrics").select(*_METRIC_COLUMNS)
+    records = results.filter(F.col("row_type") == "span").drop("row_type", *_METRIC_COLUMNS)
+    res_spans = records.select("media_ref", "kind", "text")
     branch = media_spans.join(res_spans, "media_ref", "left").select(
         *keys,
         "order",
@@ -625,7 +581,7 @@ def _media_branch(
         "text",
         "media_ref",
     )
-    return branch, metrics, details
+    return branch, metrics, records
 
 
 # --------------------------------------------------------------------------
@@ -637,26 +593,22 @@ def run_extract(
     docs: DataFrame,
     media: DataFrame,
     cfg: ExtractConfig | None = None,
-    details_out: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Run the full pipeline. Returns (output, metrics):
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Run the full pipeline. Returns (output, metrics, records):
 
     output  — (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,order>>),
               led by the input's ``bucket`` when ``docs`` has one
     metrics — per-OCR-partition lineage rows (part_id, n_blobs, ocr_chars,
               kernel_ms_p50, kernel_ms_max, kernel_ms_sum, read_ms_sum)
-
-    Pass a list as ``details_out`` to also receive the per-blob
-    recognition record frame (status/engine/confidence/QR fields/error/
-    processing_ms — the reference's recognition_results analog,
-    schema.ts:31-58); run_resumable writes it as ``recognitions/``.
+    records — one recognition record per blob (status/engine/confidence/
+              QR fields/error/processing_ms/attempt_number — the
+              reference's recognition_results analog, schema.ts:31-58);
+              run_resumable writes it as ``recognitions/``
     """
     cfg = cfg or ExtractConfig()
     keys = _doc_keys(docs)
     spans = prepare_spans(docs)
-    media_rows, metrics, details = _media_branch(spans, media, cfg)
-    if details_out is not None:
-        details_out.append(details)
+    media_rows, metrics, records = _media_branch(spans, media, cfg)
     span_rows = _textual_branch(spans).unionByName(media_rows)
     if "bucket" in keys:
         # the reassembly shuffle is the write layout: one partition per
@@ -695,7 +647,7 @@ def run_extract(
             ).alias("spans"),
         )
     )
-    return output, metrics
+    return output, metrics, records
 
 
 def load_inputs(spark: SparkSession, data_dir: str) -> tuple[DataFrame, DataFrame]:

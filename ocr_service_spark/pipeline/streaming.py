@@ -119,7 +119,7 @@ def extract_stream_to_files(
             .distinct()
         )
         batch_media = media.join(F.broadcast(refs), "media_ref", "left_semi")
-        output, _metrics = run_extract(spark, batch_df, batch_media, cfg)
+        output, _, _ = run_extract(spark, batch_df, batch_media, cfg)
         (
             output.withColumn("batch_id", F.lit(batch_id))
             .withColumn("bucket", bucket_expr(n_buckets))

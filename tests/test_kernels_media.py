@@ -1,11 +1,15 @@
-"""Media kernel: codec, QR semantics, cascade gating (FIXTURES.md §5)."""
+"""Media kernel: codec, QR semantics, cascade gating, and the media task
+function that runs it over a batch of blobs (FIXTURES.md §5)."""
 
 from __future__ import annotations
 
+import statistics
+
 import numpy as np
+import pandas as pd
 import pytest
 
-from ocr_service_spark.config import MAX_MEDIA_BYTES
+from ocr_service_spark.config import MAX_MEDIA_BYTES, ExtractConfig
 from ocr_service_spark.kernels.media import (
     StubRecognizer,
     classify_qr_format,
@@ -15,6 +19,11 @@ from ocr_service_spark.kernels.media import (
     run_cascade,
     try_qr,
     validate_media,
+)
+from ocr_service_spark.pipeline.extract import (
+    _MEDIA_RESULT_COLUMNS,
+    _arrow_blobs,
+    _make_media_fn,
 )
 
 
@@ -157,6 +166,47 @@ def test_extract_media_ocr_path():
 def test_extract_media_invalid_blob_failed_status():
     res = extract_media_span(b"\x00\x01", 0.6, None)
     assert res["status"] == "failed" and res["text"] is None
+
+
+def test_media_task_fn_rows_and_metrics():
+    """The media task function without Spark: one span row per blob
+    carrying every result field, then the partition's metrics row."""
+    batch = pd.DataFrame(
+        {
+            "media_ref": ["ocr", "qr", "bad"],
+            "content": [
+                _blob(),
+                _blob(qr={"data": "https://r.example/1", "location": [1, 1, 9, 9]}),
+                b"GIF89a not a supported image",
+            ],
+        }
+    )
+    frames = list(_make_media_fn(ExtractConfig(), _arrow_blobs)(iter([batch])))
+    assert all(list(f.columns) == _MEDIA_RESULT_COLUMNS for f in frames)
+    assert len(frames[-1]) == 1
+    spans, metrics = pd.concat(frames[:-1], ignore_index=True), frames[-1].iloc[0]
+    assert list(spans["row_type"]) == ["span"] * 3
+    assert list(spans["media_ref"]) == ["ocr", "qr", "bad"]
+    by_ref = spans.set_index("media_ref")
+    assert by_ref.loc["ocr", "kind"] == "media_text"
+    assert by_ref.loc["ocr", "text"] == "alpha beta gamma"
+    assert by_ref.loc["ocr", "engine"] == "tesseract"
+    assert by_ref.loc["qr", "kind"] == "qr"
+    assert by_ref.loc["qr", "qr_format"] == "url"
+    assert by_ref.loc["bad", "status"] == "failed"
+    assert by_ref.loc["bad", "kind"] == "media_text"
+    assert by_ref.loc["bad", "error"] == "unsupported media type"
+    assert (spans["attempt_number"] == 1).all()
+    assert spans["processing_ms"].notna().all()
+
+    assert metrics["row_type"] == "metrics"
+    assert metrics["n_blobs"] == len(spans)
+    assert metrics["ocr_chars"] == sum(len(t or "") for t in spans["text"])
+    # processing_ms is rounded per blob, the sums and median are not
+    assert abs(metrics["kernel_ms_sum"] - sum(spans["processing_ms"])) < 0.01
+    assert metrics["kernel_ms_max"] >= metrics["kernel_ms_p50"] > 0
+    assert abs(metrics["kernel_ms_p50"] - statistics.median(spans["processing_ms"])) < 0.01
+    assert pd.isna(metrics["media_ref"]) and pd.isna(metrics["status"])
 
 
 def _truncated_pixels():

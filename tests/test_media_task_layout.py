@@ -69,7 +69,7 @@ def test_direct_read_plan_is_range_into_map_in_pandas(spark, dataset):
 def test_bucketed_reassembly_has_one_exchange_repartition_by_num_on_bucket(spark, dataset):
     docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
     bucketed = docs.withColumn("bucket", bucket_expr(8))
-    output, _ = run_extract(spark, bucketed, media, ExtractConfig())
+    output, _, _ = run_extract(spark, bucketed, media, ExtractConfig())
     try:
         plan = output._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     finally:

@@ -21,7 +21,7 @@ def _seqs(rows):
 @pytest.fixture(scope="module")
 def result(spark, dataset):
     docs, media = load_inputs(spark, __import__("os").path.dirname(dataset["documents"]))
-    out, metrics = run_extract(spark, docs, media)
+    out, metrics, _ = run_extract(spark, docs, media)
     return _seqs(out.collect()), metrics.collect(), spark.read.parquet(dataset["golden"])
 
 
@@ -63,7 +63,7 @@ def test_real_png_media_end_to_end(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("png-ds"))
     paths = ensure_dataset(out_dir, 24, seed=7, png_media=4)
     docs, media = load_inputs(spark, out_dir)
-    out, _ = run_extract(spark, docs, media)
+    out, _, _ = run_extract(spark, docs, media)
     got = _seqs(out.collect())
     golden = _seqs(spark.read.parquet(paths["golden"]).collect())
     assert got == golden
@@ -94,7 +94,7 @@ def test_color_png_media_end_to_end(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("pngc-ds"))
     paths = ensure_dataset(out_dir, 24, seed=7, png_media=4, png_color=2)
     docs, media = load_inputs(spark, out_dir)
-    out, _ = run_extract(spark, docs, media)
+    out, _, _ = run_extract(spark, docs, media)
     got = _seqs(out.collect())
     golden = _seqs(spark.read.parquet(paths["golden"]).collect())
     assert got == golden

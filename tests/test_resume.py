@@ -273,3 +273,49 @@ def test_checkpoint_kernel_columns_from_recognitions(spark, full_run):
         assert row["kernel_ms_p50"] is not None and row["kernel_ms_max"] is not None
         assert row["kernel_ms_p50"] <= row["kernel_ms_max"]
         assert row["kernel_ms_max"] == rec_max[b]
+
+
+def test_crash_before_checkpoint_append_reruns_idempotently(spark, dataset, tmp_path, monkeypatch):
+    """A run that dies after writing extracted/ and recognitions/ but
+    before appending _checkpoint/ leaves no checkpoint rows and no cached
+    frame; the rerun redoes every bucket and leaves no duplicates."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ocr_service_spark.pipeline import extract
+
+    data_dir = os.path.dirname(dataset["documents"])
+    docs, media = load_inputs(spark, data_dir)
+    out_dir = str(tmp_path / "crash")
+    parquet = DataFrameWriter.parquet
+
+    def crash_on_checkpoint(self, path, *a, **kw):
+        if path.endswith("/_checkpoint"):
+            raise RuntimeError("injected crash before the checkpoint append")
+        return parquet(self, path, *a, **kw)
+
+    jsc = spark.sparkContext._jsc
+    cached_before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_checkpoint)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id="c1"), n_buckets=N_BUCKETS)
+    monkeypatch.undo()
+    assert _data_files(f"{out_dir}/extracted/bucket=0")
+    assert spark.read.parquet(f"{out_dir}/recognitions").count() > 0
+    assert not os.path.exists(f"{out_dir}/_checkpoint")
+    # the failed run released what it cached
+    assert extract._PERSISTED == []
+    assert jsc.getPersistentRDDs().size() == cached_before
+
+    s = run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id="c2"), n_buckets=N_BUCKETS)
+    assert s["processed_buckets"] == N_BUCKETS
+    out = read_output(spark, out_dir)
+    assert out.count() == docs.count()
+    assert _seqs(out.collect()) == _seqs(spark.read.parquet(dataset["golden"]).collect())
+    out_path = f"{out_dir}/extracted"
+    for d in os.listdir(out_path):
+        if d.startswith("bucket="):
+            assert len(_data_files(f"{out_path}/{d}")) == 1, d
+    assert spark.read.parquet(f"{out_dir}/recognitions").count() == media.count()
+    ckpt = spark.read.parquet(f"{out_dir}/_checkpoint").collect()
+    assert sorted(int(r["partition_key"]) for r in ckpt) == list(range(N_BUCKETS))
+    assert {r["status"] for r in ckpt} == {"completed"}
