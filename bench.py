@@ -19,9 +19,9 @@ own evidence:
     their total in a separate `streaming` section, so harness time
     never inflates the engine headline or its variance.
 
-The extraction pipeline benches on the engine's own deterministic
-synthetic interleaved-document dataset (scaled off sf), reporting
-docs/sec and OCR chars/sec — the BASELINE.json headline metric.
+The checkpointed extraction job (run_resumable) benches on the engine's
+own deterministic synthetic interleaved-document dataset (scaled off
+sf), reporting docs/sec and OCR chars/sec — the BASELINE.json headline metric.
 Per-layer timings and N-vs-1-core scaling come from perfbench/run.py.
 """
 
@@ -150,11 +150,8 @@ def main() -> int:
     from ocr_service_spark import queries as registry
     from ocr_service_spark.config import ExtractConfig
     from ocr_service_spark.datagen import ensure_dataset
-    from ocr_service_spark.pipeline.extract import (
-        load_inputs,
-        release_persisted,
-        run_extract,
-    )
+    from ocr_service_spark.pipeline.checkpoint import read_output, run_resumable
+    from ocr_service_spark.pipeline.extract import load_inputs
     from ocr_service_spark.session import get_spark
     from probes import GEMM_REFERENCE_S, gemm_control
     from pyspark.sql import functions as F
@@ -203,18 +200,20 @@ def main() -> int:
     out_tmp = tempfile.mkdtemp(prefix="bench-extract-")
     extract_wall = None
     for trial in range(2):  # best-of-2, as for the queries
+        # the checkpointed job (read → extract → write → lineage), each
+        # trial into a fresh directory so it does all the work
+        out_dir = f"{out_tmp}/t{trial}"
         t0 = time.time()
-        output, metrics, _ = run_extract(
-            spark, docs, media, ExtractConfig(run_id=f"bench-{trial}")
-        )
-        output.write.mode("overwrite").parquet(f"{out_tmp}/extracted")
+        run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id=f"bench-{trial}"))
         wall = time.time() - t0
-        ocr_chars = metrics.agg(F.sum("ocr_chars")).collect()[0][0] or 0
-        release_persisted()
+        ocr_chars = (
+            spark.read.parquet(f"{out_dir}/_metrics").agg(F.sum("ocr_chars")).collect()[0][0]
+            or 0
+        )
         if extract_wall is None or wall < extract_wall:
             extract_wall = wall
     total_chars = (
-        spark.read.parquet(f"{out_tmp}/extracted")
+        read_output(spark, out_dir)
         .select(F.explode("spans").alias("s"))
         .agg(F.sum(F.length("s.text"))).collect()[0][0]
         or 0

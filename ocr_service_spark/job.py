@@ -63,7 +63,8 @@ def main(argv: list[str] | None = None) -> int:
         "--stream",
         action="store_true",
         help="run under Structured Streaming (readStream -> foreachBatch "
-        "-> exactly-once bucketed file sink) instead of the batch path",
+        "-> one checkpointed run per micro-batch under batches/) instead "
+        "of the batch path",
     )
     ap.add_argument(
         "--structure",
@@ -99,13 +100,13 @@ def main(argv: list[str] | None = None) -> int:
         require_iceberg(spark)  # fail fast with a clear message
     t0 = time.time()
     if args.stream:
-        from .pipeline.streaming import extract_stream_to_files, read_stream_output
+        from .pipeline.streaming import extract_stream_to_files
 
-        extract_stream_to_files(
+        summaries = extract_stream_to_files(
             spark, args.data_dir, args.out_dir, cfg, n_buckets=args.n_buckets
         )
-        n = read_stream_output(spark, args.out_dir).count()
-        stats = {"processed_docs": n, "processed_buckets": args.n_buckets}
+        keys = ("processed_docs", "processed_buckets")
+        stats = {k: sum(s[k] for s in summaries) for k in keys}
     else:
         docs, media = load_inputs(spark, args.data_dir)
         stats = run_resumable(

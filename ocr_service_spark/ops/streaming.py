@@ -46,28 +46,50 @@ def stage_fingerprint(src: str) -> str:
     ).hexdigest()[:16]
 
 
-def _staged_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events table (FileStreamSource requires a
-    directory — stage the single parquet file once)."""
-    schema = load(spark, sf_dir, "events").schema
+def staged_stream(
+    spark: SparkSession, src: str, name: str, parts: list | None = None
+) -> DataFrame:
+    """readStream over the parquet file ``src``, staged once as a directory
+    (FileStreamSource wants one). Each of ``parts``, filter Columns, is its
+    own file and micro-batch, in list order. The stage is built beside its
+    name and renamed into place: a crash mid-stage leaves no stage."""
+    import glob
+    import os
     import shutil
     import tempfile
-    import os
 
-    src = table_path(sf_dir, "events")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"stream-events-{stage_fingerprint(src)}"
-    )
-    os.makedirs(stage, exist_ok=True)
-    dst = os.path.join(stage, "events.parquet")
-    if not os.path.exists(dst):
-        shutil.copyfile(src, dst)
-    return (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        # parquet stores TIMESTAMP_NTZ; watermarks need an event-time zone
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    batch = spark.read.parquet(src)
+    stage = os.path.join(tempfile.gettempdir(), f"stage-{name}-{stage_fingerprint(src)}")
+    if not os.path.isdir(stage):
+        tmp = stage + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        try:
+            if parts is None:
+                shutil.copyfile(src, os.path.join(tmp, "part-0.parquet"))
+            for i, cond in enumerate(parts or []):
+                written = os.path.join(tmp, f"w{i}")
+                batch.filter(cond).coalesce(1).write.parquet(written)
+                shutil.copyfile(
+                    glob.glob(os.path.join(written, "part-*.parquet"))[0],
+                    os.path.join(tmp, f"part-{i}.parquet"),
+                )
+                shutil.rmtree(written)
+            os.rename(tmp, stage)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    reader = spark.readStream.schema(batch.schema)
+    if parts is not None:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return reader.parquet(stage)
+
+
+def _staged_events_stream(
+    spark: SparkSession, sf_dir: str, name: str = "events", parts: list | None = None
+) -> DataFrame:
+    stream = staged_stream(spark, table_path(sf_dir, "events"), name, parts)
+    # parquet stores TIMESTAMP_NTZ; watermarks need an event-time zone
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def _drain_to_df(spark: SparkSession, streaming_df, name: str, mode: str) -> DataFrame:
@@ -188,51 +210,15 @@ LATE_SPLIT_TS = "2024-01-08"  # deterministic batch boundary (event week 2)
 WATERMARK = "10 minutes"
 
 
-def _staged_two_batch_stream(spark: SparkSession, sf_dir: str):
-    """Stage the events table as TWO files processed as separate
-    micro-batches (maxFilesPerTrigger=1): early events (ts < split)
-    first, the rest second. The watermark advances between batches, so
-    second-batch events older than max(first batch ts) − 10 min are LATE
-    and get dropped in append mode — deterministically, because the
-    split rule is a pure function of the data."""
-    import os
-    import tempfile
-
-    src = table_path(sf_dir, "events")
-    batch = load(spark, sf_dir, "events")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"stream-events-2b-{stage_fingerprint(src)}"
-    )
-    if not os.path.exists(os.path.join(stage, "b1.parquet")):
-        os.makedirs(stage, exist_ok=True)
-        early = batch.filter(F.col("ts") < LATE_SPLIT_TS)
-        late = batch.filter(F.col("ts") >= LATE_SPLIT_TS)
-        # single files with deterministic names; written once
-        early.coalesce(1).write.mode("overwrite").parquet(stage + "-e")
-        late.coalesce(1).write.mode("overwrite").parquet(stage + "-l")
-        import glob
-        import shutil
-
-        shutil.copyfile(glob.glob(stage + "-e/part-*.parquet")[0],
-                        os.path.join(stage, "b0.parquet"))
-        shutil.copyfile(glob.glob(stage + "-l/part-*.parquet")[0],
-                        os.path.join(stage, "b1.parquet"))
-    return (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-
-
 def q_windowed_counts_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode windowed counts WITH watermark eviction: only windows
     closed by the watermark are emitted, and second-batch events that
     arrive more than 10 minutes behind the first batch's max timestamp
     are dropped as late — real Structured Streaming late-data semantics,
-    still DuckDB-oracle-checkable because the batch split is
-    deterministic (LATE_SPLIT_TS)."""
-    stream = _staged_two_batch_stream(spark, sf_dir)
+    still DuckDB-oracle-checkable because the split into two micro-batches
+    is deterministic (LATE_SPLIT_TS, early events first)."""
+    split = [F.col("ts") < LATE_SPLIT_TS, F.col("ts") >= LATE_SPLIT_TS]
+    stream = _staged_events_stream(spark, sf_dir, "events-2b", split)
     agg = (
         stream.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")

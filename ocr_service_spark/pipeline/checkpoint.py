@@ -25,7 +25,6 @@ aligner/src/observability/metrics.py:5-33).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-from pyspark.sql.utils import AnalysisException
 
 from ..config import ExtractConfig
 from .extract import persist_for_run, release_persisted, run_extract
@@ -47,12 +46,16 @@ def bucket_expr(n_buckets: int):
 
 
 def read_completed_buckets(spark: SparkSession, ckpt_path: str) -> DataFrame | None:
-    try:
-        ckpt = spark.read.parquet(ckpt_path)
-    except AnalysisException:
+    """Completed buckets, or None before the first checkpoint append (asked
+    of the file system: a failed read logs a stack trace). The schema
+    also reads a directory a crashed first append left without data."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(ckpt_path)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return None
     return (
-        ckpt.filter(F.col("status") == "completed")
+        spark.read.schema("partition_key string, status string")
+        .parquet(ckpt_path)
+        .filter(F.col("status") == "completed")
         .select(F.col("partition_key").cast("int").alias("bucket"))
         .distinct()
     )
@@ -112,8 +115,10 @@ def run_resumable(
 
             iceberg.write_output(observed)
         else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            observed.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
+            # write-scoped: a session conf misses docs of another session
+            # (a foreachBatch clone), whose static overwrite deletes done buckets
+            writer = observed.write.mode("overwrite").partitionBy("bucket")
+            writer.option("partitionOverwriteMode", "dynamic").parquet(out_path)
 
         # per-blob recognition records (reference recognition_results,
         # schema.ts:31-58): status, engine, confidence, QR fields, error,

@@ -1,10 +1,10 @@
 """Structured Streaming execution of the extraction pipeline.
 
-`extract_stream_to_files` drives the batch plan of `run_extract` —
-prepare_spans → kind-routed kernels → ordered reassembly — once per
-micro-batch of a ``readStream`` over the documents table: one pipeline
-for bounded and unbounded input. This is the live-ingest shape of the
-engine: new interleaved documents appear as files (or Iceberg snapshots /
+`extract_stream_to_files` commits each micro-batch of a ``readStream``
+over the documents table through `checkpoint.run_resumable`, the batch
+job's commit protocol and its four tables: one pipeline for bounded and
+unbounded input, a micro-batch being a bounded batch with its own commit
+unit. New interleaved documents appear as files (or Iceberg snapshots /
 Kafka batches) and extracted span rows stream out continuously.
 
 Documents are assumed complete within one micro-batch (the input is an
@@ -18,55 +18,11 @@ the media branch takes its Arrow source.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import ExtractConfig
-from .checkpoint import DEFAULT_BUCKETS, bucket_expr
-from .extract import run_extract
-
-
-def _staged_docs_stream(
-    spark: SparkSession, data_dir: str, n_parts: int = 1
-) -> DataFrame:
-    """readStream over the documents table (FileStreamSource wants a
-    directory — stage the parquet once). With n_parts > 1 the documents
-    split deterministically (hash of doc_id) into that many files and
-    maxFilesPerTrigger=1 makes each file its own micro-batch — the
-    multi-batch arrival shape."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from ..ops.streaming import stage_fingerprint
-
-    src = f"{data_dir}/documents.parquet"
-    batch_docs = spark.read.parquet(src)
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"stream-docs-{n_parts}-{stage_fingerprint(src)}",
-    )
-    if not glob.glob(os.path.join(stage, "part-*.parquet")):
-        os.makedirs(stage, exist_ok=True)
-        if n_parts == 1:
-            shutil.copyfile(src, os.path.join(stage, "part-0.parquet"))
-        else:
-            from pyspark.sql import functions as F
-
-            for i in range(n_parts):
-                part = batch_docs.filter(
-                    F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)) == i
-                ).coalesce(1)
-                tmp = stage + f"-w{i}"
-                part.write.mode("overwrite").parquet(tmp)
-                shutil.copyfile(
-                    glob.glob(tmp + "/part-*.parquet")[0],
-                    os.path.join(stage, f"part-{i}.parquet"),
-                )
-    reader = spark.readStream.schema(batch_docs.schema)
-    if n_parts > 1:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    return reader.parquet(stage)
+from ..ops.streaming import staged_stream
+from .checkpoint import DEFAULT_BUCKETS, run_resumable
 
 
 def extract_stream_to_files(
@@ -76,35 +32,30 @@ def extract_stream_to_files(
     cfg: ExtractConfig | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
     n_batches: int = 1,
-) -> None:
-    """Streaming sink: readStream over the documents table →
-    ``foreachBatch`` running the full BATCH extraction plan per
-    micro-batch → bucketed parquet, idempotently.
+) -> list[dict]:
+    """Streaming sink: readStream over the documents table (split by a
+    doc_id hash into ``n_batches`` micro-batches) → ``foreachBatch``
+    committing each micro-batch with ``run_resumable`` into
+    ``{out_dir}/batches/<id>``. Returns each micro-batch's summary.
 
-    Why foreachBatch instead of a streaming aggregation + file sink: the
-    input is an append-only table of COMPLETE documents (the reference's
-    one-job-per-finished-upload semantics, worker/processor.ts:8-115),
-    so each micro-batch is a self-contained batch job — ordered span
-    reassembly needs no cross-batch state, and nothing is ever collected
-    to the driver.
-
-    Exactly-once: output partitions by (batch_id, bucket) with dynamic
-    partition overwrite — a replayed micro-batch (after a crash, from
-    the streaming checkpoint) rewrites ONLY its own batch_id partitions,
-    byte-identically. The streaming checkpoint under
-    ``{out_dir}/_stream_checkpoint`` tracks consumed source files."""
-    from pyspark.sql import functions as F
-
-    from .extract import release_persisted
-
+    foreachBatch, not a streaming aggregation: the input is an
+    append-only table of COMPLETE documents (worker/processor.ts:8-115),
+    so each micro-batch is a self-contained batch job and nothing is
+    collected to the driver. A micro-batch replayed from the streaming
+    checkpoint (``{out_dir}/_stream_checkpoint``) keeps its id, so it
+    resumes as a batch run does: completed buckets are skipped."""
     cfg = cfg or ExtractConfig()
     media = spark.read.parquet(f"{data_dir}/media.parquet")
-    docs_stream = _staged_docs_stream(spark, data_dir, n_parts=n_batches)
-    out_path = f"{out_dir}/extracted"
+    parts = None
+    if n_batches > 1:
+        key = F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
+        parts = [key == i for i in range(n_batches)]
+    docs_stream = staged_stream(
+        spark, f"{data_dir}/documents.parquet", f"docs-{n_batches}", parts
+    )
+    summaries: list[dict] = []
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def commit(docs: DataFrame, epoch: int) -> None:
         # only OCR the blobs THIS batch references: without the semi-join
         # every micro-batch would extract the full static media table and
         # discard the unmatched rows in the span join — n batches × full-
@@ -113,36 +64,31 @@ def extract_stream_to_files(
         # the Iceberg scan); the media frame stops being a bare file scan,
         # so the branch takes the declarative Arrow path per batch.
         refs = (
-            batch_df.select(F.explode("spans").alias("s"))
+            docs.select(F.explode("spans").alias("s"))
             .select(F.col("s.media_ref").alias("media_ref"))
             .filter(F.col("media_ref").isNotNull())
             .distinct()
         )
         batch_media = media.join(F.broadcast(refs), "media_ref", "left_semi")
-        output, _, _ = run_extract(spark, batch_df, batch_media, cfg)
-        (
-            output.withColumn("batch_id", F.lit(batch_id))
-            .withColumn("bucket", bucket_expr(n_buckets))
-            # write-scoped dynamic overwrite: foreachBatch runs in a
-            # CLONED session, so a session-level conf set here would not
-            # reach the writer — the option always does. Static mode
-            # would wipe earlier batches' partitions on every write.
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "bucket")
-            .parquet(out_path)
-        )
-        release_persisted()
+        batch_dir = f"{out_dir}/batches/{epoch}"
+        summaries.append(run_resumable(spark, docs, batch_media, batch_dir, cfg, n_buckets))
 
     q = (
-        docs_stream.writeStream.foreachBatch(write_batch)
+        docs_stream.writeStream.foreachBatch(commit)
         .option("checkpointLocation", f"{out_dir}/_stream_checkpoint")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    return summaries
 
 
 def read_stream_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read the file-sink output back in the batch output shape."""
-    return spark.read.parquet(f"{out_dir}/extracted").drop("batch_id", "bucket")
+    """The micro-batches' extracted/ tables in the batch output shape. The
+    per-batch bucket layouts are not one partitioned table, so the files
+    are listed recursively, without partition columns; the batch paths are
+    listed, not globbed (a glob path logs a failed metadata-dir lookup)."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(f"{out_dir}/batches")
+    batches = root.getFileSystem(spark._jsc.hadoopConfiguration()).listStatus(root)
+    paths = [f"{b.getPath().toString()}/extracted" for b in batches]
+    return spark.read.option("recursiveFileLookup", "true").parquet(*paths)

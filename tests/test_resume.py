@@ -319,3 +319,50 @@ def test_crash_before_checkpoint_append_reruns_idempotently(spark, dataset, tmp_
     ckpt = spark.read.parquet(f"{out_dir}/_checkpoint").collect()
     assert sorted(int(r["partition_key"]) for r in ckpt) == list(range(N_BUCKETS))
     assert {r["status"] for r in ckpt} == {"completed"}
+
+
+def test_resume_from_another_session_keeps_every_document(spark, dataset, tmp_path):
+    """A resume whose documents belong to another session (as a
+    foreachBatch micro-batch does) overwrites only its own buckets: the
+    completed buckets' output survives, and the caller's session conf is
+    left as it was."""
+    data_dir = os.path.dirname(dataset["documents"])
+    docs, media = load_inputs(spark, data_dir)
+    out_dir = str(tmp_path / "other-session")
+    run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id="s1"), n_buckets=N_BUCKETS)
+    ckpt_path = f"{out_dir}/_checkpoint"
+    ckpt = spark.read.parquet(ckpt_path)
+    ckpt.filter(F.col("partition_key").cast("int") >= N_BUCKETS // 2).write.parquet(
+        f"{out_dir}/_ckpt_tmp"
+    )
+    spark.read.parquet(f"{out_dir}/_ckpt_tmp").write.mode("overwrite").parquet(ckpt_path)
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(key)
+    other_docs = spark.newSession().read.parquet(dataset["documents"])
+    s = run_resumable(
+        spark, other_docs, media, out_dir, ExtractConfig(run_id="s2"), n_buckets=N_BUCKETS
+    )
+    assert s["processed_buckets"] == N_BUCKETS // 2
+    assert spark.conf.get(key) == conf_before
+    got = _seqs(read_output(spark, out_dir).collect())
+    assert got == _seqs(spark.read.parquet(dataset["golden"]).collect())
+
+
+def test_missing_checkpoint_is_not_read(spark, tmp_path, monkeypatch):
+    """Before the first checkpoint append, read_completed_buckets answers
+    None from the file system, without a failing spark.read; a directory
+    without data files holds no completed bucket."""
+    from pyspark.sql import SparkSession
+
+    from ocr_service_spark.pipeline.checkpoint import read_completed_buckets
+
+    def no_read(self):
+        raise AssertionError("spark.read called for a missing checkpoint")
+
+    monkeypatch.setattr(SparkSession, "read", property(no_read))
+    assert read_completed_buckets(spark, str(tmp_path / "none" / "_checkpoint")) is None
+    monkeypatch.undo()
+    # a first append that died mid-write leaves only its _temporary/ dir
+    (tmp_path / "crashed" / "_checkpoint" / "_temporary").mkdir(parents=True)
+    assert read_completed_buckets(spark, str(tmp_path / "crashed" / "_checkpoint")).count() == 0
