@@ -204,12 +204,9 @@ def main() -> int:
         # trial into a fresh directory so it does all the work
         out_dir = f"{out_tmp}/t{trial}"
         t0 = time.time()
-        run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id=f"bench-{trial}"))
+        summary = run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id=f"bench-{trial}"))
         wall = time.time() - t0
-        ocr_chars = (
-            spark.read.parquet(f"{out_dir}/_metrics").agg(F.sum("ocr_chars")).collect()[0][0]
-            or 0
-        )
+        ocr_chars = summary["ocr_chars"]
         if extract_wall is None or wall < extract_wall:
             extract_wall = wall
     total_chars = (

@@ -102,11 +102,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.stream:
         from .pipeline.streaming import extract_stream_to_files
 
-        summaries = extract_stream_to_files(
+        stats = extract_stream_to_files(
             spark, args.data_dir, args.out_dir, cfg, n_buckets=args.n_buckets
         )
-        keys = ("processed_docs", "processed_buckets")
-        stats = {k: sum(s[k] for s in summaries) for k in keys}
     else:
         docs, media = load_inputs(spark, args.data_dir)
         stats = run_resumable(
@@ -153,14 +151,13 @@ def main(argv: list[str] | None = None) -> int:
         "run_id": cfg.run_id,
         "mode": "stream" if args.stream else "batch",
         "structured_spans": n_structured,
-        "processed_docs": stats["processed_docs"],
-        "processed_buckets": stats["processed_buckets"],
+        # run_resumable's summary on both paths: processed docs/buckets,
+        # ocr_chars (media chars over the written spans) and the measured
+        # straggler balance (max/avg per-media-partition kernel wall)
+        **stats,
         "wall_sec": round(wall, 3),
         "docs_per_sec": round(stats["processed_docs"] / wall, 2) if wall > 0 else None,
-        # measured straggler balance: max/avg of per-media-partition kernel
-        # wall from the _metrics sideband (1.0 = perfect; batch mode only)
-        "ocr_partitions": stats.get("ocr_partitions"),
-        "ocr_partition_balance": stats.get("ocr_partition_balance"),
+        "ocr_chars_per_sec": round(stats["ocr_chars"] / wall, 1) if wall > 0 else None,
         "out_dir": args.out_dir,
     }
     print(json.dumps(summary))

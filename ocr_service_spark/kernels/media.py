@@ -703,11 +703,12 @@ def extract_media_span(
     analog of asyncio.wait_for + BullMQ job failure). The
     spark.task.reaper conf in session.py is the hard backstop.
 
-    A blob past the validate_media gate can still be malformed in ways
-    no decoder checks (0×0 or 1-pixel-high frames, a non-dict ``qr``, a
-    short QR location): any exception from the kernels fails the span
-    with the exception's class in ``error``, never the task that holds
-    it.
+    A frame with no pixels fails at decode, with an ``error`` that names
+    the empty image. A blob past the validate_media gate can still be
+    malformed in ways no decoder checks (1-pixel-high frames, a non-dict
+    ``qr``, a short QR location): any exception from the kernels fails
+    the span with the exception's class in ``error``, never the task that
+    holds it.
 
     Returns a dict of the per-blob fields of extract.py's
     _MEDIA_RESULT_SCHEMA.
@@ -768,6 +769,10 @@ def _extract_valid_media(
             img = decoded
         meta = {}
         recognizer = recognizer or RealRecognizer()
+    if img.size == 0:
+        # the alignment front end takes means over the frame; the error
+        # reads as the guard in extract_media_span would name it
+        return _failed(f"ValueError: empty image: {img.shape[0]}x{img.shape[1]} pixels")
 
     # --- alignment (hybrid dispatch P12, reference hybrid.py:47-110) ---
     if bgr is not None:  # det_limit_side_len analog, channels in lockstep

@@ -9,13 +9,16 @@ with dynamic partition overwrite (idempotent re-write), and only then
 appends the bucket's lineage row. A crash between the two steps just
 re-does the bucket — byte-identical, no duplicates.
 
-A bucket's output and its lineage row are one commit unit, so nothing
-is read back from the sink. The reassembly shuffle already hash-
-partitions on bucket (extract.run_extract), so the write is one file per
-bucket from every slot; the written frame is persisted, and the
-processed counts, the buckets of the recognition records and the
-lineage rows all come from that cache. The counts and the OCR-partition
-balance are observed on the writes themselves (pyspark Observation).
+A bucket's output, its recognitions and its lineage row are one commit
+unit, built from one materialized result, so nothing is read back from
+the sink. The reassembly shuffle already hash-partitions on bucket
+(extract.run_extract), so the write is one file per bucket from every
+slot. run_resumable owns the run's caches: it persists the media task's
+results, the output and the bucketed recognitions, in that order, and
+releases them when it returns or raises. Every action after the write
+reads them, so OCR and the recognitions join each run once per run. The
+counts, the OCR chars and the OCR-partition balance are observed on the
+writes themselves (pyspark Observation).
 
 Checkpoint row layout follows FIXTURES.md §4 (the batch analog of the
 reference event stream, events/map.ts:1-60, and its prometheus metrics,
@@ -27,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import ExtractConfig
-from .extract import persist_for_run, release_persisted, run_extract
+from . import iceberg
+from .extract import run_extract, split_media_results
 
 # Size n_buckets so each bucket holds at least a few hundred documents:
 # buckets are the resume granularity AND the output file count (one file
@@ -78,17 +82,16 @@ def run_resumable(
     overwrite + append-lineage emulation; requires the iceberg-spark
     runtime on the classpath (job.py --catalog).
 
-    Returns {"processed_docs", "processed_buckets", "ocr_partitions",
-    "ocr_partition_balance"}; a run with nothing to do returns
-    {"processed_docs": 0, "processed_buckets": 0}.
+    Returns {"processed_docs", "processed_buckets", "ocr_chars" (media
+    chars over the written spans), "ocr_partitions",
+    "ocr_partition_balance"}; a run with nothing to do returns the same
+    keys with zero counts and no balance.
     """
     cfg = cfg or ExtractConfig()
     out_path = f"{out_dir}/extracted"
     ckpt_path = f"{out_dir}/_checkpoint"
 
     if use_iceberg:
-        from . import iceberg
-
         done = iceberg.completed_buckets(spark)
     else:
         done = read_completed_buckets(spark, ckpt_path)
@@ -96,23 +99,35 @@ def run_resumable(
     todo = docs_b.join(done, "bucket", "left_anti") if done is not None else docs_b
 
     if todo.limit(1).isEmpty():
-        return {"processed_docs": 0, "processed_buckets": 0}
+        return {"processed_docs": 0, "processed_buckets": 0, "ocr_chars": 0,
+                "ocr_partitions": 0, "ocr_partition_balance": None}
 
-    # a run that raises drops its caches too, not at the next success
+    output, results = run_extract(spark, todo, media, cfg)
+    metrics, records = split_media_results(results)
+    # the run's caches, released in reverse (dependents first) by the
+    # finally, so a run that raises drops them too
+    cached: list[DataFrame] = []
     try:
-        output, metrics, records = run_extract(spark, todo, media, cfg)
-        # everything after the write reads this cache, not the sink; it holds
-        # only todo buckets, so it needs no anti-join against the checkpoint
-        output = persist_for_run(output)
+        # the results before the output: a cached plan reads only the
+        # caches that existed when it was persisted. Everything after the
+        # write reads these, not the sink; the output holds only todo
+        # buckets, so it needs no anti-join against the checkpoint
+        cached.append(results.persist())
+        cached.append(output.persist())
+        # media chars per span, as the lineage rows count them
+        ocr_chars = F.aggregate(
+            F.filter("spans", lambda s: s["kind"].isin("qr", "media_text")),
+            F.lit(0).cast("long"),
+            lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), F.lit(0)),
+        )
         written = Observation("written")
         observed = output.observe(
             written,
-            F.count("*").alias("docs"),
-            F.size(F.collect_set("bucket")).alias("buckets"),
+            F.count("*").alias("processed_docs"),
+            F.size(F.collect_set("bucket")).alias("processed_buckets"),
+            F.sum(ocr_chars).alias("ocr_chars"),
         )
         if use_iceberg:
-            from . import iceberg
-
             iceberg.write_output(observed)
         else:
             # write-scoped: a session conf misses docs of another session
@@ -129,16 +144,19 @@ def run_resumable(
         # exactly its re-processed buckets' records, never duplicating
         # (the whole media table is re-extracted on resume, see
         # _media_branch docstring, but unprocessed buckets' records stand).
+        # Persisted: the lineage aggregate reads the same join.
         ref_buckets = (
             output.select("bucket", F.explode("spans").alias("s"))
             .select("bucket", F.col("s.media_ref").alias("media_ref"))
             .filter(F.col("media_ref").isNotNull())
             .distinct()
         )
-        recognitions = records.join(ref_buckets, "media_ref")
+        recognitions = records.join(ref_buckets, "media_ref").withColumn(
+            "run_id", F.lit(cfg.run_id)
+        )
+        cached.append(recognitions.persist())
         (
-            recognitions.withColumn("run_id", F.lit(cfg.run_id))
-            .write.mode("overwrite")
+            recognitions.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(f"{out_dir}/recognitions")
@@ -146,13 +164,9 @@ def run_resumable(
 
         # lineage rows only after the bucket's data is written (crash-safe
         # ordering): per bucket, docs/spans/OCR chars from the cached output
-        # and the p50/max per-blob kernel wall from its recognitions, in one
-        # aggregate over both (a bucket with no media keeps NULL kernel_ms).
-        ocr_chars = F.aggregate(
-            F.filter("spans", lambda s: s["kind"].isin("qr", "media_text")),
-            F.lit(0).cast("long"),
-            lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), F.lit(0)),
-        )
+        # and the p50/max per-blob kernel wall from its cached recognitions,
+        # in one aggregate over both (a bucket with no media keeps NULL
+        # kernel_ms).
         per_doc = output.select(
             "bucket",
             F.lit(1).alias("docs"),
@@ -194,8 +208,6 @@ def run_resumable(
             .coalesce(1)
         )
         if use_iceberg:
-            from . import iceberg
-
             iceberg.merge_checkpoint(lineage)
         else:
             lineage.write.mode("append").parquet(ckpt_path)
@@ -230,10 +242,10 @@ def run_resumable(
 
         stats = written.get
     finally:
-        release_persisted()
+        for df in reversed(cached):
+            df.unpersist()
     return {
-        "processed_docs": stats["docs"],
-        "processed_buckets": stats["buckets"],
+        **stats,
         "ocr_partitions": bal["n"],
         # max/avg of per-partition kernel wall: 1.0 = perfectly balanced
         "ocr_partition_balance": ocr_balance,

@@ -15,6 +15,10 @@ reassembly is the one document-sized shuffle. When the documents carry a ``bucke
 (checkpoint.run_resumable), that shuffle hash-partitions on it into one
 partition per slot, which is also the bucketed write's layout.
 
+run_extract only builds the plan and caches nothing: it returns the media
+task's result frame next to the output, and the caller that runs several
+actions over them (checkpoint.run_resumable) persists and releases both.
+
 Span order is computed *inside the document row* (sort_array + posexplode)
 — no window, no extra shuffle, and the output is independent of partition
 count (SURVEY.md §7 hard part (b)).
@@ -473,34 +477,21 @@ def _bin_count(total_cost_ms: float, slots: int) -> int:
     return min(4096, -(-raw // slots) * slots)
 
 
-# frames persisted by runs in this session, released via release_persisted()
-_PERSISTED: list[DataFrame] = []
-
-
-def persist_for_run(df: DataFrame) -> DataFrame:
-    """Persist ``df`` until the run's actions complete (release_persisted)."""
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def release_persisted() -> None:
-    """Unpersist every frame cached by prior run_extract calls. Call
-    after the run's output/metrics actions complete; a long-lived session
-    would otherwise accumulate one cached frame per run in executor
-    storage memory."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
+def split_media_results(results: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(metrics, records) of the media task's result frame: one metrics
+    row per media partition (_METRIC_COLUMNS), and one recognition record
+    per blob (its span rows without row_type and _METRIC_COLUMNS)."""
+    metrics = results.filter(F.col("row_type") == "metrics").select(*_METRIC_COLUMNS)
+    records = results.filter(F.col("row_type") == "span").drop("row_type", *_METRIC_COLUMNS)
+    return metrics, records
 
 
 def _media_branch(
     spans: DataFrame, media: DataFrame, cfg: ExtractConfig
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Returns (per-span branch rows, per-partition metrics, per-blob
-    recognition records: the span rows without row_type and _METRIC_COLUMNS).
+) -> tuple[DataFrame, DataFrame]:
+    """Returns (per-span branch rows, the media task's result frame: one
+    _MEDIA_RESULT_SCHEMA row per blob plus one metrics row per partition,
+    which split_media_results separates).
 
     Blob bytes never cross the wire. Extraction (decode → align → QR →
     OCR cascade) runs in one mapInPandas function (_make_media_fn) fed by
@@ -564,14 +555,7 @@ def _media_branch(
         results = widen(media.select("media_ref", "content")).mapInPandas(
             _make_media_fn(cfg, _arrow_blobs), schema=_MEDIA_RESULT_SCHEMA
         )
-    # persist the NARROW results so the metrics action does not re-run OCR
-    # (text-sized cache; blob bytes are not retained). Registered so
-    # long-lived sessions (bench.py runs many queries) can release the
-    # cache once the run's actions complete (release_persisted).
-    results = persist_for_run(results)
-    metrics = results.filter(F.col("row_type") == "metrics").select(*_METRIC_COLUMNS)
-    records = results.filter(F.col("row_type") == "span").drop("row_type", *_METRIC_COLUMNS)
-    res_spans = records.select("media_ref", "kind", "text")
+    res_spans = split_media_results(results)[1].select("media_ref", "kind", "text")
     branch = media_spans.join(res_spans, "media_ref", "left").select(
         *keys,
         "order",
@@ -581,7 +565,7 @@ def _media_branch(
         "text",
         "media_ref",
     )
-    return branch, metrics, records
+    return branch, results
 
 
 # --------------------------------------------------------------------------
@@ -593,22 +577,28 @@ def run_extract(
     docs: DataFrame,
     media: DataFrame,
     cfg: ExtractConfig | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Run the full pipeline. Returns (output, metrics, records):
+) -> tuple[DataFrame, DataFrame]:
+    """Build the full pipeline's plan; no Spark action runs and nothing is
+    cached here. Returns (output, results):
 
     output  — (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,order>>),
               led by the input's ``bucket`` when ``docs`` has one
-    metrics — per-OCR-partition lineage rows (part_id, n_blobs, ocr_chars,
-              kernel_ms_p50, kernel_ms_max, kernel_ms_sum, read_ms_sum)
-    records — one recognition record per blob (status/engine/confidence/
-              QR fields/error/processing_ms/attempt_number — the
-              reference's recognition_results analog, schema.ts:31-58);
-              run_resumable writes it as ``recognitions/``
+    results — the media task's result frame, which output reads and which
+              split_media_results splits into the per-OCR-partition
+              metrics rows (part_id, n_blobs, ocr_chars, kernel_ms_p50,
+              kernel_ms_max, kernel_ms_sum, read_ms_sum) and one
+              recognition record per blob (status/engine/confidence/QR
+              fields/error/processing_ms/attempt_number — the reference's
+              recognition_results analog, schema.ts:31-58)
+
+    A caller that runs more than one action over these persists
+    ``results`` before ``output`` (checkpoint.run_resumable), so every
+    action reads one OCR pass.
     """
     cfg = cfg or ExtractConfig()
     keys = _doc_keys(docs)
     spans = prepare_spans(docs)
-    media_rows, metrics, records = _media_branch(spans, media, cfg)
+    media_rows, results = _media_branch(spans, media, cfg)
     span_rows = _textual_branch(spans).unionByName(media_rows)
     if "bucket" in keys:
         # the reassembly shuffle is the write layout: one partition per
@@ -647,7 +637,7 @@ def run_extract(
             ).alias("spans"),
         )
     )
-    return output, metrics, records
+    return output, results
 
 
 def load_inputs(spark: SparkSession, data_dir: str) -> tuple[DataFrame, DataFrame]:

@@ -32,11 +32,13 @@ def extract_stream_to_files(
     cfg: ExtractConfig | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
     n_batches: int = 1,
-) -> list[dict]:
+) -> dict:
     """Streaming sink: readStream over the documents table (split by a
     doc_id hash into ``n_batches`` micro-batches) → ``foreachBatch``
     committing each micro-batch with ``run_resumable`` into
-    ``{out_dir}/batches/<id>``. Returns each micro-batch's summary.
+    ``{out_dir}/batches/<id>``. Returns run_resumable's summary over all
+    micro-batches: the counts summed, ``ocr_partition_balance`` the worst
+    micro-batch's.
 
     foreachBatch, not a streaming aggregation: the input is an
     append-only table of COMPLETE documents (worker/processor.ts:8-115),
@@ -80,7 +82,13 @@ def extract_stream_to_files(
         .start()
     )
     q.awaitTermination()
-    return summaries
+    total = {
+        k: sum(s[k] for s in summaries)
+        for k in ("processed_docs", "processed_buckets", "ocr_chars", "ocr_partitions")
+    }
+    balances = [s["ocr_partition_balance"] for s in summaries]
+    total["ocr_partition_balance"] = max((b for b in balances if b is not None), default=None)
+    return total
 
 
 def read_stream_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -41,7 +41,7 @@ def extract_pipeline_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes VARCHAR NULLs unpredictably."""
     data_dir = _entry_dataset_dir()
     docs, media = load_inputs(spark, data_dir)
-    output, _, _ = run_extract(spark, docs, media, ExtractConfig())
+    output, _ = run_extract(spark, docs, media, ExtractConfig())
     from pyspark.sql import functions as F
 
     # flatten for a stable, hashable shape

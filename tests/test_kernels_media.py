@@ -241,7 +241,8 @@ def test_malformed_simg_yields_failed_span_not_crash(make):
 @pytest.mark.parametrize(
     "blob, exc_name",
     [
-        (_blob(w=0, h=0, quad=False), "IndexError"),
+        # no pixels: fails at decode, before the kernels
+        (_blob(w=0, h=0, quad=False), "ValueError"),
         (_blob(w=1, h=1, quad=False), "LinAlgError"),
         (_blob(w=4000, h=1, quad=False), "LinAlgError"),
         (_blob(qr="x"), "AttributeError"),
@@ -251,8 +252,9 @@ def test_malformed_simg_yields_failed_span_not_crash(make):
 )
 def test_simg_that_decodes_but_breaks_a_kernel_fails_its_span(blob, exc_name):
     """SIMG blobs that pass the gate AND decode, then raise inside the
-    alignment or QR kernels, fail their span with the exception's class
-    in the error instead of killing the task that holds them."""
+    alignment or QR kernels (or hold no pixels), fail their span with the
+    exception's class in the error instead of killing the task that holds
+    them."""
     assert validate_media(blob) is None  # precondition: past the gate
     decode_simg(blob)  # precondition: decodes
     res = extract_media_span(blob, 0.6, None)

@@ -10,7 +10,7 @@ import pytest
 
 from ocr_service_spark.config import ExtractConfig
 from ocr_service_spark.kernels.media import encode_simg
-from ocr_service_spark.pipeline.extract import run_extract
+from ocr_service_spark.pipeline.extract import run_extract, split_media_results
 
 
 def _mk_blob(lines, conf=0.9):
@@ -56,7 +56,8 @@ def _collect_spans(output):
 def test_fallback_path_used_for_inmemory_media(spark, frames):
     docs, media = frames
     assert media.inputFiles() == []  # precondition: not file-backed
-    output, metrics, _ = run_extract(spark, docs, media, ExtractConfig())
+    output, results = run_extract(spark, docs, media, ExtractConfig())
+    metrics, _ = split_media_results(results)
     got = _collect_spans(output)
     # d1: media span (order 0, offset 0) then text span (order 1)
     assert got["d1"][0] == ("media_text", "alpha beta", "m1", 0)
@@ -75,7 +76,7 @@ def test_empty_spans_doc_survives(spark, frames):
     media = spark.createDataFrame(
         [], "media_ref string, content binary, file_size int"
     )
-    output, _, _ = run_extract(spark, docs, media, ExtractConfig())
+    output, _ = run_extract(spark, docs, media, ExtractConfig())
     got = _collect_spans(output)
     assert got["empty"] == []
     assert got["nullspans"] == []
@@ -84,7 +85,7 @@ def test_empty_spans_doc_survives(spark, frames):
 
 def test_dangling_media_ref_yields_failed_span(spark, frames):
     docs, media = frames
-    output, _, _ = run_extract(spark, docs, media, ExtractConfig())
+    output, _ = run_extract(spark, docs, media, ExtractConfig())
     got = _collect_spans(output)
     # no blob row for ref GONE → media_text span with null text, order kept
     assert got["d2"] == [("media_text", None, "GONE", 0)]
@@ -100,7 +101,7 @@ def test_filtered_media_frame_honors_plan(spark, dataset):
     media = spark.read.parquet(dataset["media"])
     some_ref = media.select("media_ref").first()["media_ref"]
     filtered = media.filter(F.col("media_ref") != some_ref)
-    output, _, _ = run_extract(spark, docs, filtered, ExtractConfig())
+    output, _ = run_extract(spark, docs, filtered, ExtractConfig())
     spans = _collect_spans(output)
     hits = [
         s
@@ -121,8 +122,8 @@ def test_direct_and_fallback_paths_agree(spark, dataset):
 
     docs = spark.read.parquet(dataset["documents"])
     media = spark.read.parquet(dataset["media"])
-    direct, _, _ = run_extract(spark, docs, media, ExtractConfig())
-    fallback, _, _ = run_extract(
+    direct, _ = run_extract(spark, docs, media, ExtractConfig())
+    fallback, _ = run_extract(
         spark, docs, media.filter(F.col("media_ref").isNotNull()), ExtractConfig()
     )
     assert _collect_spans(direct) == _collect_spans(fallback)

@@ -6,11 +6,18 @@ from __future__ import annotations
 
 import json
 import re
+import warnings
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
-from ocr_service_spark.kernels.media import SIMG_MAGIC, extract_media_span
+from ocr_service_spark.kernels.media import (
+    SIMG_MAGIC,
+    encode_png_gray,
+    encode_simg,
+    extract_media_span,
+)
 
 # "[context: ]ExceptionClass: message", or a soft-deadline timeout
 _NAMED_FAILURE = re.compile(r"(^|: )[A-Z]\w*(Error|Exception|Exit|Interrupt|Warning): |timeout")
@@ -92,3 +99,20 @@ def test_simg_fuzz_returns_a_span_never_raises(blob, accepted):
         assert _NAMED_FAILURE.search(res["error"]), res["error"]
     else:
         assert res["error"] is None
+
+
+@pytest.mark.parametrize("shape", [(0, 0), (0, 12), (12, 0)])
+@pytest.mark.parametrize("codec", ["simg", "png"])
+def test_zero_pixel_image_fails_at_decode(shape, codec):
+    """A frame with no pixels fails its span at decode, naming the empty
+    image, before the alignment front end warns on an empty mean."""
+    pixels = np.zeros(shape, np.uint8)
+    if codec == "simg":
+        blob = encode_simg({"h": shape[0], "w": shape[1]}, pixels)
+    else:
+        blob = encode_png_gray(pixels)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        res = extract_media_span(blob, 0.6, None)
+    assert res["status"] == "failed" and res["text"] is None
+    assert res["error"] == f"ValueError: empty image: {shape[0]}x{shape[1]} pixels"

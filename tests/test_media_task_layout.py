@@ -24,8 +24,8 @@ from ocr_service_spark.pipeline.extract import (
     _split_cost_ms,
     load_inputs,
     prepare_spans,
-    release_persisted,
     run_extract,
+    split_media_results,
 )
 
 
@@ -55,12 +55,8 @@ def test_one_nonempty_task_per_bin(spark, dataset, tmp_path):
 
 def test_direct_read_plan_is_range_into_map_in_pandas(spark, dataset):
     docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
-    _, metrics, _ = _media_branch(prepare_spans(docs), media, ExtractConfig())
-    try:
-        # the persisted results' plan is printed under InMemoryRelation
-        plan = metrics._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    finally:
-        release_persisted()
+    _, results = _media_branch(prepare_spans(docs), media, ExtractConfig())
+    plan = results._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     assert "Range (" in plan
     assert "MapInPandas" in plan
     assert "ExistingRDD" not in plan
@@ -69,11 +65,8 @@ def test_direct_read_plan_is_range_into_map_in_pandas(spark, dataset):
 def test_bucketed_reassembly_has_one_exchange_repartition_by_num_on_bucket(spark, dataset):
     docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
     bucketed = docs.withColumn("bucket", bucket_expr(8))
-    output, _, _ = run_extract(spark, bucketed, media, ExtractConfig())
-    try:
-        plan = output._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    finally:
-        release_persisted()
+    output, _ = run_extract(spark, bucketed, media, ExtractConfig())
+    plan = output._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     # shuffle exchanges only: the media results join by broadcast
     shuffles = [ln for ln in plan.splitlines() if re.search(r"(?<!Broadcast)Exchange ", ln)]
     assert len(shuffles) == 1, plan
@@ -86,11 +79,8 @@ def test_fallback_spreads_one_file_over_every_slot(spark, dataset):
     # a filter makes the frame non-bare: the Arrow fallback over one file
     filtered = media.filter(F.col("media_ref").isNotNull())
     assert _direct_read_splits(filtered) is None
-    _, metrics, _ = _media_branch(prepare_spans(docs), filtered, ExtractConfig())
-    try:
-        rows = metrics.collect()
-    finally:
-        release_persisted()
+    _, results = _media_branch(prepare_spans(docs), filtered, ExtractConfig())
+    rows = split_media_results(results)[0].collect()
     par = spark.sparkContext.defaultParallelism
     assert len(rows) == par
     assert sorted(r["part_id"] for r in rows) == list(range(par))

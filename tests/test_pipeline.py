@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from ocr_service_spark.pipeline.extract import load_inputs, run_extract
+from ocr_service_spark.pipeline.extract import load_inputs, run_extract, split_media_results
 
 
 def _seqs(rows):
@@ -21,7 +21,8 @@ def _seqs(rows):
 @pytest.fixture(scope="module")
 def result(spark, dataset):
     docs, media = load_inputs(spark, __import__("os").path.dirname(dataset["documents"]))
-    out, metrics, _ = run_extract(spark, docs, media)
+    out, results = run_extract(spark, docs, media)
+    metrics, _ = split_media_results(results)
     return _seqs(out.collect()), metrics.collect(), spark.read.parquet(dataset["golden"])
 
 
@@ -63,7 +64,7 @@ def test_real_png_media_end_to_end(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("png-ds"))
     paths = ensure_dataset(out_dir, 24, seed=7, png_media=4)
     docs, media = load_inputs(spark, out_dir)
-    out, _, _ = run_extract(spark, docs, media)
+    out, _ = run_extract(spark, docs, media)
     got = _seqs(out.collect())
     golden = _seqs(spark.read.parquet(paths["golden"]).collect())
     assert got == golden
@@ -94,7 +95,7 @@ def test_color_png_media_end_to_end(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("pngc-ds"))
     paths = ensure_dataset(out_dir, 24, seed=7, png_media=4, png_color=2)
     docs, media = load_inputs(spark, out_dir)
-    out, _, _ = run_extract(spark, docs, media)
+    out, _ = run_extract(spark, docs, media)
     got = _seqs(out.collect())
     golden = _seqs(spark.read.parquet(paths["golden"]).collect())
     assert got == golden
@@ -113,3 +114,14 @@ def test_color_png_media_end_to_end(spark, tmp_path_factory):
         m = meta[t["media_ref"]]
         assert m["width"] == t["width"] and m["height"] == t["height"]
         assert abs(m["mean_brightness"] - t["mean_brightness"]) < 1e-6
+
+
+def test_query_path_leaves_no_cache(spark):
+    """The flagship extraction query builds the plan only: after
+    its collect, no persisted frame is left in the session."""
+    from ocr_service_spark.queries import extract_pipeline_query
+
+    jsc = spark.sparkContext._jsc
+    cached_before = jsc.getPersistentRDDs().size()
+    assert extract_pipeline_query(spark, "").collect()
+    assert jsc.getPersistentRDDs().size() == cached_before

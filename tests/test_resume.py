@@ -37,7 +37,13 @@ def test_resume_processes_only_complement(spark, dataset, tmp_path):
 
     # second run: checkpoint says complete → no work
     s2 = run_resumable(spark, docs, media, out_dir, cfg, n_buckets=N_BUCKETS)
-    assert s2 == {"processed_docs": 0, "processed_buckets": 0}
+    assert s2 == {
+        "processed_docs": 0,
+        "processed_buckets": 0,
+        "ocr_chars": 0,
+        "ocr_partitions": 0,
+        "ocr_partition_balance": None,
+    }
 
     # sabotage: drop half the checkpoint rows (simulates dying mid-run)
     ckpt_path = f"{out_dir}/_checkpoint"
@@ -119,9 +125,17 @@ def test_metrics_sideband_written_with_balance(spark, dataset, tmp_path):
     data_dir = os.path.dirname(dataset["documents"])
     docs, media = load_inputs(spark, data_dir)
     out_dir = str(tmp_path / "metrics-run")
+    jsc = spark.sparkContext._jsc
+    cached_before = jsc.getPersistentRDDs().size()
     s = run_resumable(
         spark, docs, media, out_dir, ExtractConfig(run_id="m1"), n_buckets=N_BUCKETS
     )
+    # the run released every frame it cached
+    assert jsc.getPersistentRDDs().size() == cached_before
+    # the summary's OCR chars are the lineage rows' (media chars per span)
+    ckpt = spark.read.parquet(f"{out_dir}/_checkpoint")
+    ckpt_chars = ckpt.agg(F.sum("ocr_chars")).collect()[0][0]
+    assert s["ocr_chars"] == ckpt_chars > 0
     m = spark.read.parquet(f"{out_dir}/_metrics").filter(F.col("run_id") == "m1")
     worked = m.filter(F.col("kernel_ms_sum").isNotNull())
     assert worked.count() == s["ocr_partitions"] > 0
@@ -275,13 +289,23 @@ def test_checkpoint_kernel_columns_from_recognitions(spark, full_run):
         assert row["kernel_ms_max"] == rec_max[b]
 
 
+def test_media_task_runs_once_per_run(spark, full_run):
+    """recognitions/ and _metrics/ read one OCR pass: each blob's
+    processing_ms, summed, equals the partitions' kernel_ms_sum up to
+    their 3-decimal rounding. A second pass would time every blob anew."""
+    rec = spark.read.parquet(f"{full_run}/recognitions").dropDuplicates(["media_ref"])
+    rec_ms, blobs = rec.agg(F.sum("processing_ms"), F.count("*")).collect()[0]
+    m = spark.read.parquet(f"{full_run}/_metrics").filter(F.col("kernel_ms_sum").isNotNull())
+    metrics_ms, tasks = m.agg(F.sum("kernel_ms_sum"), F.count("*")).collect()[0]
+    assert blobs > 0 and tasks > 0
+    assert abs(rec_ms - metrics_ms) <= 1e-3 * (blobs + tasks), (rec_ms, metrics_ms)
+
+
 def test_crash_before_checkpoint_append_reruns_idempotently(spark, dataset, tmp_path, monkeypatch):
     """A run that dies after writing extracted/ and recognitions/ but
     before appending _checkpoint/ leaves no checkpoint rows and no cached
     frame; the rerun redoes every bucket and leaves no duplicates."""
     from pyspark.sql.readwriter import DataFrameWriter
-
-    from ocr_service_spark.pipeline import extract
 
     data_dir = os.path.dirname(dataset["documents"])
     docs, media = load_inputs(spark, data_dir)
@@ -303,7 +327,6 @@ def test_crash_before_checkpoint_append_reruns_idempotently(spark, dataset, tmp_
     assert spark.read.parquet(f"{out_dir}/recognitions").count() > 0
     assert not os.path.exists(f"{out_dir}/_checkpoint")
     # the failed run released what it cached
-    assert extract._PERSISTED == []
     assert jsc.getPersistentRDDs().size() == cached_before
 
     s = run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id="c2"), n_buckets=N_BUCKETS)

@@ -28,10 +28,13 @@ def test_streaming_file_sink_multibatch_exactly_once(spark, dataset, tmp_path):
 
     data_dir = os.path.dirname(dataset["documents"])
     out_dir = str(tmp_path / "stream-mb")
-    extract_stream_to_files(spark, data_dir, out_dir, n_batches=3)
+    summary = extract_stream_to_files(spark, data_dir, out_dir, n_batches=3)
     got = _seqs(read_stream_output(spark, out_dir).collect())
     golden = _seqs(spark.read.parquet(dataset["golden"]).collect())
     assert got == golden
+    # one summary over the micro-batches, in the batch job's shape
+    assert summary["processed_docs"] == len(golden)
+    assert summary["ocr_partitions"] > 0
     # each micro-batch committed through run_resumable: one completed
     # _checkpoint/ row per bucket it wrote
     batches = sorted(os.listdir(f"{out_dir}/batches"))
@@ -55,7 +58,8 @@ def test_streaming_file_sink_multibatch_exactly_once(spark, dataset, tmp_path):
     )
     assert n_stream == spark.read.parquet(f"{batch_dir}/recognitions").count()
     # replay with the same checkpoint: source files already consumed
-    extract_stream_to_files(spark, data_dir, out_dir, n_batches=3)
+    replay = extract_stream_to_files(spark, data_dir, out_dir, n_batches=3)
+    assert replay["processed_docs"] == 0
     again = _seqs(read_stream_output(spark, out_dir).collect())
     assert again == golden  # no duplicates appeared
 
