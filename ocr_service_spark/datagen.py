@@ -365,11 +365,6 @@ def generate(
     pq.write_table(media_tbl, paths["media"], row_group_size=16)
     pq.write_table(golden_tbl, paths["golden"], row_group_size=256)
     pq.write_table(truth_tbl, paths["media_truth"], row_group_size=256)
-    # split manifest for the media table: O(1) driver-side split planning
-    # (the parquet-side analog of Iceberg manifests)
-    from .pipeline.extract import write_split_manifest
-
-    write_split_manifest(paths["media"])
     return paths
 
 

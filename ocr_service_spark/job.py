@@ -12,8 +12,10 @@ tests/test_spark_submit.py drives the real spark-submit binary through
 this path from a neutral cwd and golden-checks the output.
 
 Reads documents.parquet + media.parquet from --data-dir, runs the
-checkpointed extraction pipeline, writes extracted/ + _checkpoint/ under
---out-dir, prints a one-line JSON summary.
+checkpointed extraction pipeline, writes its four tables under --out-dir
+(extracted/, recognitions/, _checkpoint/ and _metrics/; under --stream
+one set per micro-batch in batches/<id>/), prints a one-line JSON
+summary.
 """
 
 from __future__ import annotations

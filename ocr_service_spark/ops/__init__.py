@@ -76,6 +76,28 @@ def estimated_scan_partitions(df) -> int | None:
     return max(1, -(-total // max(1, mpb)))
 
 
+_WIDE_STEPS = ("Aggregate", "Join", "Window", "Deduplicate", "Repartition")
+
+
+def _has_wide_step(node) -> bool:
+    """True when a wide step (_WIDE_STEPS) lies under the analyzed plan
+    ``node`` and may set its output partitioning. A join with one side
+    broadcast-hinted keeps the other side's partitioning and shuffles
+    neither, so only that side is searched."""
+    children = [node.children().apply(i) for i in range(node.children().size())]
+    if node.nodeName() == "Join":
+        streamed = [c for c in children if not _is_broadcast_hint(c)]
+        if len(streamed) == 1:
+            return _has_wide_step(streamed[0])
+    return any(k in node.nodeName() for k in _WIDE_STEPS) or any(
+        _has_wide_step(c) for c in children
+    )
+
+
+def _is_broadcast_hint(node) -> bool:
+    return node.nodeName() == "ResolvedHint" and "broadcast" in node.hints().toString()
+
+
 def widen(df):
     """Spread a narrow scan across all cores before CPU-heavy per-row
     expressions.
@@ -93,10 +115,11 @@ def widen(df):
     # file-backed frame the scan estimate below would not see that step
     # and shuffle the rows a second time
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
+        analyzed = df._jdf.queryExecution().analyzed()
+        if _has_wide_step(analyzed):
+            return df
+        plan = analyzed.toString()
     except Exception:
-        return df
-    if any(k in plan for k in ("Aggregate", "Join", "Window", "Deduplicate", "Repartition")):
         return df
     est = estimated_scan_partitions(df)
     if est is None:

@@ -50,15 +50,25 @@ def bucket_expr(n_buckets: int):
 
 
 def read_completed_buckets(spark: SparkSession, ckpt_path: str) -> DataFrame | None:
-    """Completed buckets, or None before the first checkpoint append (asked
-    of the file system: a failed read logs a stack trace). The schema
-    also reads a directory a crashed first append left without data."""
+    """Completed buckets, or None before the first checkpoint append.
+    Asked of the file system, which also lists the data files: they are
+    read by path, because Spark's reader skips (and warns about) a
+    directory whose name starts with ``_``. A directory a crashed first
+    append left without data files holds no completed bucket."""
     path = spark._jvm.org.apache.hadoop.fs.Path(ckpt_path)
-    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
         return None
+    files = [
+        st.getPath().toString()
+        for st in fs.listStatus(path)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    ]
+    if not files:
+        return spark.createDataFrame([], "bucket int")
     return (
         spark.read.schema("partition_key string, status string")
-        .parquet(ckpt_path)
+        .parquet(*files)
         .filter(F.col("status") == "completed")
         .select(F.col("partition_key").cast("int").alias("bucket"))
         .distinct()

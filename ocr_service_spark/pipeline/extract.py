@@ -167,9 +167,9 @@ def _split_blobs(bins: list, batches: Iterator[pd.DataFrame]) -> Iterator[tuple]
     opens each file once and decodes each row group it touches once.
     With the Arrow-transfer path, 2 GiB of blobs allocated through the JVM
     caused ~300 s of summed GC in one stage at 32 tasks; direct reads
-    eliminate that entirely. At cluster scale the same code reads
-    object-store URIs (pyarrow/fsspec) — the standard layout for
-    binary-heavy inference pipelines."""
+    eliminate that entirely. The paths are local files (_direct_read_splits
+    strips only a ``file://`` scheme); an object-store table would need a
+    pyarrow filesystem here."""
     import pyarrow.parquet as pq
 
     for pdf in batches:
@@ -316,29 +316,49 @@ SPLIT_MANIFEST_NAME = "_split_manifest.parquet"
 _FOOTER_READ_THREADS = 16
 
 
+def _footer_splits(paths: list[str]) -> list[tuple[str, int, int, int]]:
+    """(path, row_group, bytes, rows) of every row group of the parquet
+    files ``paths``, read from their footers on a thread pool (metadata
+    only, GIL-released pyarrow C++): bounded wall even at thousands of
+    files, where a serial loop stalls a 10^12-doc listing."""
+    import concurrent.futures as cf
+
+    import pyarrow.parquet as pq
+
+    def footer(path: str) -> list[tuple[str, int, int, int]]:
+        meta = pq.ParquetFile(path).metadata
+        return [
+            (path, rg, meta.row_group(rg).total_byte_size, meta.row_group(rg).num_rows)
+            for rg in range(meta.num_row_groups)
+        ]
+
+    with cf.ThreadPoolExecutor(max_workers=_FOOTER_READ_THREADS) as ex:
+        return [split for part in ex.map(footer, paths) for split in part]
+
+
 def write_split_manifest(table_path: str) -> str:
-    """Write the split manifest for a parquet table path (file or dir):
-    one row per (file, row_group) with exact byte/row stats — the
-    parquet-side analog of Iceberg's manifest files, read in O(1) driver
-    work by `_direct_read_splits`. Called by datagen after writing the
-    media table; any externally-produced table gets the same benefit by
-    running this once."""
+    """Write SPLIT_MANIFEST_NAME beside a parquet table path (file or
+    dir): one (file, row_group, bytes, rows) row per _footer_splits
+    entry. Nothing in the program reads this file: the direct read plans
+    from the footers themselves (_direct_read_splits). The writer stays
+    only because the benchmark's corpus builder (perfbench/corpora.py)
+    calls it; the benchmark-tagged change of ROADMAP item 3 drops that
+    call, and with it this function."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    files = _parquet_files_under(table_path)
-    rows = {"file": [], "row_group": [], "bytes": [], "rows": []}
-    for path in files:
-        meta = pq.ParquetFile(path).metadata
-        for rg in range(meta.num_row_groups):
-            g = meta.row_group(rg)
-            rows["file"].append(os.path.basename(path))
-            rows["row_group"].append(rg)
-            rows["bytes"].append(g.total_byte_size)
-            rows["rows"].append(g.num_rows)
+    splits = _footer_splits(_parquet_files_under(table_path))
+    table = pa.table(
+        {
+            "file": [os.path.basename(path) for path, *_ in splits],
+            "row_group": [rg for _, rg, _, _ in splits],
+            "bytes": [nbytes for _, _, nbytes, _ in splits],
+            "rows": [rows for *_, rows in splits],
+        }
+    )
     base = table_path if os.path.isdir(table_path) else os.path.dirname(table_path)
     out = os.path.join(base, SPLIT_MANIFEST_NAME)
-    pq.write_table(pa.table(rows), out)
+    pq.write_table(table, out)
     return out
 
 
@@ -352,50 +372,11 @@ def _parquet_files_under(table_path: str) -> list[str]:
     return [table_path]
 
 
-def _splits_from_manifest(files: list[str]) -> list[tuple[str, int, int, int]] | None:
-    """Load (path, row_group, bytes, rows) from the sibling split
-    manifest when one covers every input file; None otherwise."""
-    import pyarrow.parquet as pq
-
-    by_dir: dict[str, list[str]] = {}
-    for path in files:
-        by_dir.setdefault(os.path.dirname(path), []).append(path)
-    splits: list[tuple[str, int, int, int]] = []
-    for d, paths in by_dir.items():
-        man = os.path.join(d, SPLIT_MANIFEST_NAME)
-        if not os.path.exists(man):
-            return None
-        tbl = pq.read_table(man)
-        # regroup per file name
-        per_file: dict[str, list[tuple[int, int, int]]] = {}
-        for name, rg, b, r in zip(
-            tbl.column("file").to_pylist(),
-            tbl.column("row_group").to_pylist(),
-            tbl.column("bytes").to_pylist(),
-            tbl.column("rows").to_pylist(),
-        ):
-            per_file.setdefault(name, []).append((rg, b, r))
-        for path in paths:
-            entries = per_file.get(os.path.basename(path))
-            if not entries:
-                return None  # manifest stale for this file → footer path
-            for rg, b, r in entries:
-                splits.append((path, rg, b, r))
-    return splits or None
-
-
 def _direct_read_splits(media: DataFrame) -> list[tuple[str, int, int, int]] | None:
-    """(path, row_group, bytes, rows) splits for a file-backed media
-    DataFrame, or None when the frame is not a bare untransformed file
-    scan (_is_bare_scan). Split stats come from, in order of preference:
-
-    1. the sibling split manifest (`write_split_manifest`) — O(1) driver
-       reads, the parquet-side analog of planning from Iceberg
-       manifests;
-    2. parquet footers read on a thread pool (metadata-only,
-       GIL-released pyarrow C++) — bounded wall even at thousands of
-       files, vs the serial loop that stalls a 10^12-doc listing.
-    """
+    """(path, row_group, bytes, rows) splits of a file-backed media
+    DataFrame, from the footers of the files it scans (_footer_splits),
+    so a file rewritten in place is planned as it is now; None when the
+    frame is not a bare untransformed file scan (_is_bare_scan)."""
     if not _is_bare_scan(media):
         return None
     try:
@@ -410,27 +391,7 @@ def _direct_read_splits(media: DataFrame) -> list[tuple[str, int, int, int]] | N
         if not path.endswith(".parquet"):
             return None
         paths.append(path)
-
-    manifest_splits = _splits_from_manifest(paths)
-    if manifest_splits is not None:
-        return manifest_splits
-
-    import concurrent.futures as cf
-
-    import pyarrow.parquet as pq
-
-    def footer(path: str) -> list[tuple[str, int, int, int]]:
-        meta = pq.ParquetFile(path).metadata
-        return [
-            (path, rg, meta.row_group(rg).total_byte_size, meta.row_group(rg).num_rows)
-            for rg in range(meta.num_row_groups)
-        ]
-
-    splits: list[tuple[str, int, int, int]] = []
-    with cf.ThreadPoolExecutor(max_workers=_FOOTER_READ_THREADS) as ex:
-        for part in ex.map(footer, paths):
-            splits.extend(part)
-    return splits or None
+    return _footer_splits(paths) or None
 
 
 def _cut_bins(

@@ -17,10 +17,9 @@ from ocr_service_spark.pipeline.extract import (
     TARGET_COST_MS_PER_BIN,
     _bin_count,
     _cut_bins,
-    _parquet_files_under,
+    _footer_splits,
     _split_blobs,
     _split_cost_ms,
-    _splits_from_manifest,
 )
 
 
@@ -124,7 +123,7 @@ def test_cut_random_splits_keep_every_guarantee():
 
 def test_split_blobs_decodes_each_row_group_once_per_bin(dataset, monkeypatch):
     media_dir = dataset["media"]
-    splits = _splits_from_manifest(_parquet_files_under(media_dir))
+    splits = _footer_splits([media_dir])
     total = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits)
     bins = _cut_bins(splits, _bin_count(total, 8))
     assert any(len(b) > 1 for b in bins)  # bins span row groups

@@ -14,7 +14,7 @@ from ocr_service_spark.config import ExtractConfig
 from ocr_service_spark.datagen import generate
 from ocr_service_spark.kernels.media import encode_simg
 from ocr_service_spark.pipeline.checkpoint import read_output, run_resumable
-from ocr_service_spark.pipeline.extract import load_inputs, write_split_manifest
+from ocr_service_spark.pipeline.extract import load_inputs
 
 
 def _seqs(rows):
@@ -47,7 +47,6 @@ def poisoned_corpus(request, tmp_path_factory):
         media.schema.get_field_index("content"), "content", pa.array(content, pa.binary())
     )
     pq.write_table(media, paths["media"], row_group_size=16)
-    write_split_manifest(paths["media"])
     return data_dir, ref
 
 
