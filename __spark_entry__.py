@@ -21,7 +21,9 @@ from ocr_service_spark import queries as _registry
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full interleaved-document extraction pipeline (explode →
     kind-routed kernels → OCR cascade → ordered reassembly), flattened to
-    one row per extracted span."""
+    one row per extracted span. Building it runs one Spark job, the
+    collect of the documents' media references that picks the blobs to
+    decode."""
     return _registry.extract_pipeline_query(spark, "/root/testdata/sf0.001")
 
 

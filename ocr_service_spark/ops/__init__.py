@@ -81,21 +81,10 @@ _WIDE_STEPS = ("Aggregate", "Join", "Window", "Deduplicate", "Repartition")
 
 def _has_wide_step(node) -> bool:
     """True when a wide step (_WIDE_STEPS) lies under the analyzed plan
-    ``node`` and may set its output partitioning. A join with one side
-    broadcast-hinted keeps the other side's partitioning and shuffles
-    neither, so only that side is searched."""
-    children = [node.children().apply(i) for i in range(node.children().size())]
-    if node.nodeName() == "Join":
-        streamed = [c for c in children if not _is_broadcast_hint(c)]
-        if len(streamed) == 1:
-            return _has_wide_step(streamed[0])
+    ``node`` and may set its output partitioning."""
     return any(k in node.nodeName() for k in _WIDE_STEPS) or any(
-        _has_wide_step(c) for c in children
+        _has_wide_step(node.children().apply(i)) for i in range(node.children().size())
     )
-
-
-def _is_broadcast_hint(node) -> bool:
-    return node.nodeName() == "ResolvedHint" and "broadcast" in node.hints().toString()
 
 
 def widen(df):

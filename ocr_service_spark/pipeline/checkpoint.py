@@ -13,12 +13,13 @@ A bucket's output, its recognitions and its lineage row are one commit
 unit, built from one materialized result, so nothing is read back from
 the sink. The reassembly shuffle already hash-partitions on bucket
 (extract.run_extract), so the write is one file per bucket from every
-slot. run_resumable owns the run's caches: it persists the media task's
-results, the output and the bucketed recognitions, in that order, and
+slot. The media task gives each recognition record its bucket
+(extract._media_branch). run_resumable owns the run's caches: it
+persists the media task's results and the output, in that order, and
 releases them when it returns or raises. Every action after the write
-reads them, so OCR and the recognitions join each run once per run. The
-counts, the OCR chars and the OCR-partition balance are observed on the
-writes themselves (pyspark Observation).
+reads them, so OCR runs once per run. The counts, the OCR chars and the
+OCR-partition balance are observed on the writes themselves (pyspark
+Observation).
 
 Checkpoint row layout follows FIXTURES.md §4 (the batch analog of the
 reference event stream, events/map.ts:1-60, and its prometheus metrics,
@@ -148,23 +149,13 @@ def run_resumable(
         # per-blob recognition records (reference recognition_results,
         # schema.ts:31-58): status, engine, confidence, QR fields, error,
         # processing_ms. The reference UPSERTS recognition rows, so this
-        # table mirrors extracted/'s idempotent layout: each record takes
-        # the bucket of the output spans that reference its blob and writes
-        # with per-bucket dynamic overwrite — a partial resume REPLACES
-        # exactly its re-processed buckets' records, never duplicating
-        # (the whole media table is re-extracted on resume, see
-        # _media_branch docstring, but unprocessed buckets' records stand).
-        # Persisted: the lineage aggregate reads the same join.
-        ref_buckets = (
-            output.select("bucket", F.explode("spans").alias("s"))
-            .select("bucket", F.col("s.media_ref").alias("media_ref"))
-            .filter(F.col("media_ref").isNotNull())
-            .distinct()
-        )
-        recognitions = records.join(ref_buckets, "media_ref").withColumn(
-            "run_id", F.lit(cfg.run_id)
-        )
-        cached.append(recognitions.persist())
+        # table mirrors extracted/'s idempotent layout: the media task gave
+        # each record the bucket of the documents that reference its blob
+        # (one record per bucket), and it writes with per-bucket dynamic
+        # overwrite — a partial resume decodes and REPLACES exactly its
+        # re-processed buckets' records, never duplicating. It reads the
+        # cached results, as the lineage aggregate does.
+        recognitions = records.withColumn("run_id", F.lit(cfg.run_id))
         (
             recognitions.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -174,9 +165,9 @@ def run_resumable(
 
         # lineage rows only after the bucket's data is written (crash-safe
         # ordering): per bucket, docs/spans/OCR chars from the cached output
-        # and the p50/max per-blob kernel wall from its cached recognitions,
-        # in one aggregate over both (a bucket with no media keeps NULL
-        # kernel_ms).
+        # and the p50/max per-blob kernel wall from its recognitions (the
+        # cached results), in one aggregate over both (a bucket with no
+        # media keeps NULL kernel_ms).
         per_doc = output.select(
             "bucket",
             F.lit(1).alias("docs"),

@@ -6,18 +6,25 @@ the whole gateway→aligner→tesseract/paddle→Postgres dance becomes
     read → sort spans in-row → posexplode → (textual | media) branches
          → union → groupBy([bucket,] doc_id) ordered reassembly → write
 
-Blob bytes never shuffle. A file-backed media table is read directly by
-the python workers, its rows cut in order into contiguous bins of
-near-equal estimated decode cost, one bin per task; any other media frame
-takes the Arrow fallback on its own scan (see _media_branch). Only the
-narrow extraction result (media_ref, kind, text) joins the spans, and the
-reassembly is the one document-sized shuffle. When the documents carry a ``bucket`` column
-(checkpoint.run_resumable), that shuffle hash-partitions on it into one
-partition per slot, which is also the bucketed write's layout.
+One collect of the documents' media references gives the run's
+(media_ref → buckets) map, and only the blobs in it are decoded, each
+once, with one recognition record per bucket (see _media_branch). A
+file-backed media table is read directly by the python workers, its
+referenced rows cut in order into contiguous bins of near-equal
+estimated decode cost, one bin per task, so its blob bytes never shuffle.
+Any other media frame takes the Arrow fallback on its own scan; spreading
+an in-memory or one-split frame over every slot (ops.widen) is a
+round-robin shuffle that does carry its ``content``. Only the narrow
+extraction result (media_ref, kind, text) joins the spans, and the
+reassembly is the one document-sized shuffle. When the documents carry a
+``bucket`` column (checkpoint.run_resumable), that shuffle hash-partitions
+on it into one partition per slot, which is also the bucketed write's
+layout.
 
-run_extract only builds the plan and caches nothing: it returns the media
-task's result frame next to the output, and the caller that runs several
-actions over them (checkpoint.run_resumable) persists and releases both.
+run_extract runs the one reference-map collect and caches nothing: it
+returns the media task's result frame next to the output, and the caller
+that runs several actions over them (checkpoint.run_resumable) persists
+and releases both.
 
 Span order is computed *inside the document row* (sort_array + posexplode)
 — no window, no extra shuffle, and the output is independent of partition
@@ -44,13 +51,14 @@ from ..kernels.pdf import reconstruct_reading_order
 from ..kernels.text import normalize_text
 from ..ops import widen
 
-# media extraction output: one row per BLOB (not per span) + a per-scan-
-# partition metrics sideband row. A span row is the blob's recognition
+# media extraction output: one row per referenced BLOB and bucket (not per
+# span) + a per-scan-partition metrics sideband row. A span row is the blob's recognition
 # record (reference recognition_results, schema.ts:31-58: status, engine,
 # confidence, used_preprocessed, qr fields, error, processing_time), led
-# by the fields recognitions/ writes; the metrics row fills _METRIC_COLUMNS
+# by the fields recognitions/ writes (its bucket becomes the partition
+# directory); the metrics row fills _METRIC_COLUMNS
 _MEDIA_RESULT_SCHEMA = (
-    "media_ref string, status string, kind string, text string, "
+    "media_ref string, bucket int, status string, kind string, text string, "
     "engine string, confidence double, used_preprocessed boolean, "
     "qr_data string, qr_format string, "
     "qr_location struct<x:int,y:int,width:int,height:int>, "
@@ -206,12 +214,16 @@ def _media_frame(rows: list[dict]) -> pd.DataFrame:
     return pd.DataFrame({c: [r.get(c) for r in rows] for c in _MEDIA_RESULT_COLUMNS})
 
 
-def _make_media_fn(cfg: ExtractConfig, blob_batches):
-    """mapInPandas function: extract every blob that ``blob_batches``
+def _make_media_fn(cfg: ExtractConfig, blob_batches, ref_buckets: dict):
+    """mapInPandas function: extract the blobs that ``blob_batches``
     (_arrow_blobs or _split_blobs) yields as (media_refs, blobs) from the
-    task's input batches. Emits one span row per blob per batch, then one
-    metrics sideband row for the partition: its kernel wall, and the wall
-    spent waiting on ``blob_batches`` for the blobs (read_ms_sum)."""
+    task's input batches. ``ref_buckets`` is the run's {media_ref: buckets}
+    map (_media_branch): a blob whose ref it lacks is skipped (no decode,
+    no record, not in n_blobs), any other is decoded once and gets one
+    span row per bucket. Emits the span rows of each batch that has any,
+    then one metrics sideband row for the partition: its kernel wall, and
+    the wall spent waiting on ``blob_batches`` for the blobs
+    (read_ms_sum)."""
 
     def media_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -233,6 +245,9 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches):
                 break
             rows = []
             for ref, blob in zip(*item):
+                buckets = ref_buckets.get(ref)
+                if not buckets:
+                    continue
                 t0 = time.perf_counter()
                 res = extract_media_span(
                     bytes(blob) if blob is not None else None,
@@ -246,17 +261,22 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches):
                 ms = (time.perf_counter() - t0) * 1000.0
                 kernel_ms.append(ms)
                 ocr_chars += len(res.get("text") or "")
-                rows.append(
+                rows += [
                     {
                         **res,
                         "media_ref": ref,
+                        "bucket": bucket,
                         "row_type": "span",
                         "part_id": part_id,
                         "processing_ms": round(ms, 3),
                         "attempt_number": attempt,
                     }
-                )
-            yield _media_frame(rows)
+                    for bucket in buckets
+                ]
+            # a batch of skipped blobs yields no frame: an empty one has
+            # untyped columns that Arrow cannot cast to qr_location's struct
+            if rows:
+                yield _media_frame(rows)
         # metrics sideband row — per-partition lineage (north rule), the
         # batch analog of the reference event stream (events/map.ts:16-43);
         # kernel_ms_sum is the partition's total model/kernel wall, the
@@ -316,13 +336,21 @@ SPLIT_MANIFEST_NAME = "_split_manifest.parquet"
 _FOOTER_READ_THREADS = 16
 
 
-def _footer_splits(paths: list[str]) -> list[tuple[str, int, int, int]]:
-    """(path, row_group, bytes, rows) of every row group of the parquet
-    files ``paths``, read from their footers on a thread pool (metadata
-    only, GIL-released pyarrow C++): bounded wall even at thousands of
-    files, where a serial loop stalls a 10^12-doc listing."""
+def _pooled(fn, items: list) -> list:
+    """[fn(item) for item in items] on a thread pool: parquet footer and
+    column reads are GIL-released pyarrow C++, so their wall stays bounded
+    even at thousands of files, where a serial loop stalls a 10^12-doc
+    listing."""
     import concurrent.futures as cf
 
+    with cf.ThreadPoolExecutor(max_workers=_FOOTER_READ_THREADS) as ex:
+        return list(ex.map(fn, items))
+
+
+def _footer_splits(paths: list[str]) -> list[tuple[str, int, int, int]]:
+    """(path, row_group, bytes, rows) of every row group of the parquet
+    files ``paths``, read from their footers (metadata only) on a thread
+    pool."""
     import pyarrow.parquet as pq
 
     def footer(path: str) -> list[tuple[str, int, int, int]]:
@@ -332,8 +360,19 @@ def _footer_splits(paths: list[str]) -> list[tuple[str, int, int, int]]:
             for rg in range(meta.num_row_groups)
         ]
 
-    with cf.ThreadPoolExecutor(max_workers=_FOOTER_READ_THREADS) as ex:
-        return [split for part in ex.map(footer, paths) for split in part]
+    return [split for part in _pooled(footer, paths) for split in part]
+
+
+def _referenced_rows(splits: list[tuple[str, int, int, int]], refs: dict) -> list[list[bool]]:
+    """Per split, whether each of its rows' media_ref is in ``refs``: each
+    row group's media_ref column, read on the driver on a thread pool."""
+    import pyarrow.parquet as pq
+
+    def used(split: tuple[str, int, int, int]) -> list[bool]:
+        table = pq.ParquetFile(split[0]).read_row_group(split[1], columns=["media_ref"])
+        return [ref in refs for ref in table.column(0).to_pylist()]
+
+    return _pooled(used, splits)
 
 
 def write_split_manifest(table_path: str) -> str:
@@ -394,28 +433,40 @@ def _direct_read_splits(media: DataFrame) -> list[tuple[str, int, int, int]] | N
     return _footer_splits(paths) or None
 
 
-def _cut_bins(
-    splits: list[tuple[str, int, int, int]], n: int
-) -> list[list[tuple[str, int, int, int]]]:
-    """Cut the rows of the (path, row_group, bytes, rows) splits, in
-    order, into min(n, total rows) contiguous runs of near-equal
-    estimated cost (_split_cost_ms, spread evenly over a group's rows).
-    Returns each bin as (path, row_group, row_lo, row_hi) ranges, at most
-    one per row group, so a task decodes each row group it touches once.
+def _referenced_cost_ms(splits: list[tuple[str, int, int, int]], used: list[list[bool]]) -> float:
+    """Estimated cost of the referenced rows (``used``, per split) of the
+    splits: _split_cost_ms spread evenly over a group's rows."""
+    return sum(_split_cost_ms(r, b) * sum(u) / r for (_, _, b, r), u in zip(splits, used) if r)
 
-    A row goes to the bin its starting prefix cost falls in (k·total/n
-    boundaries), so no bin exceeds total/n plus one row's cost; a row
-    never skips a bin, and the tail takes one row per bin when only as
-    many rows are left as bins, so no bin is empty."""
-    left = sum(rows for *_, rows in splits)
+
+def _cut_bins(
+    splits: list[tuple[str, int, int, int]], n: int, used: list[list[bool]] | None = None
+) -> list[list[tuple[str, int, int, int]]]:
+    """Cut the referenced rows of the (path, row_group, bytes, rows)
+    splits, in order, into min(n, referenced rows) contiguous runs of
+    near-equal estimated cost (_referenced_cost_ms). ``used`` holds, per
+    split, which of its rows the run references (_referenced_rows); None
+    references every row. Returns each bin as (path, row_group, row_lo,
+    row_hi) ranges, at most one per row group, so a task decodes each row
+    group it touches once.
+
+    An unreferenced row costs nothing and never opens a bin or a range: a
+    group with none referenced is not read, and one inside a bin's range
+    is read and then skipped by the media task. A row goes to the bin its
+    starting prefix cost falls in (k·total/n boundaries), so no bin
+    exceeds total/n plus one row's cost; a row never skips a bin, and the
+    tail takes one row per bin when only as many rows are left as bins,
+    so no bin is empty."""
+    used = used or [[True] * rows for *_, rows in splits]
+    left = sum(sum(u) for u in used)
     n = max(1, min(n, left))
-    total = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits if rows)
+    total = _referenced_cost_ms(splits, used)
     bins: list[list[tuple[str, int, int, int]]] = [[] for _ in range(n)]
     done = 0.0  # estimated cost of the rows already placed
     k = 0
-    for path, rg, nbytes, rows in splits:
+    for (path, rg, nbytes, rows), u in zip(splits, used):
         row_ms = _split_cost_ms(rows, nbytes) / rows if rows else 0.0
-        for row in range(rows):
+        for row in itertools.compress(range(rows), u):
             k = min(k + 1, n - 1, max(k, int(done * n / total), n - left))
             ranges = bins[k]
             if ranges and ranges[-1][:2] == (path, rg):
@@ -441,65 +492,76 @@ def _bin_count(total_cost_ms: float, slots: int) -> int:
 def split_media_results(results: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(metrics, records) of the media task's result frame: one metrics
     row per media partition (_METRIC_COLUMNS), and one recognition record
-    per blob (its span rows without row_type and _METRIC_COLUMNS)."""
+    per referenced blob and bucket (its span rows without row_type and
+    _METRIC_COLUMNS)."""
     metrics = results.filter(F.col("row_type") == "metrics").select(*_METRIC_COLUMNS)
     records = results.filter(F.col("row_type") == "span").drop("row_type", *_METRIC_COLUMNS)
     return metrics, records
 
 
 def _media_branch(
-    spans: DataFrame, media: DataFrame, cfg: ExtractConfig
+    docs: DataFrame, media: DataFrame, cfg: ExtractConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (per-span branch rows, the media task's result frame: one
-    _MEDIA_RESULT_SCHEMA row per blob plus one metrics row per partition,
-    which split_media_results separates).
+    """Returns (the media spans' branch rows, the media task's result
+    frame: one _MEDIA_RESULT_SCHEMA row per referenced blob and bucket
+    plus one metrics row per partition, which split_media_results
+    separates).
 
-    Blob bytes never cross the wire. Extraction (decode → align → QR →
-    OCR cascade) runs in one mapInPandas function (_make_media_fn) fed by
+    One narrow collect of the documents' exploded media spans gives the
+    run's {media_ref: buckets} map (bucket null when the documents have no
+    ``bucket`` column); this is the only Spark action before the caller's
+    own (an explode of the spans reads only their kind and media_ref,
+    where prepare_spans' sort also reads their text). The map decides
+    which blobs are decoded and which bucket each record takes.
+    Extraction (decode → align → QR → OCR cascade) runs in one mapInPandas
+    function (_make_media_fn) that decodes each referenced blob once,
+    however many spans reference it, and skips every other blob, fed by
     whichever blob source the media frame allows:
 
     1. direct read — a bare parquet scan (_direct_read_splits): the rows
-       of the (file, row_group) splits are cut in order into _bin_count
-       contiguous bins of near-equal estimated decode cost on the driver
-       (_cut_bins); a spark.range with one id per partition runs one bin
-       per task, and the python workers read the blob bytes themselves,
-       one decode per row group per bin (_split_blobs);
+       the map references (_referenced_rows, each row group's media_ref
+       column) are cut in order into _bin_count contiguous bins of
+       near-equal estimated decode cost on the driver (_cut_bins); a
+       spark.range with one id per partition runs one bin per task, and
+       the python workers read the blob bytes themselves, one decode per
+       row group per bin (_split_blobs);
     2. Arrow fallback — any other frame (in-memory, filtered, joined or
        non-parquet media): the frame's own scan (_arrow_blobs), which
        honors the caller's full logical plan, spread over every slot by
        ops.widen when it arrives in fewer splits than that.
 
     Only the narrow extraction RESULT (media_ref, kind, text) joins the
-    span table — a text-sized shuffle, independent of blob bytes.
-    Measured here: at 2 GiB of blobs a join-then-extract plan was
-    shuffle-IO-bound and got SLOWER with more cores.
-
-    Each blob is decoded once even if referenced by many spans (the old
-    join-first plan decoded per reference). Unreferenced media rows do get
-    decoded; the input contract (FIXTURES.md §1) references every blob.
-    Corollary for checkpoint RESUME over a doc subset: the whole media
-    table is re-extracted and the join discards the results for refs
-    outside the subset. Nothing here partitions the media table by the
-    documents' bucket key, so every resume pays this (perfbench's
-    resume.useful_blob_ratio: 0.71 on extract_photo, 0.50 on
-    extract_text).
+    span table, on (bucket, media_ref) when the documents are bucketed —
+    a text-sized broadcast, independent of blob bytes. Measured here: at
+    2 GiB of blobs a join-then-extract plan was shuffle-IO-bound and got
+    SLOWER with more cores. A resume over a subset of the buckets, or a
+    stream's micro-batch, decodes only the blobs its documents reference.
     """
-    keys = _doc_keys(spans)
-    media_spans = spans.filter(F.col("kind") == "media").select(
+    keys = _doc_keys(docs)
+    media_spans = prepare_spans(docs).filter(F.col("kind") == "media").select(
         *keys, "order", "media_ref"
     )
+    join_keys = ["bucket", "media_ref"] if "bucket" in keys else ["media_ref"]
+    bucket = F.col("bucket") if "bucket" in keys else F.lit(None).cast("int")
+    pairs = docs.select(bucket.alias("b"), F.explode("spans").alias("s")).filter(
+        (F.col("s.kind") == "media") & F.col("s.media_ref").isNotNull()
+    )
+    ref_buckets: dict = {}
+    for b, ref in pairs.select("b", "s.media_ref").collect():
+        ref_buckets.setdefault(ref, set()).add(b)
     spark = media.sparkSession
     splits = _direct_read_splits(media)
     if splits is not None:
-        # python-direct read: distribute (file, row_group) splits by
-        # ESTIMATED COST (fixed inference cost per row + streaming cost
-        # per byte — packing by bytes alone left equal-byte bins with 4×
-        # different blob counts and a 4× straggler tail); blob bytes never
-        # enter the JVM. The rows are cut into _bin_count contiguous bins.
-        total_cost = sum(_split_cost_ms(rows, b) for _, _, b, rows in splits)
-        bins = _cut_bins(
-            splits, _bin_count(total_cost, spark.sparkContext.defaultParallelism)
-        )
+        # python-direct read: distribute the referenced rows by ESTIMATED
+        # COST (fixed inference cost per row + streaming cost per byte —
+        # packing by bytes alone left equal-byte bins with 4× different
+        # blob counts and a 4× straggler tail); blob bytes never enter the
+        # JVM. A table's new blobs are its last rows (an append-only
+        # stream), so the cut counts only referenced rows, or they would
+        # all fall into one bin.
+        used = _referenced_rows(splits, ref_buckets)
+        slots = spark.sparkContext.defaultParallelism
+        bins = _cut_bins(splits, _bin_count(_referenced_cost_ms(splits, used), slots), used)
         # EXACTLY one bin per task: Range puts one id per partition when
         # numPartitions equals its length, and each task looks its bin up
         # by id (_split_blobs). No shuffle, and no Python runs outside the
@@ -508,16 +570,16 @@ def _media_branch(
         # half the tasks come up empty — measured p50 task time of 0.17 s
         # next to a 50 s straggler).
         results = spark.range(len(bins), numPartitions=len(bins)).mapInPandas(
-            _make_media_fn(cfg, functools.partial(_split_blobs, bins)),
+            _make_media_fn(cfg, functools.partial(_split_blobs, bins), ref_buckets),
             schema=_MEDIA_RESULT_SCHEMA,
         )
     else:
         # Arrow fallback: the caller's own plan, spread over every slot
         results = widen(media.select("media_ref", "content")).mapInPandas(
-            _make_media_fn(cfg, _arrow_blobs), schema=_MEDIA_RESULT_SCHEMA
+            _make_media_fn(cfg, _arrow_blobs, ref_buckets), schema=_MEDIA_RESULT_SCHEMA
         )
-    res_spans = split_media_results(results)[1].select("media_ref", "kind", "text")
-    branch = media_spans.join(res_spans, "media_ref", "left").select(
+    res_spans = split_media_results(results)[1].select(*join_keys, "kind", "text")
+    branch = media_spans.join(res_spans, join_keys, "left").select(
         *keys,
         "order",
         # dangling media_ref (no blob row) → same failed-span shape the
@@ -539,8 +601,9 @@ def run_extract(
     media: DataFrame,
     cfg: ExtractConfig | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Build the full pipeline's plan; no Spark action runs and nothing is
-    cached here. Returns (output, results):
+    """Build the full pipeline's plan. One Spark job runs here, the media
+    branch's collect of the documents' media references (_media_branch),
+    and nothing is cached. Returns (output, results):
 
     output  — (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,order>>),
               led by the input's ``bucket`` when ``docs`` has one
@@ -548,7 +611,8 @@ def run_extract(
               split_media_results splits into the per-OCR-partition
               metrics rows (part_id, n_blobs, ocr_chars, kernel_ms_p50,
               kernel_ms_max, kernel_ms_sum, read_ms_sum) and one
-              recognition record per blob (status/engine/confidence/QR
+              recognition record per referenced blob and bucket
+              (bucket/status/engine/confidence/QR
               fields/error/processing_ms/attempt_number — the reference's
               recognition_results analog, schema.ts:31-58)
 
@@ -559,7 +623,7 @@ def run_extract(
     cfg = cfg or ExtractConfig()
     keys = _doc_keys(docs)
     spans = prepare_spans(docs)
-    media_rows, results = _media_branch(spans, media, cfg)
+    media_rows, results = _media_branch(docs, media, cfg)
     span_rows = _textual_branch(spans).unionByName(media_rows)
     if "bucket" in keys:
         # the reassembly shuffle is the write layout: one partition per

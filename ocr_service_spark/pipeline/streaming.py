@@ -11,9 +11,9 @@ Documents are assumed complete within one micro-batch (the input is an
 append-only table of finished documents, matching the reference's
 one-job-per-complete-upload semantics — reference
 services/gateway/src/worker/processor.ts:8-115), so ordered reassembly
-needs no cross-batch state. Each micro-batch extracts only the blobs it
-references: that media frame is a semi-join, not a bare file scan, so
-the media branch takes its Arrow source.
+needs no cross-batch state. Each micro-batch decodes only the blobs its
+documents reference: the media branch reads the bare media table
+directly and skips the rest (extract._media_branch).
 """
 
 from __future__ import annotations
@@ -58,22 +58,7 @@ def extract_stream_to_files(
     summaries: list[dict] = []
 
     def commit(docs: DataFrame, epoch: int) -> None:
-        # only OCR the blobs THIS batch references: without the semi-join
-        # every micro-batch would extract the full static media table and
-        # discard the unmatched rows in the span join — n batches × full-
-        # corpus OCR. The broadcast semi-join prunes the blob scan to the
-        # batch's refs (at catalog scale the same predicate pushes into
-        # the Iceberg scan); the media frame stops being a bare file scan,
-        # so the branch takes the declarative Arrow path per batch.
-        refs = (
-            docs.select(F.explode("spans").alias("s"))
-            .select(F.col("s.media_ref").alias("media_ref"))
-            .filter(F.col("media_ref").isNotNull())
-            .distinct()
-        )
-        batch_media = media.join(F.broadcast(refs), "media_ref", "left_semi")
-        batch_dir = f"{out_dir}/batches/{epoch}"
-        summaries.append(run_resumable(spark, docs, batch_media, batch_dir, cfg, n_buckets))
+        summaries.append(run_resumable(spark, docs, media, f"{out_dir}/batches/{epoch}", cfg, n_buckets))
 
     q = (
         docs_stream.writeStream.foreachBatch(commit)

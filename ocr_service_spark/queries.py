@@ -38,7 +38,8 @@ def extract_pipeline_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the whole decode→align→binarize→OCR→reassemble chain is
     hash-checked, not just row-counted. media_ref and text (NULL on
     failed media spans) coalesce to '' in both twins: pandas
-    materializes VARCHAR NULLs unpredictably."""
+    materializes VARCHAR NULLs unpredictably. Building the frame runs one
+    Spark job, run_extract's collect of the documents' media references."""
     data_dir = _entry_dataset_dir()
     docs, media = load_inputs(spark, data_dir)
     output, _ = run_extract(spark, docs, media, ExtractConfig())

@@ -2,7 +2,8 @@
 deterministic malformed and edge-case SIMG/PNG blobs (the shapes
 test_media_fuzz.py draws) extracts to the same output and the same
 recognition records whether the blobs are read directly from the parquet
-row groups (bare scan) or through the Arrow fallback (filtered frame)."""
+row groups (bare scan) or through the Arrow fallback (filtered frame),
+and neither source decodes a blob that no document references."""
 
 from __future__ import annotations
 
@@ -91,14 +92,18 @@ def _fuzz_blobs(seed: int = 17) -> list[bytes | None]:
 
 def _write_corpus(data_dir) -> int:
     """media.parquet with 3-row groups, and documents that reference every
-    blob (some twice) between text spans, plus one dangling reference."""
+    fuzzed blob (some twice) between text spans, plus one dangling
+    reference. Two orphan blobs, one mid-table and one last, are
+    referenced by no document. Returns the referenced blob count."""
     blobs = _fuzz_blobs()
     refs = [f"fz{i:03d}" for i in range(len(blobs))]
+    mid = len(blobs) // 2
+    orphan = _fuzz_blobs(seed=3)[0]
     pq.write_table(
         pa.table(
             {
-                "media_ref": pa.array(refs, pa.string()),
-                "content": pa.array(blobs, pa.binary()),
+                "media_ref": pa.array(refs[:mid] + ["orphan0"] + refs[mid:] + ["orphan1"]),
+                "content": pa.array(blobs[:mid] + [orphan] + blobs[mid:] + [orphan], pa.binary()),
             }
         ),
         f"{data_dir}/media.parquet",
@@ -135,8 +140,10 @@ def _run(spark, docs, media):
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in r["spans"]]
         for r in output.collect()
     }
-    records = split_media_results(results)[1].select("media_ref", "status", "kind", "error")
-    return spans, sorted(tuple(r) for r in records.collect())
+    metrics, records = split_media_results(results)
+    records = records.select("media_ref", "status", "kind", "error")
+    decoded = metrics.agg(F.sum("n_blobs")).collect()[0][0]
+    return spans, sorted(tuple(r) for r in records.collect()), decoded
 
 
 def test_blob_sources_agree_on_fuzzed_corpus(spark, tmp_path):
@@ -150,8 +157,10 @@ def test_blob_sources_agree_on_fuzzed_corpus(spark, tmp_path):
     direct = _run(spark, docs, media)
     arrow = _run(spark, docs, filtered)
     assert direct == arrow
-    spans, records = direct
-    assert len(records) == n_blobs
+    spans, records, decoded = direct
+    # the orphans get no record and no decode, on either source
+    assert len(records) == decoded == n_blobs
+    assert not any(ref.startswith("orphan") for ref, *_ in records)
     # the corpus reaches both outcomes, and the dangling ref keeps the
     # failed-span shape
     assert {status for _, status, _, _ in records} == {"completed", "failed"}

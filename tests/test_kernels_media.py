@@ -169,8 +169,9 @@ def test_extract_media_invalid_blob_failed_status():
 
 
 def test_media_task_fn_rows_and_metrics():
-    """The media task function without Spark: one span row per blob
-    carrying every result field, then the partition's metrics row."""
+    """The media task function without Spark: one span row per
+    referenced blob carrying every result field, then the partition's
+    metrics row."""
     batch = pd.DataFrame(
         {
             "media_ref": ["ocr", "qr", "bad"],
@@ -181,7 +182,8 @@ def test_media_task_fn_rows_and_metrics():
             ],
         }
     )
-    frames = list(_make_media_fn(ExtractConfig(), _arrow_blobs)(iter([batch])))
+    ref_buckets = dict.fromkeys(["ocr", "qr", "bad"], {None})
+    frames = list(_make_media_fn(ExtractConfig(), _arrow_blobs, ref_buckets)(iter([batch])))
     assert all(list(f.columns) == _MEDIA_RESULT_COLUMNS for f in frames)
     assert len(frames[-1]) == 1
     spans, metrics = pd.concat(frames[:-1], ignore_index=True), frames[-1].iloc[0]

@@ -1,8 +1,9 @@
 """The direct-read media stage runs exactly one non-empty task per bin
 of the cost cut (_cut_bins): the bins are placed by a ``spark.range``
 with one id per partition (no Python partitioner shuffle, no RDD scan),
-and the bin count is a slot multiple unless the table has fewer rows
-than that. The Arrow fallback spreads a one-split frame over every slot
+and the bin count is a slot multiple unless the run references fewer
+rows than that: documents that reference only the table's last rows
+decode just those, over every slot. The Arrow fallback spreads a one-split frame over every slot
 (ops.widen), and keeps the layout of a frame the caller already
 repartitioned. The reassembly of bucketed documents shuffles once, by
 bucket."""
@@ -12,6 +13,7 @@ from __future__ import annotations
 import os
 import re
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from ocr_service_spark.config import ExtractConfig
@@ -23,7 +25,6 @@ from ocr_service_spark.pipeline.extract import (
     _media_branch,
     _split_cost_ms,
     load_inputs,
-    prepare_spans,
     run_extract,
     split_media_results,
 )
@@ -53,9 +54,35 @@ def test_one_nonempty_task_per_bin(spark, dataset, tmp_path):
     assert sum(r["n_blobs"] for r in rows) == media.count()
 
 
+def test_tail_subset_decodes_only_its_blobs_on_every_slot(spark, dataset, tmp_path):
+    """Documents that reference only the media table's last rows (the new
+    blobs of an append-only table) decode exactly those blobs, spread over
+    min(slots, blobs) non-empty tasks: unreferenced rows cost nothing in
+    the cut, so the tail is not one bin."""
+    docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
+    tail = set(pq.read_table(dataset["media"], columns=["media_ref"]).column(0).to_pylist()[-40:])
+    refs_of = {
+        r["doc_id"]: {ref for ref in r["refs"] if ref is not None}
+        for r in docs.select("doc_id", F.col("spans.media_ref").alias("refs")).collect()
+    }
+    chosen = [d for d, refs in refs_of.items() if refs and refs <= tail]
+    referenced = set().union(*(refs_of[d] for d in chosen))
+    par = spark.sparkContext.defaultParallelism
+    assert len(referenced) > par  # precondition: more blobs than slots
+
+    out_dir = str(tmp_path / "tail")
+    subset = docs.filter(F.col("doc_id").isin(chosen))
+    run_resumable(spark, subset, media, out_dir, ExtractConfig(run_id="tail"), n_buckets=8)
+    n_blobs = [r["n_blobs"] for r in spark.read.parquet(f"{out_dir}/_metrics").collect()]
+    assert sum(n_blobs) == len(referenced)
+    assert sum(n > 0 for n in n_blobs) == min(par, len(referenced))
+    rec = spark.read.parquet(f"{out_dir}/recognitions").select("media_ref").collect()
+    assert {r["media_ref"] for r in rec} == referenced
+
+
 def test_direct_read_plan_is_range_into_map_in_pandas(spark, dataset):
     docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
-    _, results = _media_branch(prepare_spans(docs), media, ExtractConfig())
+    _, results = _media_branch(docs, media, ExtractConfig())
     plan = results._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     assert "Range (" in plan
     assert "MapInPandas" in plan
@@ -79,7 +106,7 @@ def test_fallback_spreads_one_file_over_every_slot(spark, dataset):
     # a filter makes the frame non-bare: the Arrow fallback over one file
     filtered = media.filter(F.col("media_ref").isNotNull())
     assert _direct_read_splits(filtered) is None
-    _, results = _media_branch(prepare_spans(docs), filtered, ExtractConfig())
+    _, results = _media_branch(docs, filtered, ExtractConfig())
     rows = split_media_results(results)[0].collect()
     par = spark.sparkContext.defaultParallelism
     assert len(rows) == par

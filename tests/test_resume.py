@@ -167,9 +167,10 @@ def test_metrics_sideband_written_with_balance(spark, dataset, tmp_path):
 
 
 def test_recognitions_no_duplicates_on_partial_resume(spark, dataset, tmp_path):
-    """A partial resume re-extracts the whole media table (documented
-    corollary) but must append recognition records ONLY for the buckets
-    it actually processed — no duplicate blob records across runs."""
+    """A partial resume decodes only the blobs its todo buckets'
+    documents reference, and appends recognition records ONLY for the
+    buckets it actually processed — no duplicate blob records across
+    runs."""
     data_dir = os.path.dirname(dataset["documents"])
     docs, media = load_inputs(spark, data_dir)
     out_dir = str(tmp_path / "rec-resume")
@@ -188,6 +189,53 @@ def test_recognitions_no_duplicates_on_partial_resume(spark, dataset, tmp_path):
     )
     assert dups == 0
     assert rec.count() == media.count()  # every blob recorded exactly once
+    todo_refs = (
+        docs.filter(bucket_expr(N_BUCKETS) >= N_BUCKETS // 2)
+        .select(F.explode("spans.media_ref").alias("media_ref"))
+        .filter(F.col("media_ref").isNotNull())
+        .distinct()
+        .count()
+    )
+    decoded = (
+        spark.read.parquet(f"{out_dir}/_metrics")
+        .filter(F.col("run_id") == "b")
+        .agg(F.sum("n_blobs"))
+        .collect()[0][0]
+    )
+    assert 0 < decoded == todo_refs < media.count()
+
+
+def test_blob_shared_across_buckets_decodes_once(spark, dataset, tmp_path):
+    """A blob that documents in two buckets reference is decoded once and
+    gets one recognition record per bucket, both with that decode's
+    processing_ms; both documents come out golden."""
+    docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
+    src = (
+        docs.filter(F.exists("spans", lambda s: s["kind"] == "media"))
+        .orderBy("doc_id")
+        .first()
+    )
+    ids = spark.createDataFrame([(f"{src['doc_id']}-{i}",) for i in range(16)], "doc_id string")
+    bucket_of = dict(ids.unionByName(docs.select("doc_id")).select(
+        "doc_id", bucket_expr(N_BUCKETS)
+    ).collect())
+    copy_id = next(d for d, b in bucket_of.items() if b != bucket_of[src["doc_id"]])
+    pair = spark.createDataFrame([src, (copy_id, src["spans"])], docs.schema)
+    refs = {s["media_ref"] for s in src["spans"] if s["kind"] == "media"}
+
+    out_dir = str(tmp_path / "shared")
+    run_resumable(spark, pair, media, out_dir, ExtractConfig(run_id="sh"), n_buckets=N_BUCKETS)
+    decoded = spark.read.parquet(f"{out_dir}/_metrics").agg(F.sum("n_blobs")).collect()[0][0]
+    assert decoded == len(refs)
+    rec = spark.read.parquet(f"{out_dir}/recognitions").collect()
+    assert sorted((r["media_ref"], r["bucket"]) for r in rec) == sorted(
+        (ref, bucket_of[d]) for ref in refs for d in (src["doc_id"], copy_id)
+    )
+    for ref in refs:
+        assert len({r["processing_ms"] for r in rec if r["media_ref"] == ref}) == 1
+    golden = _seqs(spark.read.parquet(dataset["golden"]).collect())[src["doc_id"]]
+    got = _seqs(read_output(spark, out_dir).collect())
+    assert got == {src["doc_id"]: golden, copy_id: golden}
 
 
 @pytest.fixture(scope="module")

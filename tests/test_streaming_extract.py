@@ -47,8 +47,8 @@ def test_streaming_file_sink_multibatch_exactly_once(spark, dataset, tmp_path):
         ckpt = spark.read.parquet(f"{root}/_checkpoint").collect()
         assert sorted(int(r["partition_key"]) for r in ckpt) == written
         assert {r["status"] for r in ckpt} == {"completed"}
-        # the batch's OCR runs on every slot it has blobs for, not in
-        # the one task of the semi-joined media scan
+        # the batch's OCR runs on every slot it has blobs for: the direct
+        # read cuts only the blobs the batch references into bins
         n_blobs = [r["n_blobs"] for r in spark.read.parquet(f"{root}/_metrics").collect()]
         par = spark.sparkContext.defaultParallelism
         assert sum(n > 0 for n in n_blobs) == min(par, sum(n_blobs))
