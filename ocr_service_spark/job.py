@@ -31,26 +31,36 @@ from .pipeline.extract import load_inputs
 from .session import get_spark
 
 
+def _csv(value: str) -> tuple[str, ...] | None:
+    return tuple(value.split(",")) if value else None
+
+
 def main(argv: list[str] | None = None) -> int:
+    defaults = ExtractConfig()
     ap = argparse.ArgumentParser(prog="ocr_service_spark.job")
     ap.add_argument("--data-dir", required=True)
     ap.add_argument("--out-dir", required=True)
     ap.add_argument("--master", default=None, help="e.g. local[4]; default local[$SPARK_GRAFT_CPUS]")
     ap.add_argument("--n-buckets", type=int, default=DEFAULT_BUCKETS)
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--confidence-low", type=float, default=None)
-    ap.add_argument("--accepted-qr-formats", default=None, help="CSV, e.g. fiscal,url")
+    ap.add_argument("--confidence-low", type=float, default=defaults.confidence_low)
+    ap.add_argument(
+        "--accepted-qr-formats",
+        type=_csv,
+        default=defaults.accepted_qr_formats,
+        help="CSV, e.g. fiscal,url",
+    )
     ap.add_argument("--aggressive", action="store_true", help="aggressive binarization profile")
     ap.add_argument(
         "--alignment-mode",
         choices=("neural", "classic"),
-        default="neural",
+        default=defaults.alignment_mode,
         help="default alignment mode (per-blob meta['mode'] overrides)",
     )
     ap.add_argument(
         "--warp-interp",
         choices=("nearest", "cubic"),
-        default="nearest",
+        default=defaults.warp_interp,
         help="warp resampling: nearest (fast default) or cubic (the "
         "reference's INTER_CUBIC)",
     )
@@ -77,18 +87,14 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    kwargs = {}
-    if args.confidence_low is not None:
-        kwargs["confidence_low"] = args.confidence_low
-    if args.accepted_qr_formats:
-        kwargs["accepted_qr_formats"] = tuple(args.accepted_qr_formats.split(","))
-    if args.aggressive:
-        kwargs["aggressive"] = True
-    if args.warp_interp != "nearest":
-        kwargs["warp_interp"] = args.warp_interp
-    if args.alignment_mode != "neural":
-        kwargs["alignment_mode"] = args.alignment_mode
-    cfg = ExtractConfig(run_id=args.run_id or f"run-{int(time.time())}", **kwargs)
+    cfg = ExtractConfig(
+        confidence_low=args.confidence_low,
+        accepted_qr_formats=args.accepted_qr_formats,
+        aggressive=args.aggressive,
+        warp_interp=args.warp_interp,
+        alignment_mode=args.alignment_mode,
+        run_id=args.run_id or f"run-{int(time.time())}",
+    )
 
     extra_conf = None
     if args.catalog:

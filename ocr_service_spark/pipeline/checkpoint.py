@@ -14,7 +14,7 @@ unit, built from one materialized result, so nothing is read back from
 the sink. The reassembly shuffle already hash-partitions on bucket
 (extract.run_extract), so the write is one file per bucket from every
 slot. The media task gives each recognition record its bucket
-(extract._media_branch). run_resumable owns the run's caches: it
+(extract._media_results). run_resumable owns the run's caches: it
 persists the media task's results and the output, in that order, and
 releases them when it returns or raises. Every action after the write
 reads them, so OCR runs once per run. The counts, the OCR chars and the

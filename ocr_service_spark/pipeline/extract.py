@@ -1,25 +1,25 @@
-"""The extraction pipeline: one declarative plan, three kernel branches.
+"""The extraction pipeline: one declarative plan over one span table.
 
 Batch re-expression of the reference worker hot path (SURVEY.md §3.2):
 the whole gateway→aligner→tesseract/paddle→Postgres dance becomes
 
-    read → sort spans in-row → posexplode → (textual | media) branches
-         → union → groupBy([bucket,] doc_id) ordered reassembly → write
+    read → sort spans in-row → posexplode → ⟕ media records on
+         (bucket, media_ref) → one projection (text kernels | record)
+         → groupBy(bucket, doc_id) ordered reassembly → write
 
-One collect of the documents' media references gives the run's
-(media_ref → buckets) map, and only the blobs in it are decoded, each
-once, with one recognition record per bucket (see _media_branch). A
-file-backed media table is read directly by the python workers, its
-referenced rows cut in order into contiguous bins of near-equal
-estimated decode cost, one bin per task, so its blob bytes never shuffle.
-Any other media frame takes the Arrow fallback on its own scan; spreading
-an in-memory or one-split frame over every slot (ops.widen) is a
-round-robin shuffle that does carry its ``content``. Only the narrow
-extraction result (media_ref, kind, text) joins the spans, and the
-reassembly is the one document-sized shuffle. When the documents carry a
-``bucket`` column (checkpoint.run_resumable), that shuffle hash-partitions
-on it into one partition per slot, which is also the bucketed write's
-layout.
+The documents carry a ``bucket`` column (checkpoint.bucket_expr). One
+collect of their media references gives the run's (media_ref → buckets)
+map, and only the blobs in it are decoded, each once, with one
+recognition record per bucket (see _media_results). A file-backed media
+table is read directly by the python workers, its referenced rows cut in
+order into contiguous bins of near-equal estimated decode cost, one bin
+per task, so its blob bytes never shuffle. Any other media frame takes
+the Arrow fallback on its own scan; spreading an in-memory or one-split
+frame over every slot (ops.widen) is a round-robin shuffle that does
+carry its ``content``. Only the narrow records (bucket, media_ref, kind,
+text) are broadcast to the span table, and the reassembly is the one
+document-sized shuffle: it hash-partitions on bucket into one partition
+per slot, which is also the bucketed write's layout.
 
 run_extract runs the one reference-map collect and caches nothing: it
 returns the media task's result frame next to the output, and the caller
@@ -74,15 +74,11 @@ _METRIC_COLUMNS = (
 )
 
 
-def _doc_keys(df: DataFrame) -> list[str]:
-    """The document key every stage carries: (bucket, doc_id) when the
-    input has a bucket column, else doc_id alone."""
-    return ["bucket", "doc_id"] if "bucket" in df.columns else ["doc_id"]
-
-
 def prepare_spans(docs: DataFrame) -> DataFrame:
-    """(doc_id, spans) → one row per span with its final output order,
-    keyed by _doc_keys(docs).
+    """(bucket, doc_id, spans) → one (bucket, doc_id, order, kind, text,
+    media_ref) row per span, with the span's final output order. Only a
+    media span keeps its media_ref, so no other span can match a media
+    record in run_extract's join.
 
     Order = position of the span when the doc's spans are sorted by
     `offset` — computed row-locally: re-root the struct on offset,
@@ -91,8 +87,8 @@ def prepare_spans(docs: DataFrame) -> DataFrame:
     posexplode_OUTER: a document with an empty (or null) spans array
     still yields one carrier row (null kind/order) so it survives to the
     output with spans = [] instead of silently disappearing — handled
-    row-locally, no extra doc-id join. Carrier rows flow through the
-    textual branch with a null kind and are dropped at reassembly.
+    row-locally, no extra doc-id join. A carrier row keeps its null kind
+    through run_extract's projection and is dropped at reassembly.
     """
     sorted_spans = F.sort_array(
         F.transform(
@@ -105,20 +101,20 @@ def prepare_spans(docs: DataFrame) -> DataFrame:
             ),
         )
     )
-    keys = _doc_keys(docs)
     return docs.select(
-        *keys, F.posexplode_outer(sorted_spans).alias("order", "s")
+        "bucket", "doc_id", F.posexplode_outer(sorted_spans).alias("order", "s")
     ).select(
-        *keys,
+        "bucket",
+        "doc_id",
         F.col("order").cast("int").alias("order"),
         F.col("s.kind").alias("kind"),
         F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
+        F.when(F.col("s.kind") == "media", F.col("s.media_ref")).alias("media_ref"),
     )
 
 
 # --------------------------------------------------------------------------
-# textual branch (text / html / pdf) — vectorized pandas UDF, no join
+# text / html / pdf kernels — one vectorized pandas UDF over the span table
 # --------------------------------------------------------------------------
 
 _TEXT_KERNELS = {
@@ -139,25 +135,8 @@ def _extract_textual(kind: pd.Series, text: pd.Series) -> pd.Series:
     return out
 
 
-def _textual_branch(spans: DataFrame) -> DataFrame:
-    # null kind = empty-doc carrier row (prepare_spans): keep it so the
-    # doc reaches reassembly, with kind left null to be dropped there
-    branch = spans.filter(
-        (F.col("kind") != "media") | F.col("kind").isNull()
-    )
-    return branch.select(
-        *_doc_keys(spans),
-        "order",
-        F.when(F.col("kind").isNull(), F.lit(None).cast("string"))
-        .otherwise(F.lit("text"))
-        .alias("kind"),
-        _extract_textual("kind", "text").alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-    )
-
-
 # --------------------------------------------------------------------------
-# media branch — scan-side extraction: blob bytes NEVER shuffle
+# media task — scan-side extraction: blob bytes NEVER shuffle
 # --------------------------------------------------------------------------
 
 def _arrow_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
@@ -218,7 +197,7 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches, ref_buckets: dict):
     """mapInPandas function: extract the blobs that ``blob_batches``
     (_arrow_blobs or _split_blobs) yields as (media_refs, blobs) from the
     task's input batches. ``ref_buckets`` is the run's {media_ref: buckets}
-    map (_media_branch): a blob whose ref it lacks is skipped (no decode,
+    map (_media_results): a blob whose ref it lacks is skipped (no decode,
     no record, not in n_blobs), any other is decoded once and gets one
     span row per bucket. Emits the span rows of each batch that has any,
     then one metrics sideband row for the partition: its kernel wall, and
@@ -305,7 +284,7 @@ def _make_media_fn(cfg: ExtractConfig, blob_batches, ref_buckets: dict):
 # fixed per-image cost (the CNN runs at capped resolution regardless of
 # source size); decode + streaming image ops scale with bytes. Both
 # constants are estimates, not measurements: only their RATIO places the
-# cuts (_cut_bins), and ROADMAP item 4 fits them to recorded kernel times.
+# cuts (_cut_bins), and ROADMAP item 3 fits them to recorded kernel times.
 COST_MS_PER_ROW = 90.0
 COST_MS_PER_MB = 15.0
 # target estimated cost per bin: bins must hold seconds of work, because
@@ -499,24 +478,21 @@ def split_media_results(results: DataFrame) -> tuple[DataFrame, DataFrame]:
     return metrics, records
 
 
-def _media_branch(
-    docs: DataFrame, media: DataFrame, cfg: ExtractConfig
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (the media spans' branch rows, the media task's result
-    frame: one _MEDIA_RESULT_SCHEMA row per referenced blob and bucket
-    plus one metrics row per partition, which split_media_results
-    separates).
+def _media_results(docs: DataFrame, media: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """The media task's result frame: one _MEDIA_RESULT_SCHEMA row per
+    referenced blob and bucket plus one metrics row per partition, which
+    split_media_results separates.
 
     One narrow collect of the documents' exploded media spans gives the
-    run's {media_ref: buckets} map (bucket null when the documents have no
-    ``bucket`` column); this is the only Spark action before the caller's
-    own (an explode of the spans reads only their kind and media_ref,
-    where prepare_spans' sort also reads their text). The map decides
-    which blobs are decoded and which bucket each record takes.
-    Extraction (decode → align → QR → OCR cascade) runs in one mapInPandas
-    function (_make_media_fn) that decodes each referenced blob once,
-    however many spans reference it, and skips every other blob, fed by
-    whichever blob source the media frame allows:
+    run's {media_ref: buckets} map; this is the only Spark action before
+    the caller's own (an explode of the spans reads only their kind and
+    media_ref, where prepare_spans' sort also reads their text). A span
+    of another kind adds nothing to the map, whatever its media_ref. The
+    map decides which blobs are decoded and which bucket each record
+    takes. Extraction (decode → align → QR → OCR cascade) runs in one
+    mapInPandas function (_make_media_fn) that decodes each referenced
+    blob once, however many spans reference it, and skips every other
+    blob, fed by whichever blob source the media frame allows:
 
     1. direct read — a bare parquet scan (_direct_read_splits): the rows
        the map references (_referenced_rows, each row group's media_ref
@@ -530,65 +506,47 @@ def _media_branch(
        honors the caller's full logical plan, spread over every slot by
        ops.widen when it arrives in fewer splits than that.
 
-    Only the narrow extraction RESULT (media_ref, kind, text) joins the
-    span table, on (bucket, media_ref) when the documents are bucketed —
-    a text-sized broadcast, independent of blob bytes. Measured here: at
-    2 GiB of blobs a join-then-extract plan was shuffle-IO-bound and got
-    SLOWER with more cores. A resume over a subset of the buckets, or a
-    stream's micro-batch, decodes only the blobs its documents reference.
+    Only the narrow records (bucket, media_ref, kind, text) reach the
+    span table (run_extract) — a text-sized broadcast, independent of
+    blob bytes. Measured here: at 2 GiB of blobs a join-then-extract plan
+    was shuffle-IO-bound and got SLOWER with more cores. A resume over a
+    subset of the buckets, or a stream's micro-batch, decodes only the
+    blobs its documents reference.
     """
-    keys = _doc_keys(docs)
-    media_spans = prepare_spans(docs).filter(F.col("kind") == "media").select(
-        *keys, "order", "media_ref"
-    )
-    join_keys = ["bucket", "media_ref"] if "bucket" in keys else ["media_ref"]
-    bucket = F.col("bucket") if "bucket" in keys else F.lit(None).cast("int")
-    pairs = docs.select(bucket.alias("b"), F.explode("spans").alias("s")).filter(
+    pairs = docs.select("bucket", F.explode("spans").alias("s")).filter(
         (F.col("s.kind") == "media") & F.col("s.media_ref").isNotNull()
     )
     ref_buckets: dict = {}
-    for b, ref in pairs.select("b", "s.media_ref").collect():
+    for b, ref in pairs.select("bucket", "s.media_ref").collect():
         ref_buckets.setdefault(ref, set()).add(b)
     spark = media.sparkSession
     splits = _direct_read_splits(media)
-    if splits is not None:
-        # python-direct read: distribute the referenced rows by ESTIMATED
-        # COST (fixed inference cost per row + streaming cost per byte —
-        # packing by bytes alone left equal-byte bins with 4× different
-        # blob counts and a 4× straggler tail); blob bytes never enter the
-        # JVM. A table's new blobs are its last rows (an append-only
-        # stream), so the cut counts only referenced rows, or they would
-        # all fall into one bin.
-        used = _referenced_rows(splits, ref_buckets)
-        slots = spark.sparkContext.defaultParallelism
-        bins = _cut_bins(splits, _bin_count(_referenced_cost_ms(splits, used), slots), used)
-        # EXACTLY one bin per task: Range puts one id per partition when
-        # numPartitions equals its length, and each task looks its bin up
-        # by id (_split_blobs). No shuffle, and no Python runs outside the
-        # kernel task. Round-robin repartition(n) does NOT guarantee this
-        # (each input slice starts at a random offset, so bins collide and
-        # half the tasks come up empty — measured p50 task time of 0.17 s
-        # next to a 50 s straggler).
-        results = spark.range(len(bins), numPartitions=len(bins)).mapInPandas(
-            _make_media_fn(cfg, functools.partial(_split_blobs, bins), ref_buckets),
-            schema=_MEDIA_RESULT_SCHEMA,
-        )
-    else:
+    if splits is None:
         # Arrow fallback: the caller's own plan, spread over every slot
-        results = widen(media.select("media_ref", "content")).mapInPandas(
+        return widen(media.select("media_ref", "content")).mapInPandas(
             _make_media_fn(cfg, _arrow_blobs, ref_buckets), schema=_MEDIA_RESULT_SCHEMA
         )
-    res_spans = split_media_results(results)[1].select(*join_keys, "kind", "text")
-    branch = media_spans.join(res_spans, join_keys, "left").select(
-        *keys,
-        "order",
-        # dangling media_ref (no blob row) → same failed-span shape the
-        # kernel emits for an unreadable blob
-        F.coalesce(F.col("kind"), F.lit("media_text")).alias("kind"),
-        "text",
-        "media_ref",
+    # python-direct read: distribute the referenced rows by ESTIMATED
+    # COST (fixed inference cost per row + streaming cost per byte —
+    # packing by bytes alone left equal-byte bins with 4× different
+    # blob counts and a 4× straggler tail); blob bytes never enter the
+    # JVM. A table's new blobs are its last rows (an append-only
+    # stream), so the cut counts only referenced rows, or they would
+    # all fall into one bin.
+    used = _referenced_rows(splits, ref_buckets)
+    slots = spark.sparkContext.defaultParallelism
+    bins = _cut_bins(splits, _bin_count(_referenced_cost_ms(splits, used), slots), used)
+    # EXACTLY one bin per task: Range puts one id per partition when
+    # numPartitions equals its length, and each task looks its bin up
+    # by id (_split_blobs). No shuffle, and no Python runs outside the
+    # kernel task. Round-robin repartition(n) does NOT guarantee this
+    # (each input slice starts at a random offset, so bins collide and
+    # half the tasks come up empty — measured p50 task time of 0.17 s
+    # next to a 50 s straggler).
+    return spark.range(len(bins), numPartitions=len(bins)).mapInPandas(
+        _make_media_fn(cfg, functools.partial(_split_blobs, bins), ref_buckets),
+        schema=_MEDIA_RESULT_SCHEMA,
     )
-    return branch, results
 
 
 # --------------------------------------------------------------------------
@@ -601,12 +559,12 @@ def run_extract(
     media: DataFrame,
     cfg: ExtractConfig | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Build the full pipeline's plan. One Spark job runs here, the media
-    branch's collect of the documents' media references (_media_branch),
-    and nothing is cached. Returns (output, results):
+    """Build the full pipeline's plan over ``docs``, which must carry a
+    ``bucket`` column (checkpoint.bucket_expr). One Spark job runs here,
+    the collect of the documents' media references (_media_results), and
+    nothing is cached. Returns (output, results):
 
-    output  — (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,order>>),
-              led by the input's ``bucket`` when ``docs`` has one
+    output  — (bucket, doc_id, spans ARRAY<STRUCT<kind,text,media_ref,order>>)
     results — the media task's result frame, which output reads and which
               split_media_results splits into the per-OCR-partition
               metrics rows (part_id, n_blobs, ocr_chars, kernel_ms_p50,
@@ -616,25 +574,50 @@ def run_extract(
               fields/error/processing_ms/attempt_number — the reference's
               recognition_results analog, schema.ts:31-58)
 
+    The plan reads the documents once: prepare_spans' one span table
+    takes a left broadcast join to the records on (bucket, media_ref),
+    and one projection picks each span's output. A media span takes its
+    record, or the kernel's failed-span shape when no blob row matches
+    (a dangling ref); a text, HTML or PDF span takes its kernel's text
+    and a null media_ref, whatever blob its media_ref names; an empty
+    document's carrier row keeps its null kind.
+
     A caller that runs more than one action over these persists
     ``results`` before ``output`` (checkpoint.run_resumable), so every
     action reads one OCR pass.
     """
     cfg = cfg or ExtractConfig()
-    keys = _doc_keys(docs)
-    spans = prepare_spans(docs)
-    media_rows, results = _media_branch(docs, media, cfg)
-    span_rows = _textual_branch(spans).unionByName(media_rows)
-    if "bucket" in keys:
+    results = _media_results(docs, media, cfg)
+    records = split_media_results(results)[1].select(
+        "bucket",
+        "media_ref",
+        F.col("kind").alias("media_kind"),
+        F.col("text").alias("media_text"),
+    )
+    spans = prepare_spans(docs).join(F.broadcast(records), ["bucket", "media_ref"], "left")
+    is_media = F.col("kind") == "media"
+    span_rows = spans.select(
+        "bucket",
+        "doc_id",
+        "order",
+        # dangling media_ref (no blob row) → same failed-span shape the
+        # kernel emits for an unreadable blob; null kind = carrier row
+        F.when(is_media, F.coalesce("media_kind", F.lit("media_text")))
+        .when(F.col("kind").isNotNull(), F.lit("text"))
+        .alias("kind"),
+        F.when(is_media, F.col("media_text"))
+        .otherwise(_extract_textual("kind", "text"))
+        .alias("text"),
+        "media_ref",
+    )
+    output = (
         # the reassembly shuffle is the write layout: one partition per
         # slot, each bucket whole in one of them, so every slot writes and
         # each bucket stays one file. An explicit count (REPARTITION_BY_NUM)
         # is not coalesced by AQE, which folded the text-sized shuffle into
         # one task that wrote every bucket directory in turn.
-        span_rows = span_rows.repartition(spark.sparkContext.defaultParallelism, "bucket")
-
-    output = (
-        span_rows.groupBy(*keys)
+        span_rows.repartition(spark.sparkContext.defaultParallelism, "bucket")
+        .groupBy("bucket", "doc_id")
         .agg(
             F.sort_array(
                 F.collect_list(
@@ -648,7 +631,8 @@ def run_extract(
             ).alias("ordered")
         )
         .select(
-            *keys,
+            "bucket",
+            "doc_id",
             F.transform(
                 # drop empty-doc carrier rows (null kind): the doc keeps
                 # its output row with spans = []

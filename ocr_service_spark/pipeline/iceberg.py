@@ -16,7 +16,7 @@ the runtime's presence:
   append-lineage emulation in checkpoint.py.
 
 An Iceberg media table is not a bare parquet scan, so extract.py's
-`_media_branch` reads its blobs through the Arrow fallback.
+`_media_results` reads its blobs through the Arrow fallback.
 
 `tests/test_iceberg_surface.py` runs the full resume flow against a
 hadoop catalog when the runtime jar is present and skips cleanly here.

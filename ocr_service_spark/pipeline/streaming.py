@@ -12,8 +12,8 @@ append-only table of finished documents, matching the reference's
 one-job-per-complete-upload semantics — reference
 services/gateway/src/worker/processor.ts:8-115), so ordered reassembly
 needs no cross-batch state. Each micro-batch decodes only the blobs its
-documents reference: the media branch reads the bare media table
-directly and skips the rest (extract._media_branch).
+documents reference: the media task reads the bare media table
+directly and skips the rest (extract._media_results).
 """
 
 from __future__ import annotations

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .config import ExtractConfig
 from .datagen import ensure_dataset
 from .ops import dedup, packing, relational, similarity, streaming, textstats
+from .pipeline.checkpoint import DEFAULT_BUCKETS, bucket_expr
 from .pipeline.extract import load_inputs, run_extract
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -38,10 +39,12 @@ def extract_pipeline_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the whole decode→align→binarize→OCR→reassemble chain is
     hash-checked, not just row-counted. media_ref and text (NULL on
     failed media spans) coalesce to '' in both twins: pandas
-    materializes VARCHAR NULLs unpredictably. Building the frame runs one
-    Spark job, run_extract's collect of the documents' media references."""
+    materializes VARCHAR NULLs unpredictably. The documents are bucketed
+    as run_resumable buckets them. Building the frame runs one Spark job,
+    run_extract's collect of the documents' media references."""
     data_dir = _entry_dataset_dir()
     docs, media = load_inputs(spark, data_dir)
+    docs = docs.withColumn("bucket", bucket_expr(DEFAULT_BUCKETS))
     output, _ = run_extract(spark, docs, media, ExtractConfig())
     from pyspark.sql import functions as F
 

@@ -97,7 +97,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batching: generous record cap for narrow text rows, byte
         # cap for blob rows — one knob per row shape instead of a tiny
-        # record cap that fragments the text branch into ~ms batches
+        # record cap that fragments the text UDF's spans into ~ms batches
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_MAX_RECORDS_PER_BATCH),

@@ -1,4 +1,4 @@
-"""Differential test of the media branch's two blob sources: a corpus of
+"""Differential test of the media task's two blob sources: a corpus of
 deterministic malformed and edge-case SIMG/PNG blobs (the shapes
 test_media_fuzz.py draws) extracts to the same output and the same
 recognition records whether the blobs are read directly from the parquet
@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ocr_service_spark.config import ExtractConfig
 from ocr_service_spark.kernels.media import PNG_MAGIC, SIMG_MAGIC, encode_png_gray
+from ocr_service_spark.pipeline.checkpoint import bucket_expr
 from ocr_service_spark.pipeline.extract import (
     _direct_read_splits,
     load_inputs,
@@ -135,7 +136,9 @@ def _write_corpus(data_dir) -> int:
 
 
 def _run(spark, docs, media):
-    output, results = run_extract(spark, docs, media, ExtractConfig(run_id="diff"))
+    # one bucket: each referenced blob gets exactly one record
+    bucketed = docs.withColumn("bucket", bucket_expr(1))
+    output, results = run_extract(spark, bucketed, media, ExtractConfig(run_id="diff"))
     spans = {
         r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in r["spans"]]
         for r in output.collect()

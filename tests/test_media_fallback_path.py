@@ -1,7 +1,8 @@
-"""The media branch has two physical paths with identical semantics:
+"""The media task has two physical paths with identical semantics:
 python-direct parquet row-group reads (file-backed media) and the Arrow
-join path (any other DataFrame). This suite pins the fallback path and
-the dangling-media_ref contract on both."""
+fallback (any other DataFrame). This suite pins the fallback path, the
+dangling-media_ref contract, and the span join's rule that only a media
+span takes a record, on both."""
 
 from __future__ import annotations
 
@@ -10,7 +11,12 @@ import pytest
 
 from ocr_service_spark.config import ExtractConfig
 from ocr_service_spark.kernels.media import encode_simg
+from ocr_service_spark.pipeline.checkpoint import bucket_expr
 from ocr_service_spark.pipeline.extract import run_extract, split_media_results
+
+
+def _bucketed(docs):
+    return docs.withColumn("bucket", bucket_expr(8))
 
 
 def _mk_blob(lines, conf=0.9):
@@ -56,7 +62,7 @@ def _collect_spans(output):
 def test_fallback_path_used_for_inmemory_media(spark, frames):
     docs, media = frames
     assert media.inputFiles() == []  # precondition: not file-backed
-    output, results = run_extract(spark, docs, media, ExtractConfig())
+    output, results = run_extract(spark, _bucketed(docs), media, ExtractConfig())
     metrics, _ = split_media_results(results)
     got = _collect_spans(output)
     # d1: media span (order 0, offset 0) then text span (order 1)
@@ -76,7 +82,7 @@ def test_empty_spans_doc_survives(spark, frames):
     media = spark.createDataFrame(
         [], "media_ref string, content binary, file_size int"
     )
-    output, _ = run_extract(spark, docs, media, ExtractConfig())
+    output, _ = run_extract(spark, _bucketed(docs), media, ExtractConfig())
     got = _collect_spans(output)
     assert got["empty"] == []
     assert got["nullspans"] == []
@@ -85,7 +91,7 @@ def test_empty_spans_doc_survives(spark, frames):
 
 def test_dangling_media_ref_yields_failed_span(spark, frames):
     docs, media = frames
-    output, _ = run_extract(spark, docs, media, ExtractConfig())
+    output, _ = run_extract(spark, _bucketed(docs), media, ExtractConfig())
     got = _collect_spans(output)
     # no blob row for ref GONE → media_text span with null text, order kept
     assert got["d2"] == [("media_text", None, "GONE", 0)]
@@ -101,7 +107,7 @@ def test_filtered_media_frame_honors_plan(spark, dataset):
     media = spark.read.parquet(dataset["media"])
     some_ref = media.select("media_ref").first()["media_ref"]
     filtered = media.filter(F.col("media_ref") != some_ref)
-    output, _ = run_extract(spark, docs, filtered, ExtractConfig())
+    output, _ = run_extract(spark, _bucketed(docs), filtered, ExtractConfig())
     spans = _collect_spans(output)
     hits = [
         s
@@ -122,8 +128,74 @@ def test_direct_and_fallback_paths_agree(spark, dataset):
 
     docs = spark.read.parquet(dataset["documents"])
     media = spark.read.parquet(dataset["media"])
-    direct, _ = run_extract(spark, docs, media, ExtractConfig())
+    direct, _ = run_extract(spark, _bucketed(docs), media, ExtractConfig())
     fallback, _ = run_extract(
-        spark, docs, media.filter(F.col("media_ref").isNotNull()), ExtractConfig()
+        spark, _bucketed(docs), media.filter(F.col("media_ref").isNotNull()), ExtractConfig()
     )
     assert _collect_spans(direct) == _collect_spans(fallback)
+
+
+@pytest.mark.parametrize("source", ["direct", "arrow"])
+def test_text_span_naming_a_blob_stays_text(spark, tmp_path, source):
+    """A text or HTML span whose media_ref names a real blob is a text
+    span, as golden.extract_document gives it: kind 'text', its kernel's
+    text and a null media_ref, whether or not a media span references the
+    same blob. It decodes nothing: _metrics/ counts only the blob a media
+    span references."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from ocr_service_spark.golden import extract_document
+    from ocr_service_spark.pipeline.checkpoint import read_output, run_resumable
+
+    blobs = {"m1": _mk_blob(["alpha beta"]), "m2": _mk_blob(["gamma"])}
+    pq.write_table(
+        pa.table({"media_ref": list(blobs), "content": pa.array(list(blobs.values()), pa.binary())}),
+        f"{tmp_path}/media.parquet",
+    )
+    spans = [
+        {"kind": "media", "text": None, "media_ref": "m1", "offset": 0},
+        {"kind": "text", "text": "shared  ref", "media_ref": "m1", "offset": 1},
+        {"kind": "text", "text": "text  only", "media_ref": "m2", "offset": 2},
+        {"kind": "html", "text": "<p>html  only</p>", "media_ref": "m2", "offset": 3},
+    ]
+    docs = spark.createDataFrame(
+        [("d1", spans)],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    media = spark.read.parquet(f"{tmp_path}/media.parquet")
+    if source == "arrow":
+        media = media.filter(F.col("media_ref").isNotNull())
+
+    out_dir = str(tmp_path / "out")
+    run_resumable(spark, docs, media, out_dir, ExtractConfig(run_id="guard"), n_buckets=4)
+    got = _collect_spans(read_output(spark, out_dir))["d1"]
+    want = [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in extract_document(spans, blobs)]
+    assert got == want
+    assert [s[0] for s in got[1:]] == ["text", "text", "text"]
+    assert all(s[2] is None for s in got[1:])
+    n_blobs = spark.read.parquet(f"{out_dir}/_metrics").agg(F.sum("n_blobs")).collect()[0][0]
+    assert n_blobs == 1
+    refs = [r["media_ref"] for r in spark.read.parquet(f"{out_dir}/recognitions").collect()]
+    assert refs == ["m1"]
+
+
+def test_text_span_is_not_repeated_by_a_repeated_blob_row(spark):
+    """A media table that holds one ref in two rows gives that ref two
+    records. A text span naming the ref must still come out once: only a
+    media span meets the records."""
+    blob = bytearray(_mk_blob(["alpha beta"]))
+    media = spark.createDataFrame(
+        [("m1", blob), ("m1", blob)], "media_ref string, content binary"
+    )
+    docs = spark.createDataFrame(
+        [("d1", [
+            {"kind": "media", "text": None, "media_ref": "m1", "offset": 0},
+            {"kind": "text", "text": "shared  ref", "media_ref": "m1", "offset": 1},
+        ])],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    output, _ = run_extract(spark, _bucketed(docs), media, ExtractConfig())
+    got = _collect_spans(output)["d1"]
+    assert [s for s in got if s[0] == "text"] == [("text", "shared ref", None, 1)]

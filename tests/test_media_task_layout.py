@@ -5,8 +5,9 @@ and the bin count is a slot multiple unless the run references fewer
 rows than that: documents that reference only the table's last rows
 decode just those, over every slot. The Arrow fallback spreads a one-split frame over every slot
 (ops.widen), and keeps the layout of a frame the caller already
-repartitioned. The reassembly of bucketed documents shuffles once, by
-bucket."""
+repartitioned. The output plan reads the documents once, into one span
+table that takes the media records by broadcast, and its reassembly
+shuffles once, by bucket."""
 
 from __future__ import annotations
 
@@ -22,7 +23,7 @@ from ocr_service_spark.pipeline.checkpoint import bucket_expr, run_resumable
 from ocr_service_spark.pipeline.extract import (
     _bin_count,
     _direct_read_splits,
-    _media_branch,
+    _media_results,
     _split_cost_ms,
     load_inputs,
     run_extract,
@@ -82,7 +83,7 @@ def test_tail_subset_decodes_only_its_blobs_on_every_slot(spark, dataset, tmp_pa
 
 def test_direct_read_plan_is_range_into_map_in_pandas(spark, dataset):
     docs, media = load_inputs(spark, os.path.dirname(dataset["documents"]))
-    _, results = _media_branch(docs, media, ExtractConfig())
+    results = _media_results(docs.withColumn("bucket", bucket_expr(8)), media, ExtractConfig())
     plan = results._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     assert "Range (" in plan
     assert "MapInPandas" in plan
@@ -94,11 +95,19 @@ def test_bucketed_reassembly_has_one_exchange_repartition_by_num_on_bucket(spark
     bucketed = docs.withColumn("bucket", bucket_expr(8))
     output, _ = run_extract(spark, bucketed, media, ExtractConfig())
     plan = output._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    lines = plan.splitlines()
     # shuffle exchanges only: the media results join by broadcast
-    shuffles = [ln for ln in plan.splitlines() if re.search(r"(?<!Broadcast)Exchange ", ln)]
+    shuffles = [ln for ln in lines if re.search(r"(?<!Broadcast)Exchange ", ln)]
     assert len(shuffles) == 1, plan
     assert "hashpartitioning(bucket#" in shuffles[0]
     assert "REPARTITION_BY_NUM" in shuffles[0]
+    # one span table: the documents are scanned and exploded once, and
+    # the media records reach it by one broadcast
+    scans = [ln for ln in lines if "FileScan" in ln and "documents.parquet" in ln]
+    assert len(scans) == 1, plan
+    assert len([ln for ln in lines if re.search(r"\bGenerate ", ln)]) == 1, plan
+    assert "Union" not in plan
+    assert len([ln for ln in lines if "BroadcastExchange " in ln]) == 1, plan
 
 
 def test_fallback_spreads_one_file_over_every_slot(spark, dataset):
@@ -106,7 +115,7 @@ def test_fallback_spreads_one_file_over_every_slot(spark, dataset):
     # a filter makes the frame non-bare: the Arrow fallback over one file
     filtered = media.filter(F.col("media_ref").isNotNull())
     assert _direct_read_splits(filtered) is None
-    _, results = _media_branch(docs, filtered, ExtractConfig())
+    results = _media_results(docs.withColumn("bucket", bucket_expr(8)), filtered, ExtractConfig())
     rows = split_media_results(results)[0].collect()
     par = spark.sparkContext.defaultParallelism
     assert len(rows) == par

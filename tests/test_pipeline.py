@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from ocr_service_spark.pipeline.checkpoint import bucket_expr
 from ocr_service_spark.pipeline.extract import load_inputs, run_extract, split_media_results
 
 
@@ -18,10 +19,14 @@ def _seqs(rows):
     }
 
 
+def _bucketed(docs):
+    return docs.withColumn("bucket", bucket_expr(8))
+
+
 @pytest.fixture(scope="module")
 def result(spark, dataset):
     docs, media = load_inputs(spark, __import__("os").path.dirname(dataset["documents"]))
-    out, results = run_extract(spark, docs, media)
+    out, results = run_extract(spark, _bucketed(docs), media)
     metrics, _ = split_media_results(results)
     return _seqs(out.collect()), metrics.collect(), spark.read.parquet(dataset["golden"])
 
@@ -64,7 +69,7 @@ def test_real_png_media_end_to_end(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("png-ds"))
     paths = ensure_dataset(out_dir, 24, seed=7, png_media=4)
     docs, media = load_inputs(spark, out_dir)
-    out, _ = run_extract(spark, docs, media)
+    out, _ = run_extract(spark, _bucketed(docs), media)
     got = _seqs(out.collect())
     golden = _seqs(spark.read.parquet(paths["golden"]).collect())
     assert got == golden
@@ -95,7 +100,7 @@ def test_color_png_media_end_to_end(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("pngc-ds"))
     paths = ensure_dataset(out_dir, 24, seed=7, png_media=4, png_color=2)
     docs, media = load_inputs(spark, out_dir)
-    out, _ = run_extract(spark, docs, media)
+    out, _ = run_extract(spark, _bucketed(docs), media)
     got = _seqs(out.collect())
     golden = _seqs(spark.read.parquet(paths["golden"]).collect())
     assert got == golden

@@ -55,7 +55,7 @@ def test_poisoned_blob_fails_span_not_job(spark, poisoned_corpus, tmp_path, dire
     data_dir, ref = poisoned_corpus
     docs, media = load_inputs(spark, data_dir)
     if not direct:
-        # a non-bare frame: the media branch takes the Arrow fallback
+        # a non-bare frame: the media task takes the Arrow fallback
         media = media.filter(F.col("media_ref").isNotNull())
     out_dir = str(tmp_path / "run")
     cfg = ExtractConfig(run_id="poison")

@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 
 from ocr_service_spark.config import ExtractConfig
 from ocr_service_spark.datagen import generate
+from ocr_service_spark.pipeline.checkpoint import bucket_expr
 from ocr_service_spark.pipeline.extract import (
     SPLIT_MANIFEST_NAME,
     _direct_read_splits,
@@ -81,5 +82,5 @@ def test_media_file_rewritten_in_place_is_planned_from_its_footers(spark, tmp_pa
     splits = _direct_read_splits(media)
     assert splits is not None and len(splits) == n_groups
     assert sum(rows for *_, rows in splits) == media.count()
-    output, _ = run_extract(spark, docs, media, ExtractConfig())
+    output, _ = run_extract(spark, docs.withColumn("bucket", bucket_expr(8)), media, ExtractConfig())
     assert _seqs(output.collect()) == _seqs(spark.read.parquet(paths["golden"]).collect())

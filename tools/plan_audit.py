@@ -3,8 +3,9 @@
 For every (or a selected) `queries()` entry, prints a one-line summary
 of the executed plan: exchange count, join strategies, window passes,
 and pushed filters — the evidence PLANS.md summarizes. Streaming and
-extraction entries are skipped (their plans are audited in their own
-modules' docstrings).
+media-kernel entries are skipped (their plans are audited in their own
+modules' docstrings); the extraction pipeline is one plan, and building
+it runs only its media-reference collect.
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
@@ -28,7 +29,6 @@ SKIP = {
     "stream_stream_join",
     # iterative: runs per-step argmax collects, final frame is driver-local
     "bpe_merges",
-    "extract_pipeline",
     "media_metadata",
     "media_thumbnails",
     "video_frame_sample",
